@@ -1,7 +1,14 @@
+import os
+
 import pytest
 
 from deduplication_framework_spark.session import get_spark
 from deduplication_framework_spark.sources.pages import generate_pages
+
+# one Spark JVM serves the whole suite: under the engine's 48g default heap
+# it can outgrow a small host's RAM and be killed mid-run, failing every
+# later Spark test. The suite fits in 6g; an explicit SPARK_DRIVER_MEM wins.
+os.environ.setdefault("SPARK_DRIVER_MEM", "6g")
 
 N_DOCS = 600
 SEED = 42
