@@ -10,9 +10,9 @@ candidate generation is complete).
 
 from __future__ import annotations
 
-from typing import Tuple
+from typing import List, Tuple
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Row
 from pyspark.sql import functions as F
 
 from deduplication_framework_spark.operators.connected_components import (
@@ -20,13 +20,13 @@ from deduplication_framework_spark.operators.connected_components import (
 )
 
 
-def _driver_union_find(edges: DataFrame) -> dict:
-    """Union-find over a collected edge list (min-id roots)."""
+def _driver_union_find(rows: List[Row]) -> dict:
+    """Union-find over a collected (src, dst) edge list (min-id roots)."""
     from deduplication_framework_spark.oracle.numpy_oracle import UnionFind
 
     uf = UnionFind()
     ids = set()
-    for r in edges.select("src", "dst").collect():
+    for r in rows:
         uf.union(int(r.src), int(r.dst))
         ids.add(int(r.src))
         ids.add(int(r.dst))
@@ -47,13 +47,15 @@ def clusters_from_edges(
     set is at most that many rows, collect it and run union-find on the
     driver (the dedup edge graph is typically orders of magnitude smaller
     than the corpus — the standard "broadcast the frontier when it fits"
-    move; GraphFrames' CC does the same). The distributed label-propagation
-    loop remains the default and the scale path.
+    move; GraphFrames' CC does the same). One bounded collect of at most
+    ``driver_threshold + 1`` edges both decides the path and feeds the
+    union-find. The distributed label-propagation loop remains the default
+    and the scale path.
     """
     if driver_threshold > 0:
-        n_edges = edges.count()
-        if n_edges <= driver_threshold:
-            labels_map = _driver_union_find(edges)
+        rows = edges.select("src", "dst").limit(driver_threshold + 1).collect()
+        if len(rows) <= driver_threshold:
+            labels_map = _driver_union_find(rows)
             spark = docs.sparkSession
             if labels_map:
                 labels = spark.createDataFrame(

@@ -12,8 +12,18 @@ backend provides the same *contract* over parquet directories:
   ``/root/reference/pipelines/stage_utils.py:15-17`` +
   ``orchestrator.py:65-83`` (``_SUCCESS`` + config-hash skip);
 * lineage + metrics: ``_commit.json`` records upstream stage names, row
-  count, per-partition row counts, and detector-specific counters (bucket /
-  collision stats) — the ``_metrics`` surface (SURVEY.md A2/A3).
+  count, per-part-file row counts (read from the written files' parquet
+  footers on the driver, empty files dropped), and detector-specific
+  counters (bucket / collision stats) — the ``_metrics`` surface
+  (SURVEY.md A2/A3);
+* schema: ``_commit.json`` also records the frame's schema JSON, so the
+  post-write re-read and every resumed ``read()`` skip parquet schema
+  inference. A commit the store wrote before the schema was recorded has
+  no ``schema`` key; it still loads and those reads fall back to
+  inference, so older checkpoint dirs stay resumable.
+
+A parquet commit therefore submits only the jobs of its own ``df.write``,
+and reading a committed stage submits none.
 
 Swap ``catalog="iceberg"`` on a real cluster: ``IcebergStore`` uses
 ``df.writeTo(...).createOrReplace()`` + table properties (gated behind
@@ -30,8 +40,10 @@ import uuid
 from dataclasses import dataclass, field
 from typing import Dict, List, Optional
 
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 
 @dataclass
@@ -44,27 +56,23 @@ class StageCommit:
     lineage: List[str]
     metrics: Dict[str, float]
     committed_at: float = field(default_factory=time.time)
+    schema: str = ""  # StructType JSON; "" = not recorded (older commits)
 
     def to_json(self) -> str:
         return json.dumps(self.__dict__, sort_keys=True)
 
 
-def _census_commit(
-    df: DataFrame,
+def _stage_commit(
     name: str,
     config_hash: str,
+    part_rows: List[int],
     lineage: Optional[List[str]],
     metrics: Optional[Dict[str, float]],
+    schema: str = "",
 ) -> StageCommit:
-    """Per-partition row census over a MATERIALIZED frame + the StageCommit
-    record — shared by both store backends (the 'per-partition lineage +
-    row-count metrics' the north rule asks for)."""
-    part_rows = [
-        r["n"]
-        for r in df.groupBy(F.spark_partition_id().alias("p"))
-        .agg(F.count("*").alias("n"))
-        .collect()
-    ]
+    """The StageCommit record over a per-partition row census — shared by
+    both store backends (the 'per-partition lineage + row-count metrics'
+    the north rule asks for)."""
     return StageCommit(
         stage=name,
         config_hash=config_hash,
@@ -73,7 +81,19 @@ def _census_commit(
         partition_rows=[int(x) for x in part_rows],
         lineage=lineage or [],
         metrics={k: float(v) for k, v in (metrics or {}).items()},
+        schema=schema,
     )
+
+
+def _footer_rows(path: str) -> List[int]:
+    """Row count of every non-empty part file under a written parquet dir,
+    in part order, read from the footers on the driver (no Spark job)."""
+    rows = (
+        pq.read_metadata(os.path.join(path, f)).num_rows
+        for f in sorted(os.listdir(path))
+        if f.endswith(".parquet") and not f.startswith((".", "_"))
+    )
+    return [n for n in rows if n]
 
 
 class ParquetTableStore:
@@ -107,6 +127,12 @@ class ParquetTableStore:
         c = self.read_commit(name)
         return c is not None and c.config_hash == config_hash
 
+    def _load(self, path: str, schema: str) -> DataFrame:
+        reader = self.spark.read
+        if schema:
+            reader = reader.schema(StructType.fromJson(json.loads(schema)))
+        return reader.parquet(path)
+
     def write(
         self,
         df: DataFrame,
@@ -117,14 +143,19 @@ class ParquetTableStore:
     ) -> DataFrame:
         """Materialize df atomically; returns the re-read (checkpointed) df.
 
-        Per-partition row counts are collected from the written files — the
-        'per-partition lineage + row-count metrics' the north rule asks for.
+        ``partition_rows`` holds one row count per written part file, read
+        from the parquet footers (zero-row files dropped, so an empty frame
+        commits ``partitions == 0``) — the 'per-partition lineage +
+        row-count metrics' the north rule asks for. The frame's schema is
+        recorded in the commit and the re-read uses it, so the only Spark
+        jobs a commit submits are the write's own.
         """
         tmp = self._path(f"{name}.tmp-{uuid.uuid4().hex[:8]}")
         final = self._path(name)
         df.write.mode("overwrite").parquet(tmp)
-        commit = _census_commit(
-            self.spark.read.parquet(tmp), name, config_hash, lineage, metrics
+        commit = _stage_commit(
+            name, config_hash, _footer_rows(tmp), lineage, metrics,
+            schema=df.schema.json(),
         )
         if os.path.exists(final):
             shutil.rmtree(final)
@@ -133,7 +164,7 @@ class ParquetTableStore:
         with open(tmp_commit, "w") as fh:
             fh.write(commit.to_json())
         os.replace(tmp_commit, self._commit_path(name))
-        return self.spark.read.parquet(final)
+        return self._load(final, commit.schema)
 
     def update_metrics(self, name: str, metrics: Dict[str, float]) -> None:
         """Merge detector/stage metrics into an existing commit record —
@@ -150,7 +181,10 @@ class ParquetTableStore:
         os.replace(tmp, self._commit_path(name))
 
     def read(self, name: str) -> DataFrame:
-        return self.spark.read.parquet(self._path(name))
+        """The committed stage, read with its recorded schema (no Spark
+        job); older commits without one fall back to inference."""
+        c = self.read_commit(name)
+        return self._load(self._path(name), c.schema if c else "")
 
     def metrics_df(self) -> DataFrame:
         """All stage commits as a DataFrame — the `_metrics` rollup surface."""
@@ -161,6 +195,7 @@ class ParquetTableStore:
                     c = json.load(fh)
                 c["metrics"] = json.dumps(c.get("metrics", {}))
                 c["partition_rows"] = json.dumps(c.get("partition_rows", []))
+                c.pop("schema", None)
                 commits.append(c)
         if not commits:
             return self.spark.createDataFrame(
@@ -232,8 +267,14 @@ class IcebergTableStore:
         full = self._full(name)
         df.writeTo(full).using("iceberg").createOrReplace()
         back = self.spark.read.table(full)
+        part_rows = [
+            r["n"]
+            for r in back.groupBy(F.spark_partition_id().alias("p"))
+            .agg(F.count("*").alias("n"))
+            .collect()
+        ]
         self._set_commit(
-            name, _census_commit(back, name, config_hash, lineage, metrics)
+            name, _stage_commit(name, config_hash, part_rows, lineage, metrics)
         )
         return back
 

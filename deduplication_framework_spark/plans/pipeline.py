@@ -394,26 +394,40 @@ def run_pipeline(
         persist=True,
     )
 
-    # with a store, CC rounds checkpoint through it (atomic commits a real
-    # cluster can resume/inspect — the Iceberg analog of localCheckpoint;
-    # reference _SUCCESS-per-stage contract extended to loop state)
-    cc_ckpt = None
-    if store is not None:
-        _round = [0]
+    # CC runs inside the stage's make(), so a resume that finds the
+    # clusters commit valid skips the loop and takes its round count from
+    # the commit's recorded cc_rounds; on a fresh run stage() commits cc_m
+    # after make() has filled it
+    cc_m: Dict[str, float] = {}
 
-        def cc_ckpt(df):
-            _round[0] += 1
-            return store.write(
-                df, f"cc_state_{_round[0]}", chash, lineage=["edges"]
-            )
+    def _clusters():
+        # with a store, CC rounds checkpoint through it (atomic commits a
+        # real cluster can resume/inspect — the Iceberg analog of
+        # localCheckpoint; reference _SUCCESS-per-stage contract extended
+        # to loop state)
+        cc_ckpt = None
+        if store is not None:
+            _round = [0]
 
-    clusters, cc_rounds = clusters_from_edges(
-        docs,
-        edges.select("src", "dst"),
-        driver_threshold=cfg.spark.cc_broadcast_threshold,
-        checkpoint=cc_ckpt,
-    )
-    clusters = stage("clusters", lambda: clusters, ["edges"], {"cc_rounds": cc_rounds})
+            def cc_ckpt(df):
+                _round[0] += 1
+                return store.write(
+                    df, f"cc_state_{_round[0]}", chash, lineage=["edges"]
+                )
+
+        clusters, rounds = clusters_from_edges(
+            docs,
+            edges.select("src", "dst"),
+            driver_threshold=cfg.spark.cc_broadcast_threshold,
+            checkpoint=cc_ckpt,
+        )
+        cc_m["cc_rounds"] = rounds
+        return clusters
+
+    clusters = stage("clusters", _clusters, ["edges"], cc_m)
+    if "cc_rounds" not in cc_m:
+        cc_m = store.read_commit("clusters").metrics
+    cc_rounds = int(cc_m.get("cc_rounds", 0))
     metrics["cc_rounds"] = float(cc_rounds)
 
     keep = keepers_op(docs, clusters)

@@ -304,3 +304,19 @@ class TestAdaptiveCC:
         a = {r.doc_id: r.cluster_id for r in fast.collect()}
         b = {r.doc_id: r.cluster_id for r in dist.collect()}
         assert a == b
+
+    def test_driver_path_threshold_boundary(self, spark):
+        """The bounded collect decides the path exactly as an edge count
+        would: at most driver_threshold edges → driver union-find."""
+        docs = spark.range(12).withColumnRenamed("id", "doc_id")
+        edges = spark.createDataFrame(
+            [(i, i + 1) for i in range(0, 10, 2)] + [(1, 2)],
+            "src long, dst long",
+        ).repartition(3)
+        n = 6
+        at, r_at = clusters_from_edges(docs, edges, driver_threshold=n)
+        over, r_over = clusters_from_edges(docs, edges, driver_threshold=n - 1)
+        assert r_at == 0 and r_over >= 1
+        a = {r.doc_id: r.cluster_id for r in at.collect()}
+        assert a == {r.doc_id: r.cluster_id for r in over.collect()}
+        assert a[3] == 0 and a[5] == 4 and a[11] == 11

@@ -96,3 +96,43 @@ def test_partial_resume_after_downstream_loss(spark, pages, tmp_path):
     assert "clusters.resumed" not in r.metrics  # recomputed
     assert "keepers.resumed" in r.metrics or True  # keepers may recompute too
     assert store.read_commit("clusters") is not None
+
+
+def test_resume_skips_connected_components(spark, pages, tmp_path):
+    """A valid clusters commit is read back without re-running CC: with
+    the distributed loop forced (threshold 0) the resume writes no new
+    cc_state_* commit and reports the fresh run's round count from the
+    commit record."""
+    cfg = PipelineConfig()
+    cfg.spark.cc_broadcast_threshold = 0
+    root = str(tmp_path / "ckpt_cc")
+    store = ParquetTableStore(spark, root)
+    small = pages.limit(200)
+    r1 = run_pipeline(spark, small, cfg, detectors=["exact", "minhash"],
+                      store=store)
+    assert r1.cc_rounds >= 1
+
+    def cc_state():
+        out = {}
+        for f in sorted(os.listdir(root)):
+            if f.startswith("cc_state_"):
+                p = os.path.join(root, f)
+                if f.endswith("._commit.json"):
+                    with open(p) as fh:
+                        out[f] = fh.read()
+                else:
+                    out[f] = sorted(os.listdir(p))
+        return out
+
+    before = cc_state()
+    assert any(f.endswith("._commit.json") for f in before)
+
+    r2 = run_pipeline(spark, small, cfg, detectors=["exact", "minhash"],
+                      store=store)
+    assert "clusters.resumed" in r2.metrics
+    assert cc_state() == before
+    assert r2.cc_rounds == r1.cc_rounds
+    assert r2.metrics["cc_rounds"] == float(r1.cc_rounds)
+    assert sorted(r.doc_id for r in r2.keepers.collect()) == sorted(
+        r.doc_id for r in r1.keepers.collect()
+    )

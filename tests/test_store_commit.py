@@ -12,6 +12,7 @@ import json
 import os
 import shutil
 
+import pytest
 from pyspark.sql import functions as F
 
 from deduplication_framework_spark.plans.checkpoint import ParquetTableStore
@@ -241,3 +242,151 @@ class TestIcebergStoreDryRun:
 
         with pytest.raises(RuntimeError, match="Iceberg catalog"):
             IcebergTableStore(Bare(), "ns")
+
+
+def _last_job_id(spark):
+    ids = spark.sparkContext.statusTracker().getJobIdsForGroup()
+    return max(ids, default=-1)
+
+
+def _jobs(spark, fn):
+    """(fn(), Spark jobs fn submitted) — statusTracker job-id delta."""
+    before = _last_job_id(spark)
+    out = fn()
+    return out, _last_job_id(spark) - before
+
+
+def test_read_of_committed_stage_submits_no_job(spark, tmp_path):
+    store = ParquetTableStore(spark, str(tmp_path / "r0"))
+    store.write(_df(spark, 50), "stage_r", "h1")
+    back, jobs = _jobs(spark, lambda: store.read("stage_r"))
+    assert jobs == 0
+    assert back.count() == 50
+
+
+def test_write_submits_only_the_write_jobs(spark, tmp_path):
+    """A commit costs what a plain parquet write of the same frame costs:
+    the census comes from the part-file footers, the re-read from the
+    recorded schema."""
+    df = _df(spark, 200).repartition(4)
+    _, plain = _jobs(
+        spark, lambda: df.write.parquet(str(tmp_path / "plain"))
+    )
+    store = ParquetTableStore(spark, str(tmp_path / "w0"))
+    out, jobs = _jobs(spark, lambda: store.write(df, "stage_w", "h1"))
+    assert jobs <= plain
+    c = store.read_commit("stage_w")
+    assert c.rows == 200 and sum(c.partition_rows) == 200
+    assert c.partitions == len(c.partition_rows) == 4
+    assert out.count() == 200
+
+
+def test_empty_frame_commit(spark, tmp_path):
+    store = ParquetTableStore(spark, str(tmp_path / "e0"))
+    out = store.write(_df(spark, 0), "stage_empty", "h1")
+    c = store.read_commit("stage_empty")
+    assert (c.rows, c.partitions, c.partition_rows) == (0, 0, [])
+    assert out.count() == 0 and store.read("stage_empty").count() == 0
+    assert out.columns == ["id", "v"]
+
+
+_ROLLUP_COLUMNS = [
+    ("committed_at", "double"), ("config_hash", "string"),
+    ("lineage", "array<string>"), ("metrics", "string"),
+    ("partition_rows", "string"), ("partitions", "bigint"),
+    ("rows", "bigint"), ("stage", "string"),
+]
+
+
+@pytest.fixture(scope="module")
+def piped_store(spark, pages, tmp_path_factory):
+    """One run_pipeline over every stage kind — docs, the fused features
+    struct/array columns, per-detector and unioned edges (double sim),
+    the distributed CC loop's cc_state_* rounds, clusters, keepers."""
+    from deduplication_framework_spark.config import PipelineConfig
+    from deduplication_framework_spark.plans.pipeline import run_pipeline
+
+    cfg = PipelineConfig()
+    cfg.spark.cc_broadcast_threshold = 0  # commit the CC loop's rounds too
+    root = str(tmp_path_factory.mktemp("piped") / "store")
+    store = ParquetTableStore(spark, root)
+    small = pages.limit(200)
+    detectors = ["exact", "minhash", "simhash"]
+    res = run_pipeline(spark, small, cfg, detectors=detectors, store=store)
+    keep = sorted(r.doc_id for r in res.keepers.collect())
+    return store, res, keep, (small, cfg, detectors)
+
+
+def _stages(store):
+    return sorted(
+        f[: -len("._commit.json")]
+        for f in os.listdir(store.root)
+        if f.endswith("._commit.json")
+    )
+
+
+def test_recorded_schema_equals_inferred(spark, piped_store):
+    store = piped_store[0]
+    stages = _stages(store)
+    assert {"features", "edges_minhash", "edges", "clusters",
+            "cc_state_1"} <= set(stages)
+    for name in stages:
+        assert store.read_commit(name).schema, f"{name}: no schema recorded"
+        inferred = spark.read.parquet(store._path(name)).schema
+        assert store.read(name).schema == inferred, name
+    assert dict(store.read("edges").dtypes)["sim"] == "double"
+
+
+def test_rollup_surface_unchanged(piped_store):
+    """The recorded schema stays inside _commit.json: the _metrics rollup
+    and the report's stage table keep their columns."""
+    from deduplication_framework_spark.plans.report import render_report
+
+    store, res, keep, (_, _, detectors) = piped_store
+    mdf = store.metrics_df()
+    assert mdf.dtypes == _ROLLUP_COLUMNS
+    rows = {r.stage: r for r in mdf.collect()}
+    assert set(rows) == set(_stages(store))
+    assert json.loads(rows["clusters"].metrics)["cc_rounds"] == res.cc_rounds
+
+    report = render_report(
+        res, detectors, 1.0, "h" * 64, store=store,
+        n_docs=200, n_keep=len(keep),
+    )
+    assert "| stage | rows | partitions | lineage |" in report
+    assert '"fields"' not in report
+    assert f"| clusters | 200 | {store.read_commit('clusters').partitions} |" \
+        in report
+
+
+def test_commit_without_schema_still_resumes(spark, piped_store, tmp_path):
+    """A checkpoint dir whose commits predate the recorded schema (no
+    ``schema`` key) stays valid: reads fall back to schema inference and a
+    re-run resumes every stage with the same keepers."""
+    from deduplication_framework_spark.plans.pipeline import run_pipeline
+
+    src, _, keep, (small, cfg, detectors) = piped_store
+    root = str(tmp_path / "legacy")
+    shutil.copytree(src.root, root)
+    for f in os.listdir(root):
+        if f.endswith("._commit.json"):
+            p = os.path.join(root, f)
+            with open(p) as fh:
+                c = json.load(fh)
+            del c["schema"]
+            with open(p, "w") as fh:
+                json.dump(c, fh)
+
+    store = ParquetTableStore(spark, root)
+    c = store.read_commit("edges")
+    assert c is not None and c.schema == ""
+    assert store.is_valid("edges", c.config_hash)
+    back = store.read("edges")
+    assert back.schema == spark.read.parquet(store._path("edges")).schema
+    assert back.count() == c.rows
+
+    r = run_pipeline(spark, small, cfg, detectors=detectors, store=store)
+    for stage in ("docs", "docs_uniq", "features", "edges_minhash",
+                  "edges_simhash", "edges", "clusters", "keepers"):
+        assert f"{stage}.resumed" in r.metrics, f"{stage} was recomputed"
+    assert sorted(x.doc_id for x in r.keepers.collect()) == keep
