@@ -105,7 +105,7 @@ def _sql_splitmix64(x: str) -> str:
 def _winnow_fingerprint_ctes() -> str:
     """CTE chain documents → fp(doc_id, fph): the winnowing detector's
     deduplicated fingerprint set per doc, bit-identical to
-    make_winnow_udf / kernels.winnow_fingerprints:
+    kernels.winnow_fingerprints (the fused UDF's winnow field):
 
     * pows: B^u and B^-u mod 2^64 by recursion (B = the detector's odd
       Karp-Rabin base; B^-1 its modular inverse);
@@ -1399,17 +1399,23 @@ def q_winnow_fingerprints(spark, sf_dir):
     """Document fingerprinting as a first-class text-analysis op: each
     doc's winnowing fingerprint SET (Schleimer et al. 2003 rolling-hash
     selection), not just the clusters built from it. One Arrow pass
-    (make_winnow_udf) + explode; the oracle reuses the bit-for-bit
-    Karp-Rabin/splitmix64/window-min SQL rebuild from the
+    (make_fused_features_udf's winnow field) + explode; the oracle reuses
+    the bit-for-bit Karp-Rabin/splitmix64/window-min SQL rebuild from the
     substring_clusters oracle, signed-wrapped to the UDF's int64 domain."""
-    from deduplication_framework_spark.functions.text import make_winnow_udf
+    from deduplication_framework_spark.functions.text import (
+        make_fused_features_udf,
+    )
 
     cfg = PipelineConfig()
-    kg = cfg.suffix.kgram_size
-    win = cfg.suffix.winnow_window
-    wf = make_winnow_udf(kg, win)
+    wf = make_fused_features_udf(
+        cfg.embedding,
+        cfg.dedup,
+        with_winnow=True,
+        kgram=cfg.suffix.kgram_size,
+        window=cfg.suffix.winnow_window,
+    )
     return _docs(spark, sf_dir).select(
-        "doc_id", F.explode(wf(F.col("text"))).alias("fph")
+        "doc_id", F.explode(wf(F.col("text"))["winnow"]).alias("fph")
     )
 
 

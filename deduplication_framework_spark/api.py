@@ -20,6 +20,7 @@ order-free equivalent of first-seen-wins (SURVEY.md W5).
 
 from __future__ import annotations
 
+from dataclasses import replace
 from typing import Optional
 
 from pyspark.sql import DataFrame, SparkSession
@@ -28,7 +29,7 @@ from pyspark.sql import functions as F
 from deduplication_framework_spark.config import PipelineConfig
 from deduplication_framework_spark.functions import kernels as K
 from deduplication_framework_spark.functions.text import (
-    make_minhash_udf,
+    make_fused_features_udf,
     make_shingles_udf,
 )
 from deduplication_framework_spark.operators.cluster import (
@@ -48,6 +49,18 @@ from deduplication_framework_spark.plans.pipeline import (
 )
 
 METHODS = ("jaccard", "md5", "simhash", "minhash_lsh", "ours_lsh")
+
+
+def _sha1_sig(cfg: PipelineConfig, text_col: str, include_words: bool = True):
+    """MinHash signature column of the facade-assembled paths: sha1
+    whatever ``cfg.dedup.hash_family`` says."""
+    fused = make_fused_features_udf(
+        cfg.embedding,
+        replace(cfg.dedup, hash_family="sha1"),
+        with_minhash=True,
+        include_words=include_words,
+    )
+    return fused(text_col)["sig"]
 
 
 def _finalize(
@@ -108,8 +121,9 @@ def dedup_texts(
         # ours_lsh); shares every operator
         docs = prepare_docs(pages).persist()
         b, r = K.optimal_band_param(cfg.dedup.threshold, cfg.dedup.num_perm)
-        mh = make_minhash_udf(cfg.embedding, cfg.dedup, include_words=False)
-        sigs = docs.select("doc_id", mh("text").alias("sig"))
+        sigs = docs.select(
+            "doc_id", _sha1_sig(cfg, "text", include_words=False).alias("sig")
+        )
         bands = minhash_bands(sigs, b, r)
         pairs, _ = candidate_pairs(bands, bucket_cap=cfg.spark.bucket_cap)
         edges = pairs.withColumn("sim", F.lit(None).cast("double"))
@@ -152,8 +166,7 @@ def dedup_texts(
         # the J2 greedy decomposed (SURVEY.md §2.3)
         sh = make_shingles_udf(cfg.embedding)
         shingles = docs.select("doc_id", sh("text").alias("shingles")).persist()
-        mh = make_minhash_udf(cfg.embedding, cfg.dedup, include_words=True)
-        sigs = docs.select("doc_id", mh("text").alias("sig"))
+        sigs = docs.select("doc_id", _sha1_sig(cfg, "text").alias("sig"))
         b, r = K.optimal_band_param(cfg.dedup.threshold, cfg.dedup.num_perm)
         bands = minhash_bands(sigs, b, r)
         pairs, _ = candidate_pairs(bands, bucket_cap=cfg.spark.bucket_cap)

@@ -1,18 +1,23 @@
-"""Text feature columns: pure-SQL normalization + the Arrow UDF families.
+"""Text feature columns: pure-SQL normalization + the two Arrow UDFs.
 
 Design rule (SURVEY.md §2.9 / BASELINE.json input_hint): no per-row Python
 UDFs — everything Python is a pandas (Arrow-batched) UDF, and anything
 expressible as builtin column functions stays JVM-side.
 
-The pandas UDFs delegate per-document math to
-:mod:`deduplication_framework_spark.functions.kernels`, the same kernels the
-NumPy oracle uses, so Spark-vs-oracle tests isolate the *distributed*
+Two Arrow UDFs exist: ``make_shingles_udf`` (the multi-granularity 64-bit
+shingle set that exact-Jaccard verification uses) and
+``make_fused_features_udf``, the only featurization path for MinHash
+signatures, LSH verification features, SimHash fingerprints and winnowing
+fingerprints. Both delegate per-document math to
+:mod:`deduplication_framework_spark.functions.kernels` — the spec, pinned
+to datasketch / simhash-lib by tests/test_kernels.py and shared with the
+NumPy oracle — so Spark-vs-oracle tests isolate the *distributed*
 machinery (banding, pair-gen, CC) rather than re-testing hashing.
 """
 
 from __future__ import annotations
 
-from typing import Iterator, Optional
+from typing import Optional
 
 import numpy as np
 import pandas as pd
@@ -60,7 +65,7 @@ def _u64_to_i64(arr: np.ndarray) -> np.ndarray:
 
 
 # ---------------------------------------------------------------------------
-# UDF family 2: normalize + multi-granularity shingles → array<long>
+# normalize + multi-granularity shingles → array<long>
 # ---------------------------------------------------------------------------
 
 
@@ -99,150 +104,8 @@ def make_shingles_udf(cfg: TextEmbeddingConfig):
     return shingles
 
 
-def make_lsh_features_udf(
-    emb: TextEmbeddingConfig, ded: TextDedupConfig, include_words: bool = True
-):
-    """text → hashed distinct LSH feature set (first max_words word tokens +
-    first max_char_grams space-stripped char n-grams) — the exact feature
-    universe the reference's ours_lsh MinHash consumes
-    (pipeline_api.py:426-430). Used to verify candidate pairs with the true
-    Jaccard *of the LSH features*: ~4.5x smaller arrays than the full
-    multi-granularity shingle set, and the faithful ours_lsh semantics."""
-    n = max(1, emb.ngram_size)
-    lc, strip, collapse, mode = (
-        emb.lowercase,
-        emb.strip_non_alnum,
-        emb.collapse_whitespace,
-        emb.strip_mode,
-    )
-    max_words, max_grams = ded.max_words, ded.max_char_grams
-
-    # 32-bit hashed features: with <=400 features/doc the within- and
-    # cross-doc collision probability (~400^2/2^32 ≈ 4e-5) is far below the
-    # 1/400 Jaccard granularity, and the arrays cost half the shuffle bytes
-    # of 64-bit — verification is join-bound, not compute-bound.
-    @pandas_udf(T.ArrayType(T.IntegerType()))
-    def lsh_features(texts: pd.Series) -> pd.Series:
-        out = []
-        for t in texts:
-            norm = K.normalize_text(t or "", lc, strip, collapse, mode)
-            feats = []
-            if include_words:
-                feats.extend(K.lsh_word_tokens(norm, max_words))
-            feats.extend(K.lsh_char_grams(norm, n, max_grams))
-            if feats:
-                hashed = np.unique(
-                    K.hash_features_u64(feats).astype(np.uint32)
-                )
-                out.append(hashed.view(np.int32).tolist())
-            else:
-                out.append([])
-        return pd.Series(out)
-
-    return lsh_features
-
-
 # ---------------------------------------------------------------------------
-# UDF family 3: MinHash signature → array<long>[num_perm]
-# ---------------------------------------------------------------------------
-
-
-def make_minhash_udf(
-    emb: TextEmbeddingConfig, ded: TextDedupConfig, include_words: bool = True
-):
-    """text → datasketch-spec MinHash signature over (first max_words word
-    tokens if include_words) + (first max_char_grams space-stripped char
-    n-grams) of the normalized text — reference pipeline_api.py:417-431
-    ('ours_lsh' when include_words=True, 'minhash_lsh' when False).
-
-    Signature values are < 2^32 so they fit LongType exactly.
-    """
-    n = max(1, emb.ngram_size)
-    lc, strip, collapse, mode = (
-        emb.lowercase,
-        emb.strip_non_alnum,
-        emb.collapse_whitespace,
-        emb.strip_mode,
-    )
-    num_perm, max_words, max_grams = ded.num_perm, ded.max_words, ded.max_char_grams
-    # permutations are deterministic (seed=1): regenerate per executor rather
-    # than pickling 2KB into every task closure repeatedly — cheap either way.
-    perms = K.minhash_permutations(num_perm)
-
-    @pandas_udf(T.ArrayType(T.LongType()))
-    def minhash_sig(texts: pd.Series) -> pd.Series:
-        out = []
-        for t in texts:
-            if t is None:
-                t = ""
-            norm = K.normalize_text(t, lc, strip, collapse, mode)
-            feats = []
-            if include_words:
-                feats.extend(K.lsh_word_tokens(norm, max_words))
-            feats.extend(K.lsh_char_grams(norm, n, max_grams))
-            sig = K.minhash_signature([f.encode("utf-8") for f in feats], perms)
-            out.append(sig.astype(np.int64).tolist())
-        return pd.Series(out)
-
-    return minhash_sig
-
-
-# ---------------------------------------------------------------------------
-# UDF family 4: SimHash fingerprint → long
-# ---------------------------------------------------------------------------
-
-
-def make_simhash_udf(emb: TextEmbeddingConfig):
-    """text → 64-bit SimHash of the *normalized* text (the reference feeds
-    normalized texts to Simhash — pipeline_api.py:271,317,387). Stored as a
-    signed long bit-pattern; XOR/bit_count work on the raw bits."""
-    lc, strip, collapse, mode = (
-        emb.lowercase,
-        emb.strip_non_alnum,
-        emb.collapse_whitespace,
-        emb.strip_mode,
-    )
-
-    @pandas_udf(T.LongType())
-    def simhash_fp(texts: pd.Series) -> pd.Series:
-        vals = np.empty(len(texts), dtype=np.uint64)
-        for i, t in enumerate(texts):
-            norm = K.normalize_text(t or "", lc, strip, collapse, mode)
-            vals[i] = K.simhash64(norm)
-        return pd.Series(vals.view(np.int64))
-
-    return simhash_fp
-
-
-# ---------------------------------------------------------------------------
-# UDF family 5 (part): winnowing fingerprints for exact-substring candidates
-# ---------------------------------------------------------------------------
-
-
-def make_winnow_udf(kgram: int, window: int):
-    """text → array of 64-bit winnowing fingerprints (Schleimer et al. 2003).
-    Any two docs sharing a substring of length >= kgram+window-1 share at
-    least one fingerprint. Operates on RAW text (exact substring semantics —
-    Lee et al. 2022 style, no normalization)."""
-
-    @pandas_udf(T.ArrayType(T.LongType()))
-    def winnow(texts: pd.Series) -> pd.Series:
-        out = []
-        for t in texts:
-            if not t:
-                out.append([])
-                continue
-            fps = K.winnow_fingerprints(t, kgram, window)
-            hashed = np.unique(np.array([h for h, _ in fps], dtype=np.uint64))
-            out.append(_u64_to_i64(hashed).tolist())
-        return pd.Series(out)
-
-    return winnow
-
-
-# ---------------------------------------------------------------------------
-# UDF family 6: fused per-doc featurization — ONE Arrow pass for every
-# detector (round-2 perf headline; VERDICT.md round 1 "Next round" #2)
+# fused per-doc featurization — ONE Arrow pass for every detector
 # ---------------------------------------------------------------------------
 
 
@@ -261,13 +124,29 @@ def make_fused_features_udf(
     """text → struct of every enabled detector's per-doc features in ONE
     Arrow pass over the corpus.
 
-    Replaces the separate minhash / lsh-features / simhash / winnow UDF
-    stages: normalization runs once per doc (it was repeated per detector),
-    and the MinHash 32-bit feature hash and the 64-bit shingle id are sliced
+    Normalization runs once per doc whatever the enabled families, and
+    the MinHash 32-bit feature hash and the 64-bit shingle id are sliced
     from the SAME sha1 digest (datasketch's low-4-bytes vs our low-8-bytes —
     one digest per distinct feature instead of two). A per-batch digest cache
-    dedups repeated features across docs. Output values are bit-identical to
-    the single-purpose UDFs (pinned by tests/test_kernels.py).
+    dedups repeated features across docs. Fields (sha1 family):
+
+    * ``sig`` — ``kernels.minhash_signature`` over (first max_words word
+      tokens if ``include_words``) + (first max_char_grams space-stripped
+      char n-grams) of the normalized text: reference 'ours_lsh' with
+      words, 'minhash_lsh' without; values < 2^32 fit LongType exactly;
+    * ``shingles`` — the same features as a uint32-unique
+      ``kernels.hash_features_u64`` set (signed int32 bit patterns): the
+      true Jaccard *of the LSH features*, at half the shuffle bytes of
+      64-bit ids (<=400 features/doc → ~4e-5 collision odds, far below
+      the 1/400 Jaccard granularity);
+    * ``simhash`` — ``kernels.simhash64`` of the normalized text, stored
+      as a signed long bit pattern;
+    * ``winnow`` — distinct ``kernels.winnow_fingerprints`` of the RAW
+      text (exact-substring semantics, no normalization).
+
+    Values are bit-identical to those kernels (pinned by
+    tests/test_fused_features.py). Callers that must stay on sha1 whatever
+    ``ded.hash_family`` says pass a ``hash_family="sha1"`` copy of ``ded``.
     """
     n = max(1, emb.ngram_size)
     lc, strip, collapse, mode = (

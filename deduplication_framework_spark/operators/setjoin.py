@@ -109,9 +109,10 @@ def _dense_allpairs_edges(
     Detection cost on the sparse path is one _DENSE_SAMPLE_DOCS-doc
     sample census (~tens of ms): any 256 docs of a sparse corpus exceed
     DENSE_MAX_ELS distinct elements, so real featurizations never reach
-    the full-universe check. Driver memory is bounded by the budgets:
-    <= DENSE_MAX_DOCS rows of <= DENSE_MAX_ELS-element sets collected,
-    and the broadcast matrix is <= 20k * 256B = 5MB.
+    the full-universe check. Driver memory is bounded by the budgets,
+    both checked in the doc-count job before any collect: <=
+    DENSE_MAX_DOCS rows of <= DENSE_MAX_ELS-element sets collected, and
+    the broadcast matrix is <= 20k * 256B = 5MB.
 
     Exactness: the bitmap code is a DENSE rank over the exact distinct
     elements (no hashing — no collision caveat); intersection sizes are
@@ -125,8 +126,12 @@ def _dense_allpairs_edges(
         base.schema["_id"].dataType, (T.LongType, T.IntegerType, T.ShortType)
     ):
         return None
-    n_docs = base.count()  # cached — base is persisted+counted by callers
-    if n_docs == 0 or n_docs > DENSE_MAX_DOCS:
+    # cached — base is persisted+counted by callers; the largest set rides
+    # the same job so an over-wide doc bails before anything is collected
+    n_docs, max_els = base.agg(
+        F.count("*"), F.max(F.size("_set"))
+    ).first()
+    if n_docs == 0 or n_docs > DENSE_MAX_DOCS or max_els > DENSE_MAX_ELS:
         return None
     sample_distinct = (
         base.limit(_DENSE_SAMPLE_DOCS)

@@ -192,9 +192,11 @@ def near_dedup_spans(
     frame via the shared tracked-cache registry — call
     ``lsh.release_census_caches()`` (or run inside the pipeline) to free.
     """
+    from dataclasses import replace
+
     from ..config import PipelineConfig
     from ..functions import kernels as K
-    from ..functions.text import make_minhash_udf, make_shingles_udf
+    from ..functions.text import make_fused_features_udf, make_shingles_udf
     from .connected_components import connected_components
     from .lsh import _persist_tracked, candidate_pairs, minhash_bands
     from .verify import verify_jaccard
@@ -213,10 +215,15 @@ def near_dedup_spans(
     )
     n_reps = reps.count()  # eager: one materialization before the fan-out
 
-    sig_udf = make_minhash_udf(cfg.embedding, cfg.dedup)
+    # sha1 signatures whatever cfg.dedup.hash_family says
+    sig_udf = make_fused_features_udf(
+        cfg.embedding,
+        replace(cfg.dedup, hash_family="sha1"),
+        with_minhash=True,
+    )
     b, r = K.optimal_band_param(cfg.dedup.threshold, cfg.dedup.num_perm)
     bands = minhash_bands(
-        reps.select("_rid", sig_udf(F.col("span")).alias("sig")),
+        reps.select("_rid", sig_udf(F.col("span"))["sig"].alias("sig")),
         b, r, id_col="_rid",
     )
     pairs, bucket_stats = candidate_pairs(

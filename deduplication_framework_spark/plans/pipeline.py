@@ -28,14 +28,7 @@ from deduplication_framework_spark.functions import kernels as K
 from deduplication_framework_spark.functions.jvm_minhash import (
     jvm_minhash_features,
 )
-from deduplication_framework_spark.functions.text import (
-    make_fused_features_udf,
-    make_lsh_features_udf,
-    make_minhash_udf,
-    make_shingles_udf,
-    make_simhash_udf,
-    make_winnow_udf,
-)
+from deduplication_framework_spark.functions.text import make_fused_features_udf
 from deduplication_framework_spark.operators.cluster import (
     clusters_from_edges,
     keepers as keepers_op,

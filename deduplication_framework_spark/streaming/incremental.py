@@ -3,9 +3,9 @@
 Two surfaces:
 
 * ``stream_signatures`` — stateless: every micro-batch of pages gets
-  normalized + MinHash/SimHash featurized by the same Arrow UDFs as the
-  batch pipeline (map-only → trivially streaming-safe, exactly-once with a
-  checkpointed sink).
+  normalized + MinHash/SimHash featurized by the same fused Arrow UDF as
+  the batch pipeline (map-only → trivially streaming-safe, exactly-once
+  with a checkpointed sink).
 
 * ``incremental_exact_dedup`` — stateful via ``foreachBatch``: each batch is
   exact-hash deduped within itself AND against the persistent `seen`
@@ -23,31 +23,32 @@ the checkpointed signature table (cheap thanks to config-hash resume).
 from __future__ import annotations
 
 import os
+from dataclasses import replace
 from typing import Optional
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from deduplication_framework_spark.config import PipelineConfig
-from deduplication_framework_spark.functions.text import (
-    make_minhash_udf,
-    make_simhash_udf,
-)
+from deduplication_framework_spark.functions.text import make_fused_features_udf
 
 
 def stream_signatures(
     pages_stream: DataFrame, cfg: Optional[PipelineConfig] = None
 ) -> DataFrame:
-    """Streaming pages → (url, warc_ts, sig, simhash). Stateless map."""
+    """Streaming pages → (url, warc_ts, sig, simhash). Stateless map: one
+    fused Arrow pass computes both (sha1 signatures whatever
+    ``cfg.dedup.hash_family`` says)."""
     cfg = cfg or PipelineConfig()
-    mh = make_minhash_udf(cfg.embedding, cfg.dedup, include_words=True)
-    sh = make_simhash_udf(cfg.embedding)
-    return pages_stream.select(
-        "url",
-        "warc_ts",
-        mh("text").alias("sig"),
-        sh("text").alias("simhash"),
+    fused = make_fused_features_udf(
+        cfg.embedding,
+        replace(cfg.dedup, hash_family="sha1"),
+        with_minhash=True,
+        with_simhash=True,
     )
+    return pages_stream.select(
+        "url", "warc_ts", fused("text").alias("f")
+    ).select("url", "warc_ts", "f.sig", "f.simhash")
 
 
 def stream_ingest_stats(

@@ -47,6 +47,8 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 _MASK64 = (1 << 64) - 1
+# composite MinHash state groups per band (stateful_minhash_candidates)
+_STATE_GROUPS = 256
 
 
 def simhash_band_stream(
@@ -159,7 +161,6 @@ def stateful_minhash_candidates(
     state_cap: int = 2000,
     id_col: str = "doc_id",
     sig_col: str = "sig",
-    state_groups: int = 256,
 ) -> DataFrame:
     """Streaming (doc_id, sig[array<long>]) → incremental MinHash-LSH
     candidate edges (src, dst, n_state_evicted), src < dst. Append-mode.
@@ -182,30 +183,16 @@ def stateful_minhash_candidates(
     join emitted pairs to the checkpointed shingle table and apply
     ``verify_jaccard`` per sink batch — same split as the batch pipeline.
 
-    ``state_groups`` (r6): the state key is ``(band_idx, band_key mod
-    state_groups)`` — a COMPOSITE group holding many LSH buckets as
-    per-bucket member lists inside one state value — instead of one
-    state key per bucket. Most buckets are singletons (bench corpus:
-    152k distinct buckets over 180k band rows) and
-    ``applyInPandasWithState`` pays a fixed ~54μs of state-protocol
-    overhead per TOUCHED GROUP per trigger (measured with a dummy state
-    fn: identical rows cost 16.6s through 152k fine groups vs 8.4s
-    through 576 coarse ones), so singleton buckets made group overhead
-    the dominant streaming cost. Capping and the replay guard stay PER
-    BUCKET — the membership semantics and emitted pair set are unchanged
-    (parity test unchanged); only the eviction counter granularity
-    widens to the composite group (sum of its buckets' drops; total
-    accounting preserved). The dial trades per-trigger group overhead
-    against per-group state-value size: a touched group ser/des its
-    whole member table every trigger, so for DEEP histories with small
-    triggers raise ``state_groups`` (or pass ``0`` for the classic
-    one-bucket-per-key layout); for the recent-window regime this
-    operator is designed for (module docstring), a few hundred groups
-    per band is the sweet spot."""
+    State layout: the state key is ``(band_idx, pmod(band_key, 256))`` —
+    a composite group holding many buckets' member lists — because
+    ``applyInPandasWithState`` pays ~54μs per touched group per trigger
+    and most buckets are singletons (bench corpus, dummy state fn: 16.6s
+    through 152k per-bucket groups vs 8.4s through 576 composite ones).
+    Capping and the replay guard stay per bucket, so the pair set is
+    unchanged; only the eviction counter sums over the group's buckets."""
     from deduplication_framework_spark.operators.lsh import minhash_bands
 
     bands = minhash_bands(signatures, b, r, id_col=id_col, sig_col=sig_col)
-    composite = bool(state_groups and state_groups > 0)
 
     def match(
         key: Tuple,
@@ -252,13 +239,9 @@ def stateful_minhash_candidates(
                 rows, columns=["src", "dst", "n_state_evicted"]
             )
 
-    if composite:
-        grouped = bands.withColumn(
-            "_grp", F.pmod(F.col("band_key"), F.lit(int(state_groups)))
-        ).groupBy("band_idx", "_grp")
-    else:
-        grouped = bands.groupBy("band_idx", "band_key")
-    return grouped.applyInPandasWithState(
+    return bands.withColumn(
+        "_grp", F.pmod(F.col("band_key"), F.lit(_STATE_GROUPS))
+    ).groupBy("band_idx", "_grp").applyInPandasWithState(
         match,
         outputStructType="src long, dst long, n_state_evicted long",
         stateStructType="bkeys array<long>, ids array<long>, evicted long",
@@ -374,13 +357,15 @@ def stream_text_candidates(
     text_col: str = "text",
 ) -> DataFrame:
     """Raw TEXT stream → incremental near-dup candidate edges, end to end:
-    the same Arrow featurization UDFs as the batch pipeline run as a
-    stateless streaming map (normalize + sign/fingerprint per micro-batch),
-    feeding the per-bucket stateful LSH operator — so a streaming caller
-    needs no precomputed signature table. ``detector`` picks the family:
+    the batch pipeline's fused Arrow featurization UDF
+    (``make_fused_features_udf``) runs as a stateless streaming map
+    (normalize + sign/fingerprint per micro-batch), feeding the stateful
+    LSH operator — so a streaming caller needs no precomputed signature
+    table. ``detector`` picks the family:
 
-    * ``"minhash"`` — datasketch-spec signatures → ``(b, r)`` bands from
-      the config's threshold/num_perm → :func:`stateful_minhash_candidates`
+    * ``"minhash"`` — datasketch-spec sha1 signatures (whatever
+      ``cfg.dedup.hash_family`` says) → ``(b, r)`` bands from the
+      config's threshold/num_perm → :func:`stateful_minhash_candidates`
       (edges = band collisions; verify downstream per sink batch);
     * ``"simhash"`` — simhash-lib-spec fingerprints →
       :func:`stateful_simhash_candidates` (edges carry exact Hamming
@@ -389,11 +374,12 @@ def stream_text_candidates(
     Cross-micro-batch parity with the batch candidate semantics is pinned
     by the per-operator tests; this glue is pinned text-in by
     tests/test_streaming.py::test_stream_text_candidates_minhash."""
+    from dataclasses import replace
+
     from deduplication_framework_spark.config import PipelineConfig
     from deduplication_framework_spark.functions import kernels as K
     from deduplication_framework_spark.functions.text import (
-        make_minhash_udf,
-        make_simhash_udf,
+        make_fused_features_udf,
     )
 
     cfg = cfg or PipelineConfig()
@@ -405,21 +391,26 @@ def stream_text_candidates(
     pages_stream = pages_stream.repartition(
         pages_stream.sparkSession.sparkContext.defaultParallelism
     )
+    doc_id = F.col(id_col).cast("long").alias("doc_id")
     if detector == "minhash":
-        mh = make_minhash_udf(cfg.embedding, cfg.dedup, include_words=True)
+        fused = make_fused_features_udf(
+            cfg.embedding,
+            replace(cfg.dedup, hash_family="sha1"),
+            with_minhash=True,
+        )
         sigs = pages_stream.select(
-            F.col(id_col).cast("long").alias("doc_id"),
-            mh(text_col).alias("sig"),
+            doc_id, fused(text_col)["sig"].alias("sig")
         )
         b, r = K.optimal_band_param(cfg.dedup.threshold, cfg.dedup.num_perm)
         return stateful_minhash_candidates(
             sigs, b=b, r=r, state_cap=state_cap
         )
     if detector == "simhash":
-        sh = make_simhash_udf(cfg.embedding)
+        fused = make_fused_features_udf(
+            cfg.embedding, cfg.dedup, with_simhash=True
+        )
         fps = pages_stream.select(
-            F.col(id_col).cast("long").alias("doc_id"),
-            sh(text_col).alias("simhash"),
+            doc_id, fused(text_col)["simhash"].alias("simhash")
         )
         return stateful_simhash_candidates(
             fps, dist=cfg.dedup.simhash_dist, state_cap=state_cap

@@ -75,6 +75,29 @@ def test_dense_true_raises_over_budget(spark):
     assert sj.DENSE_MAX_ELS == 2048  # budget documented in the docstring
 
 
+def test_dense_bound_checked_before_collect(spark, monkeypatch):
+    """256 small-set docs then one 5000-element doc: the 256-doc sample
+    sees a tiny universe, so only the set-size bound folded into the
+    doc-count job keeps the wide doc off the driver — "auto" must take
+    the prefix path without ever calling toPandas."""
+    sets = {i: {f"g{(i + j) % 50}" for j in range(5)} for i in range(256)}
+    sets[256] = {f"w{j}" for j in range(5000)}
+    # one partition, insertion order: the sample's limit sees the small docs
+    df = spark.createDataFrame(
+        [(i, sorted(s)) for i, s in sets.items()], ["doc_id", "grams"]
+    ).coalesce(1)
+
+    def no_collect(self):
+        raise AssertionError("dense path collected before the size bound")
+
+    monkeypatch.setattr(type(df), "toPandas", no_collect)
+    edges, stats = ssjoin_jaccard(df, threshold=0.8)
+    got = {(r.src, r.dst) for r in edges.collect()}
+    release_census_caches()
+    assert "path" not in stats
+    assert got == _py_oracle(sets, 0.8)
+
+
 def _random_corpus(seed, n_docs=60, universe=40):
     rng = random.Random(seed)
     els = [f"g{i}" for i in range(universe)]

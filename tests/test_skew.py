@@ -44,7 +44,9 @@ def test_capped_buckets_preserve_recall(spark, pages, texts):
 def test_capping_bounds_pair_volume(spark, pages):
     """With the cap on, the boilerplate class produces linear (star+chain),
     not quadratic, edges from its hot buckets."""
-    from deduplication_framework_spark.functions.text import make_minhash_udf
+    from deduplication_framework_spark.functions.text import (
+        make_fused_features_udf,
+    )
     from deduplication_framework_spark.functions import kernels as K
     from deduplication_framework_spark.operators.lsh import (
         candidate_pairs,
@@ -62,8 +64,8 @@ def test_capping_bounds_pair_volume(spark, pages):
     )
     m = boiler.count()
     assert m >= 20
-    mh = make_minhash_udf(cfg.embedding, cfg.dedup)
-    sigs = boiler.select("doc_id", mh("text").alias("sig"))
+    mh = make_fused_features_udf(cfg.embedding, cfg.dedup, with_minhash=True)
+    sigs = boiler.select("doc_id", mh("text")["sig"].alias("sig"))
     b, r = K.optimal_band_param(0.8, 128)
     bands = minhash_bands(sigs, b, r).persist()
 

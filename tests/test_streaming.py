@@ -225,14 +225,19 @@ def test_stateful_simhash_matches_batch(spark, pages, tmp_path):
     Hamming<=10 set (pigeonhole blocking is lossless and no cap binds) —
     including pairs whose members arrive in DIFFERENT micro-batches."""
     from deduplication_framework_spark.config import PipelineConfig
-    from deduplication_framework_spark.functions.text import make_simhash_udf
+    from deduplication_framework_spark.functions.text import (
+        make_fused_features_udf,
+    )
     from deduplication_framework_spark.streaming.stateful import (
         stateful_simhash_candidates,
     )
 
     docs = pages.select(F.col("doc_order").alias("doc_id"), "text")
-    sh = make_simhash_udf(PipelineConfig().embedding)
-    fps = docs.select("doc_id", sh("text").alias("simhash")).collect()
+    cfg = PipelineConfig()
+    sh = make_fused_features_udf(cfg.embedding, cfg.dedup, with_simhash=True)
+    fps = docs.select(
+        "doc_id", sh("text")["simhash"].alias("simhash")
+    ).collect()
 
     # exact oracle: all pairs within Hamming 10 (spec kernel, not a local
     # re-derivation)
@@ -385,7 +390,9 @@ def test_stateful_minhash_matches_batch_band_collisions(spark, pages, tmp_path):
     pairs split across micro-batches."""
     from deduplication_framework_spark.config import PipelineConfig
     from deduplication_framework_spark.functions import kernels as K
-    from deduplication_framework_spark.functions.text import make_minhash_udf
+    from deduplication_framework_spark.functions.text import (
+        make_fused_features_udf,
+    )
     from deduplication_framework_spark.streaming.stateful import (
         stateful_minhash_candidates,
     )
@@ -393,8 +400,8 @@ def test_stateful_minhash_matches_batch_band_collisions(spark, pages, tmp_path):
     cfg = PipelineConfig()
     b, r = K.optimal_band_param(cfg.dedup.threshold, cfg.dedup.num_perm)
     docs = pages.select(F.col("doc_order").alias("doc_id"), "text")
-    mh = make_minhash_udf(cfg.embedding, cfg.dedup)
-    sigs = docs.select("doc_id", mh("text").alias("sig")).collect()
+    mh = make_fused_features_udf(cfg.embedding, cfg.dedup, with_minhash=True)
+    sigs = docs.select("doc_id", mh("text")["sig"].alias("sig")).collect()
 
     # oracle: group by exact band tuples (xxhash64 collisions only ADD
     # candidates and are ~2^-64 here)
@@ -537,7 +544,9 @@ def test_stream_text_candidates_minhash(spark, pages, tmp_path):
     batch band-collision oracle over the same texts."""
     from deduplication_framework_spark.config import PipelineConfig
     from deduplication_framework_spark.functions import kernels as K
-    from deduplication_framework_spark.functions.text import make_minhash_udf
+    from deduplication_framework_spark.functions.text import (
+        make_fused_features_udf,
+    )
     from deduplication_framework_spark.streaming.stateful import (
         stream_text_candidates,
     )
@@ -547,8 +556,8 @@ def test_stream_text_candidates_minhash(spark, pages, tmp_path):
     sub = pages.select("doc_order", "text")
     rows = sub.orderBy("doc_order").collect()
 
-    mh = make_minhash_udf(cfg.embedding, cfg.dedup)
-    sigs = sub.select("doc_order", mh("text").alias("sig")).collect()
+    mh = make_fused_features_udf(cfg.embedding, cfg.dedup, with_minhash=True)
+    sigs = sub.select("doc_order", mh("text")["sig"].alias("sig")).collect()
     buckets = {}
     for row in sigs:
         for bi in range(b):
@@ -574,23 +583,28 @@ def test_stream_text_candidates_minhash(spark, pages, tmp_path):
         .option("maxFilesPerTrigger", 1)
         .parquet(str(src / "b*"))
     )
-    out = stream_text_candidates(stream, cfg, detector="minhash")
-    q = (
-        out.writeStream.format("memory")
-        .queryName("txt_cands")
-        .outputMode("append")
-        .option("checkpointLocation", str(tmp_path / "c"))
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    got = {
-        (r2.src, r2.dst)
-        for r2 in spark.sql("SELECT src, dst FROM txt_cands").collect()
-    }
-    assert got == expected
+    # hash_family="jvm" has no Arrow path: the stream must still sign with
+    # sha1 and emit the same pairs
+    jvm_cfg = PipelineConfig()
+    jvm_cfg.dedup.hash_family = "jvm"
+    for name, run_cfg in (("txt_cands", cfg), ("txt_cands_jvm", jvm_cfg)):
+        out = stream_text_candidates(stream, run_cfg, detector="minhash")
+        q = (
+            out.writeStream.format("memory")
+            .queryName(name)
+            .outputMode("append")
+            .option("checkpointLocation", str(tmp_path / name))
+            .start()
+        )
+        try:
+            q.processAllAvailable()
+        finally:
+            q.stop()
+        got = {
+            (r2.src, r2.dst)
+            for r2 in spark.sql(f"SELECT src, dst FROM {name}").collect()
+        }
+        assert got == expected, name
 
 
 def test_stream_span_dedup_matches_batch_keep_first(spark, tmp_path):

@@ -283,15 +283,19 @@ def prof_stream_parts(spark):
         print(f"  {os.path.basename(d)}: {len(files)} files, {sum(szs)//1024}KB")
     # time one batch-equivalent featurization at 4-way vs 32-way parallelism
     from deduplication_framework_spark.config import PipelineConfig
-    from deduplication_framework_spark.functions.text import make_minhash_udf
+    from deduplication_framework_spark.functions.text import (
+        make_fused_features_udf,
+    )
 
     cfg = PipelineConfig()
-    mh = make_minhash_udf(cfg.embedding, cfg.dedup, include_words=True)
+    mh = make_fused_features_udf(cfg.embedding, cfg.dedup, with_minhash=True)
     one = spark.read.parquet(os.path.join(src, "b0"))
     print(f"  b0 partitions as read: {one.rdd.getNumPartitions()}")
-    sigs4 = one.coalesce(4).select("doc_order", mh("text").alias("sig"))
+    sigs4 = one.coalesce(4).select("doc_order", mh("text")["sig"].alias("sig"))
     noop(sigs4, "featurize 5k docs @4 partitions", spark)
-    sigs32 = one.repartition(CPUS).select("doc_order", mh("text").alias("sig"))
+    sigs32 = one.repartition(CPUS).select(
+        "doc_order", mh("text")["sig"].alias("sig")
+    )
     noop(sigs32, "featurize 5k docs @32 partitions", spark)
 
 
