@@ -182,7 +182,8 @@ def near_dedup_spans(
        rep pair — the budget already accepted by ``operators/exact.py``);
     3. datasketch-spec MinHash signatures → LSH bands →
        ``candidate_pairs`` (salted/capped hot buckets) → exact-Jaccard
-       verification (``verify_jaccard``) → connected components;
+       verification (``verify_jaccard``) → ``clusters_from_edges`` (the
+       driver union-find when the edges fit ``cc_broadcast_threshold``);
     4. per cluster, the surviving span is the rep with the smallest
        (order, pos) — min-of-struct, map-side combinable;
     5. reassembly via the shared ``reassemble_spans`` shuffle plan.
@@ -197,7 +198,7 @@ def near_dedup_spans(
     from ..config import PipelineConfig
     from ..functions import kernels as K
     from ..functions.text import make_fused_features_udf, make_shingles_udf
-    from .connected_components import connected_components
+    from .cluster import clusters_from_edges
     from .lsh import _persist_tracked, candidate_pairs, minhash_bands
     from .verify import verify_jaccard
 
@@ -234,13 +235,14 @@ def near_dedup_spans(
     edges = verify_jaccard(
         pairs, feats, cfg.dedup.threshold, id_col="_rid", feat_col="shingles"
     )
-    labels, cc_rounds = connected_components(edges)
+    labels, cc_rounds = clusters_from_edges(
+        reps, edges, id_col="_rid",
+        driver_threshold=cfg.spark.cc_broadcast_threshold,
+    )
 
-    clustered = reps.join(
-        labels.withColumnRenamed("doc_id", "_rid"), "_rid", "left"
-    ).withColumn("_cl", F.coalesce("cluster_id", F.col("_rid")))
     keepers = (
-        clustered.groupBy("_cl")
+        reps.join(labels.withColumnRenamed("doc_id", "_rid"), "_rid")
+        .groupBy("cluster_id")
         .agg(F.min(F.struct(order_col, "pos", "_rid")).alias("_w"))
         .select(F.col("_w._rid").alias("_rid"))
     )

@@ -211,10 +211,19 @@ def test_cli_quality_filter(spark, tmp_path):
     assert "keepers.resumed" not in run(["--quality-repetition"])["metrics"]
 
 
-def test_cli_layer_caches_are_released(spark, tmp_path):
+@pytest.mark.parametrize(
+    "flags",
+    [
+        ["--span-dedup", "--remove-frequent-spans", "1"],
+        ["--span-dedup", "--span-dedup-fuzzy"],
+    ],
+    ids=["exact", "fuzzy"],
+)
+def test_cli_layer_caches_are_released(spark, tmp_path, flags):
     """The span layers persist their per-doc results for the pipeline's
     many consumers; main() must unpersist them before it returns, or
-    every CLI call in a long-lived session leaks cached frames."""
+    every CLI call in a long-lived session leaks cached frames. The fuzzy
+    span layer's clustering must leave no CC checkpoints behind either."""
     inp = str(tmp_path / "pages_c")
     spark.createDataFrame(
         [
@@ -230,6 +239,6 @@ def test_cli_layer_caches_are_released(spark, tmp_path):
     assert cli.main([
         "--input", inp, "--output", str(tmp_path / "out_c"),
         "--detectors", "exact", "--checkpoint-dir", str(tmp_path / "ckpt_c"),
-        "--span-dedup", "--remove-frequent-spans", "1",
+        *flags,
     ]) == 0
     assert jsc.getPersistentRDDs().size() <= before

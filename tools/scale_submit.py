@@ -3,10 +3,11 @@ measured AT TWO CLUSTER SIZES: the packaged CLI pipeline (zip-only
 package resolution enforced by tools/submit_smoke.py) run under real
 ``spark-submit --master local[2]`` and ``local[8]`` over the SAME
 pre-written parquet corpus, reporting throughput at both plus the
-N→4N scaling efficiency. The in-process anchors (scale_jvm_pipeline,
-bench --scaling) measure the same criterion without the submit wire;
-this one removes the last gap between the evidence and the rule's
-wording ("run via spark-submit --py-files ... at two cluster sizes").
+N→4N scaling efficiency. The in-process anchors (tools/anchor.py
+jvm_pipeline, bench --scaling) measure the same criterion without the
+submit wire; this one removes the last gap between the evidence and
+the rule's wording ("run via spark-submit --py-files ... at two cluster
+sizes").
 
 The corpus (sources/pages.py generate_pages — deterministic from the
 row index) is synthesized ONCE, in-process, to parquet, and every leg
@@ -16,7 +17,8 @@ run_pipeline's elapsed_sec — embarrassingly-parallel Python that would
 flatter the efficiency number). Per-leg record: the CLI summary's
 ``elapsed_sec`` (run_pipeline + keeper/cluster/edge sink writes; JVM
 startup and the recall oracle also sit outside) + whole-app event-log
-task CPU/run seconds (scheduler-truth secondary signal).
+task CPU/run seconds (scheduler-truth secondary signal), read with the
+benchmark's ``dedup_bench/probes.py::EventLog``.
 
 Hard assertions:
   * one recall leg (local[8], small corpus, ``--eval-recall``):
@@ -33,6 +35,7 @@ yaml (the per-core-throughput family; the jvm family's submit behavior
 is covered by the in-process anchor + test_cli).
 """
 
+import glob
 import json
 import os
 import shutil
@@ -48,7 +51,7 @@ sys.path.insert(0, ROOT)
 for _v in ("OMP_NUM_THREADS", "OPENBLAS_NUM_THREADS", "MKL_NUM_THREADS"):
     os.environ.setdefault(_v, "1")
 
-from tools.scale_once import _task_metrics  # noqa: E402
+from dedup_bench.probes import EventLog  # noqa: E402
 
 SUBMIT = shutil.which("spark-submit") or "/opt/spark/bin/spark-submit"
 RECALL_DOCS = 3000  # the J>=0.95 oracle is all-pairs driver Python
@@ -107,7 +110,9 @@ def run_leg(cores: int, n_docs: int, input_path: str, cfg_yaml: str,
                 f"submit leg local[{cores}] failed:\n{r.stderr[-4000:]}"
             )
         summary = json.loads(r.stdout.strip().splitlines()[-1])
-        cpu_s, run_s, n_tasks = _task_metrics(evdir, 0, 1e15)
+        log = EventLog(glob.glob(os.path.join(evdir, "*"))[0])
+        log.poll()
+        app = log.totals(log.jobs)
         return {
             "cores": cores,
             "n_docs": n_docs,
@@ -116,9 +121,9 @@ def run_leg(cores: int, n_docs: int, input_path: str, cfg_yaml: str,
             "submit_wall_sec": round(wall_total, 1),
             "keepers": summary["keepers"],
             "cc_rounds": summary["cc_rounds"],
-            "app_task_cpu_sec": round(cpu_s, 1),
-            "app_task_run_sec": round(run_s, 1),
-            "n_tasks": n_tasks,
+            "app_task_cpu_sec": round(app["exec_cpu_s"], 1),
+            "app_task_run_sec": round(app["exec_run_s"], 1),
+            "n_tasks": int(app["tasks"]),
             "metrics": {
                 k: v for k, v in summary["metrics"].items() if "recall" in k
             },
