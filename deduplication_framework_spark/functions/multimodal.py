@@ -19,7 +19,7 @@ tested. A production deployment swaps ``decode_image_bytes`` /
 from __future__ import annotations
 
 import struct
-from typing import Iterator, Optional, Tuple
+from typing import Iterator, Tuple
 
 import numpy as np
 import pandas as pd

@@ -77,7 +77,7 @@ def kmeans_block(
     reference (image/method/pipeline_api.py:662-665, seed 42). Adds
     ``block_id`` and ``dist_to_centroid`` columns."""
     from pyspark.ml.clustering import KMeans
-    from pyspark.ml.functions import array_to_vector, vector_to_array
+    from pyspark.ml.functions import array_to_vector
 
     n = df.count()
     if n_clusters is None:

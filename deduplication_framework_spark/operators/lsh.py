@@ -98,13 +98,18 @@ def minhash_bands(
     )
 
 
-def simhash_block_array(fp_col: str, dist: int):
-    """The dist+1 pigeonhole bit-block struct array for a 64-bit
-    fingerprint column — shared by batch banding, the fused candidate
-    join, and the stateful streaming operator (pure bit arithmetic,
-    JVM-side)."""
-    layout = simhash_band_layout(64, dist)
-    return F.array(
+def simhash_bands(
+    fingerprints: DataFrame,
+    dist: int = 10,
+    id_col: str = "doc_id",
+    fp_col: str = "simhash",
+) -> DataFrame:
+    """(doc_id, simhash:long) → (doc_id, band_idx, band_key, fp) using
+    dist+1 pigeonhole bit blocks, the fingerprint carried for the Hamming
+    test. Pure bit arithmetic, JVM-side, and streaming-safe (projection +
+    explode): the one SimHash band builder for batch banding, the fused
+    candidate join and the stateful streaming operator."""
+    blocks = F.array(
         *[
             F.struct(
                 F.lit(i).alias("band_idx"),
@@ -114,25 +119,17 @@ def simhash_block_array(fp_col: str, dist: int):
                     )
                 ).alias("block_bits"),
             )
-            for i, (off, width) in enumerate(layout)
+            for i, (off, width) in enumerate(simhash_band_layout(64, dist))
         ]
     )
-
-
-def simhash_bands(
-    fingerprints: DataFrame,
-    dist: int = 10,
-    id_col: str = "doc_id",
-    fp_col: str = "simhash",
-) -> DataFrame:
-    """(doc_id, simhash:long) → (doc_id, band_idx, band_key) using dist+1
-    pigeonhole bit blocks. Pure bit arithmetic, JVM-side."""
-    blocks = simhash_block_array(fp_col, dist)
-    exploded = fingerprints.select(id_col, F.explode(blocks).alias("blk"))
+    exploded = fingerprints.select(
+        id_col, F.col(fp_col).alias("fp"), F.explode(blocks).alias("blk")
+    )
     return exploded.select(
         id_col,
         F.col("blk.band_idx").alias("band_idx"),
         F.xxhash64("blk.band_idx", "blk.block_bits").alias("band_key"),
+        "fp",
     )
 
 
@@ -197,22 +194,8 @@ def simhash_candidate_edges(
         F.col("doc_id").alias("dst"),
         F.lit(0).alias("hamming"),
     )
-    fingerprints = tagged.filter(F.col("doc_id") == F.col("rep")).select(
-        "doc_id", F.col("fp").alias(fp_col)
-    )
-    id_col = "doc_id"
-
-    blocks = simhash_block_array(fp_col, dist)
-    bands = fingerprints.select(
-        F.col(id_col).alias("doc_id"),
-        F.col(fp_col).alias("fp"),
-        F.explode(blocks).alias("blk"),
-    ).select(
-        "doc_id",
-        "fp",
-        F.col("blk.band_idx").alias("band_idx"),
-        F.xxhash64("blk.band_idx", "blk.block_bits").alias("band_key"),
-    )
+    reps = tagged.filter(F.col("doc_id") == F.col("rep"))
+    bands = simhash_bands(reps, dist, "doc_id", "fp")
 
     # persist + eager count: the census window feeds several downstream
     # scans (small a/b, sub-band consumers when hot buckets exist, stats),

@@ -34,7 +34,7 @@ recipe is PQ-shortlist + exact rerank, which ``rerank`` implements.
 
 from __future__ import annotations
 
-from typing import Iterator, Optional, Tuple
+from typing import Iterator, Optional
 
 import numpy as np
 import pandas as pd

@@ -20,7 +20,7 @@ from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass, field
 from typing import Dict, List, Optional
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from deduplication_framework_spark.config import PipelineConfig
@@ -38,13 +38,9 @@ from deduplication_framework_spark.operators.lsh import (
     candidate_pairs,
     minhash_bands,
     release_census_caches,
-    simhash_bands,
     simhash_candidate_edges,
 )
-from deduplication_framework_spark.operators.verify import (
-    verify_hamming,
-    verify_jaccard,
-)
+from deduplication_framework_spark.operators.verify import verify_jaccard
 from deduplication_framework_spark.plans.checkpoint import ParquetTableStore
 
 ALL_DETECTORS = ("exact", "minhash", "simhash", "substring", "suffix_array")

@@ -1,36 +1,42 @@
 """Stateful streaming near-dup candidate detection (SimHash and
-MinHash-LSH with per-bucket state via ``applyInPandasWithState``).
+MinHash-LSH through one band-collision operator over composite keyed
+state via ``applyInPandasWithState``).
 
-The batch pipeline buckets fingerprints by pigeonhole bit-blocks and
-self-joins each bucket (operators/lsh.py). Streaming can't shuffle the
-whole history per micro-batch, so the bucket membership itself becomes the
-KEYED STATE: each (band_idx, band_key) group keeps the fingerprints it has
-seen, every arriving doc is compared against that state (Hamming <= dist),
-and matches are emitted incrementally — a doc arriving hours after its
+The batch pipeline buckets documents by band keys (MinHash band slices,
+SimHash pigeonhole bit-blocks) and self-joins each bucket
+(operators/lsh.py). Streaming can't shuffle the whole history per
+micro-batch, so the bucket membership itself becomes the KEYED STATE:
+every arriving band row is compared against the members its bucket has
+retained (Hamming <= dist on the carried fingerprint; MinHash carries a
+zero fingerprint with dist 0, so a band collision is the whole test) and
+matches are emitted incrementally — a doc arriving hours after its
 near-duplicate still pairs with it, without re-reading history.
 
 Semantics vs batch: with an unbounded state cap, the emitted (src, dst)
-set equals the EXACT all-pairs Hamming <= dist set over the same
-documents (the pigeonhole blocking is lossless) — pinned by
-tests/test_streaming.py::test_stateful_simhash_matches_batch across
-multiple micro-batches. That makes it CC-equivalent to, and a superset
-of, ``simhash_candidate_edges``'s pre-CC candidate set (the batch path
-collapses identical fingerprints to representatives, so its raw pair set
-omits within-duplicate-group cliques). ``state_cap`` bounds per-bucket
-state the same way ``bucket_cap`` bounds batch pair volume (boilerplate
-skew guard): beyond the cap, new members still MATCH against the retained
-set but are not added to it. Every drop is observable: eviction counts
-ride matching output rows, and a bucket that evicts WITHOUT emitting any
-match in that trigger emits a NULL-edge accounting row carrying the
-counter — consumers filter ``src IS NOT NULL`` for edges and aggregate
-``max(n_state_evicted)`` for loss monitoring.
+set equals the EXACT all-pairs Hamming <= dist set (SimHash; the
+pigeonhole blocking is lossless) or the all-pairs band-collision set
+(MinHash) over the same documents — pinned by tests/test_streaming.py
+across multiple micro-batches. For SimHash that makes it CC-equivalent
+to, and a superset of, ``simhash_candidate_edges``'s pre-CC candidate set
+(the batch path collapses identical fingerprints to representatives, so
+its raw pair set omits within-duplicate-group cliques). ``state_cap``
+bounds each bucket's state the same way ``bucket_cap`` bounds batch pair
+volume (boilerplate skew guard): beyond the cap, new members still MATCH
+against the retained set but are not added to it. Every drop is
+observable: eviction counts ride matching output rows, and a group that
+evicts WITHOUT emitting any match in that trigger emits a NULL-edge
+accounting row carrying the counter — consumers filter ``src IS NOT
+NULL`` for edges and aggregate ``max(n_state_evicted)`` for loss
+monitoring.
 
-Scale posture: state is per (band_idx, band_key) key, hash-partitioned by
-the streaming state store — 11 band rows per doc, two longs per retained
-member (~176 bytes/doc total). A pair can be emitted once per shared band;
+Scale posture: state is keyed by the composite group ``(band_idx,
+pmod(band_key, _STATE_GROUPS))``, hash-partitioned by the streaming state
+store; each retained member costs three longs (band key, doc id,
+fingerprint) per band — 24 bytes/member/band, ~264 bytes/doc for
+SimHash's 11 bands. A pair can be emitted once per shared band;
 consumers dedup with a downstream ``dropDuplicates(["src", "dst"])`` per
 sink batch (same as the batch path's distinct). At full 10^12-doc corpus
-scale the complete fingerprint history (~176 TB of state) belongs in the
+scale the complete history (~264 TB of SimHash state) belongs in the
 batch layer, not a state store: run this operator over the RECENT window
 (its state bounded by the window's doc count) and let the periodic batch
 re-cluster from the checkpointed signature table (streaming/incremental.py
@@ -46,32 +52,94 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
+from deduplication_framework_spark.operators.lsh import (
+    minhash_bands,
+    simhash_bands,
+)
+
 _MASK64 = (1 << 64) - 1
-# composite MinHash state groups per band (stateful_minhash_candidates)
+# composite state groups per band: applyInPandasWithState pays ~54μs per
+# touched group per trigger and MinHash buckets are nearly all singletons
+# (bench corpus, dummy state fn: 16.6s through 152k per-bucket groups vs
+# 8.4s through 576 composite ones); SimHash has at most 640 buckets in all
 _STATE_GROUPS = 256
 
 
-def simhash_band_stream(
-    fingerprints: DataFrame,
-    dist: int = 10,
-    id_col: str = "doc_id",
-    fp_col: str = "simhash",
-) -> DataFrame:
-    """(doc_id, simhash) stream → (band_idx, band_key, doc_id, fp) band
-    rows. Pure projection + explode — streaming-safe, no shuffle until the
-    stateful groupBy."""
-    from deduplication_framework_spark.operators.lsh import simhash_block_array
+def _match_bands(
+    pdfs: Iterator[pd.DataFrame],
+    state: GroupState,
+    dist: int,
+    state_cap: int,
+) -> Iterator[pd.DataFrame]:
+    """Query-then-insert over one composite group's band rows
+    ``(band_key, doc_id, fp)``: each row pairs with every member its
+    bucket retains within Hamming ``dist``, then joins the bucket unless
+    the bucket already holds it (replay guard: an at-least-once
+    re-delivery must not take a slot that would evict a new doc) or holds
+    ``state_cap`` members (an eviction, counted per group). Every row the
+    trigger emits carries the counter's END-of-trigger value, and a
+    trigger that evicts with no match rows emits a NULL-edge accounting
+    row — capped recall loss is never silent."""
+    bkeys, ids, fps, evicted = state.get if state.exists else ([], [], [], 0)
+    evicted_at_entry = evicted
+    members: dict = {}  # band_key -> {doc_id: fp}, in arrival order
+    for bk, d, fp in zip(bkeys, ids, fps):
+        members.setdefault(bk, {})[d] = fp
+    out = []
+    for pdf in pdfs:
+        for bk, doc_id, fp in zip(pdf["band_key"], pdf["doc_id"], pdf["fp"]):
+            bk, doc_id, fp = int(bk), int(doc_id), int(fp)
+            bucket = members.setdefault(bk, {})
+            for sid, sfp in bucket.items():
+                h = ((sfp ^ fp) & _MASK64).bit_count()
+                if h <= dist and sid != doc_id:
+                    out.append((min(sid, doc_id), max(sid, doc_id), h))
+            if len(bucket) < state_cap:
+                bucket.setdefault(doc_id, fp)
+            elif doc_id not in bucket:
+                evicted += 1
+    bkeys, ids, fps = [], [], []
+    for bk, bucket in members.items():
+        bkeys += [bk] * len(bucket)
+        ids += bucket
+        fps += bucket.values()
+    state.update((bkeys, ids, fps, evicted))
+    rows = [(a, b, h, evicted) for a, b, h in out]
+    if not rows and evicted > evicted_at_entry:
+        rows.append((None, None, None, evicted))
+    if rows:
+        yield pd.DataFrame(
+            rows, columns=["src", "dst", "hamming", "n_state_evicted"]
+        )
 
-    blocks = simhash_block_array(fp_col, dist)
-    return fingerprints.select(
-        F.col(id_col).alias("doc_id"),
-        F.col(fp_col).alias("fp"),
-        F.explode(blocks).alias("blk"),
-    ).select(
-        F.col("blk.band_idx").alias("band_idx"),
-        F.xxhash64("blk.band_idx", "blk.block_bits").alias("band_key"),
-        "doc_id",
-        "fp",
+
+def _stateful_band_candidates(
+    bands: DataFrame, dist: int, state_cap: int
+) -> DataFrame:
+    """Band rows ``(band_idx, band_key, doc_id, fp)`` → incremental
+    candidate edges ``(src, dst, hamming, n_state_evicted)``, src < dst,
+    append-mode: :func:`_match_bands` per composite group ``(band_idx,
+    pmod(band_key, _STATE_GROUPS))``, state ``(bkeys, ids, fps,
+    evicted)``.
+
+    Restarting on a checkpoint written with another state layout fails
+    at its first trigger on Spark's state schema check:
+    ``STATE_STORE_VALUE_SCHEMA_NOT_COMPATIBLE`` for another value schema,
+    ``STATE_STORE_KEY_SCHEMA_NOT_COMPATIBLE`` for other key types or
+    nullability (both pinned in tests/test_streaming.py). Field names are
+    not compared, so a change to the grouping key alone that keeps its
+    types is NOT caught: such a change must also change the value schema,
+    or run on a fresh checkpoint."""
+    return bands.withColumn(
+        "_grp", F.pmod(F.col("band_key"), F.lit(_STATE_GROUPS))
+    ).groupBy("band_idx", "_grp").applyInPandasWithState(
+        lambda key, pdfs, state: _match_bands(pdfs, state, dist, state_cap),
+        outputStructType="src long, dst long, hamming int, n_state_evicted long",
+        stateStructType=(
+            "bkeys array<long>, ids array<long>, fps array<long>, evicted long"
+        ),
+        outputMode="append",
+        timeoutConf=GroupStateTimeout.NoTimeout,
     )
 
 
@@ -84,74 +152,9 @@ def stateful_simhash_candidates(
 ) -> DataFrame:
     """Streaming (doc_id, simhash) → incremental candidate edges
     (src, dst, hamming, n_state_evicted), src < dst. Append-mode."""
-    bands = simhash_band_stream(fingerprints, dist, id_col, fp_col)
-
-    def match(
-        key: Tuple,
-        pdfs: Iterator[pd.DataFrame],
-        state: GroupState,
-    ) -> Iterator[pd.DataFrame]:
-        import numpy as np
-
-        if state.exists:
-            ids, fps, evicted = state.get
-            ids, fps = list(ids), list(fps)
-        else:
-            ids, fps, evicted = [], [], 0
-        evicted_at_entry = evicted
-        seen = set(ids)
-        out = []
-        for pdf in pdfs:
-            for doc_id, fp in zip(pdf["doc_id"], pdf["fp"]):
-                doc_id, fp = int(doc_id), int(fp)
-                if ids:
-                    # vectorized XOR + popcount against the whole retained
-                    # set (the per-pair Python loop was the kind of
-                    # per-element work the batch kernels vectorize)
-                    arr = np.array(fps, dtype=np.int64).view(np.uint64)
-                    x = arr ^ np.uint64(fp & _MASK64)
-                    d = np.unpackbits(
-                        x.view(np.uint8).reshape(-1, 8), axis=1
-                    ).sum(axis=1)
-                    for j in np.nonzero(d <= dist)[0]:
-                        sid = ids[int(j)]
-                        if sid == doc_id:
-                            continue
-                        a, b = (sid, doc_id) if sid < doc_id else (doc_id, sid)
-                        out.append((a, b, int(d[j])))
-                if doc_id in seen:
-                    # re-delivered doc (at-least-once source replay or
-                    # duplicate input row): never re-append — a duplicate
-                    # slot would evict a genuinely new doc later and emit
-                    # duplicate pair rows on every subsequent arrival
-                    pass
-                elif len(ids) < state_cap:
-                    ids.append(doc_id)
-                    fps.append(fp)
-                    seen.add(doc_id)
-                else:
-                    evicted += 1
-        state.update((ids, fps, evicted))
-        # the counter is stamped with its END-of-trigger value on every
-        # emitted row (a match row appended before a later same-trigger
-        # eviction must not carry a stale count), and a trigger that evicts
-        # with no match rows to carry the count surfaces a NULL-edge
-        # accounting row — so capped recall loss is NEVER silent
-        rows = [(a, b, h, evicted) for (a, b, h) in out]
-        if not rows and evicted > evicted_at_entry:
-            rows.append((None, None, None, evicted))
-        if rows:
-            yield pd.DataFrame(
-                rows, columns=["src", "dst", "hamming", "n_state_evicted"]
-            )
-
-    return bands.groupBy("band_idx", "band_key").applyInPandasWithState(
-        match,
-        outputStructType="src long, dst long, hamming int, n_state_evicted long",
-        stateStructType="ids array<long>, fps array<long>, evicted long",
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
+    bands = simhash_bands(fingerprints, dist, id_col, fp_col)
+    bands = bands.withColumnRenamed(id_col, "doc_id")
+    return _stateful_band_candidates(bands, dist, state_cap)
 
 
 def stateful_minhash_candidates(
@@ -168,86 +171,19 @@ def stateful_minhash_candidates(
     This is the honest streaming rebuild of the reference's
     query-then-insert MinHashLSH loop (text/method/pipeline_api.py:434-475
     — literally a stream over arriving docs): band rows reuse the batch
-    ``minhash_bands`` keying (streaming-safe posexplode + xxhash64), each
-    (band_idx, band_key) group keeps the doc ids it has seen, and an
-    arriving doc pairs with every retained member of its bucket — a band
-    collision IS the candidate predicate, so unlike the SimHash operator
-    there is no per-pair distance test and state holds only ids (~8
-    bytes/member/band). With an unbounded cap the emitted pair set equals
-    the batch all-pairs band-collision set over the same docs (pinned in
-    tests/test_streaming.py). ``state_cap`` + eviction accounting follow
-    the SimHash operator's contract: overflow docs still match the
-    retained set, every drop increments the counter stamped (end-of-
-    trigger value) on the trigger's rows, and a match-free evicting
-    trigger emits the NULL-edge accounting row. Downstream verification:
-    join emitted pairs to the checkpointed shingle table and apply
-    ``verify_jaccard`` per sink batch — same split as the batch pipeline.
-
-    State layout: the state key is ``(band_idx, pmod(band_key, 256))`` —
-    a composite group holding many buckets' member lists — because
-    ``applyInPandasWithState`` pays ~54μs per touched group per trigger
-    and most buckets are singletons (bench corpus, dummy state fn: 16.6s
-    through 152k per-bucket groups vs 8.4s through 576 composite ones).
-    Capping and the replay guard stay per bucket, so the pair set is
-    unchanged; only the eviction counter sums over the group's buckets."""
-    from deduplication_framework_spark.operators.lsh import minhash_bands
-
+    ``minhash_bands`` keying (streaming-safe posexplode + xxhash64) with a
+    zero fingerprint and ``dist = 0``, so an arriving doc pairs with every
+    retained member of its bucket — a band collision IS the candidate
+    predicate. With an unbounded cap the emitted pair set equals the
+    batch all-pairs band-collision set over the same docs (pinned in
+    tests/test_streaming.py). Downstream verification: join emitted pairs
+    to the checkpointed shingle table and apply ``verify_jaccard`` per
+    sink batch — same split as the batch pipeline."""
     bands = minhash_bands(signatures, b, r, id_col=id_col, sig_col=sig_col)
-
-    def match(
-        key: Tuple,
-        pdfs: Iterator[pd.DataFrame],
-        state: GroupState,
-    ) -> Iterator[pd.DataFrame]:
-        if state.exists:
-            bkeys, ids, evicted = state.get
-            bkeys, ids = list(bkeys), list(ids)
-        else:
-            bkeys, ids, evicted = [], [], 0
-        evicted_at_entry = evicted
-        # per-bucket member lists, append order preserved within bucket
-        members: dict = {}
-        for k2, d in zip(bkeys, ids):
-            members.setdefault(k2, []).append(d)
-        seen = set(zip(bkeys, ids))
-        out = []
-        for pdf in pdfs:
-            for bk, doc_id in zip(pdf["band_key"], pdf[id_col]):
-                bk, doc_id = int(bk), int(doc_id)
-                lst = members.get(bk)
-                if lst:
-                    for sid in lst:
-                        if sid == doc_id:
-                            continue
-                        a, c = (sid, doc_id) if sid < doc_id else (doc_id, sid)
-                        out.append((a, c))
-                if (bk, doc_id) in seen:
-                    pass  # replay guard — see the SimHash operator
-                elif lst is None or len(lst) < state_cap:
-                    members.setdefault(bk, []).append(doc_id)
-                    bkeys.append(bk)
-                    ids.append(doc_id)
-                    seen.add((bk, doc_id))
-                else:
-                    evicted += 1
-        state.update((bkeys, ids, evicted))
-        rows = [(a, c, evicted) for (a, c) in out]
-        if not rows and evicted > evicted_at_entry:
-            rows.append((None, None, evicted))
-        if rows:
-            yield pd.DataFrame(
-                rows, columns=["src", "dst", "n_state_evicted"]
-            )
-
-    return bands.withColumn(
-        "_grp", F.pmod(F.col("band_key"), F.lit(_STATE_GROUPS))
-    ).groupBy("band_idx", "_grp").applyInPandasWithState(
-        match,
-        outputStructType="src long, dst long, n_state_evicted long",
-        stateStructType="bkeys array<long>, ids array<long>, evicted long",
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    bands = bands.withColumnRenamed(id_col, "doc_id").withColumn(
+        "fp", F.lit(0).cast("long")
     )
+    return _stateful_band_candidates(bands, 0, state_cap).drop("hamming")
 
 
 def stateful_span_dedup(

@@ -112,3 +112,52 @@ def test_spark_submit_py_files_e2e():
     assert r.returncode == 0, r.stderr[-3000:]
     summary = json.loads(r.stdout.strip().splitlines()[-1])
     assert summary["docs"] == 200 and summary["keepers"] > 0
+
+
+def _unused_imports(path):
+    """Names a module imports but never loads (``__all__`` entries count
+    as loads). ``ast`` parses f-string expressions, so a name used only
+    inside an f-string counts as used."""
+    import ast
+
+    with open(path) as f:
+        tree = ast.parse(f.read(), path)
+    imported = {}
+    for node in ast.walk(tree):
+        if isinstance(node, ast.Import):
+            for a in node.names:
+                imported[a.asname or a.name.split(".")[0]] = node.lineno
+        elif isinstance(node, ast.ImportFrom):
+            for a in node.names:
+                if node.module != "__future__" and a.name != "*":
+                    imported[a.asname or a.name] = node.lineno
+    used = {
+        n.id
+        for n in ast.walk(tree)
+        if isinstance(n, ast.Name) and isinstance(n.ctx, ast.Load)
+    }
+    for node in ast.walk(tree):
+        if isinstance(node, ast.Assign) and any(
+            isinstance(t, ast.Name) and t.id == "__all__" for t in node.targets
+        ):
+            used |= {
+                e.value
+                for e in ast.walk(node.value)
+                if isinstance(e, ast.Constant) and isinstance(e.value, str)
+            }
+    unused = [(ln, name) for name, ln in imported.items() if name not in used]
+    return sorted(unused)
+
+
+def test_no_unused_imports():
+    """Every name imported by a package module (``__init__.py`` files
+    excepted: they import to re-export) is used in that module."""
+    pkg_root = os.path.join(ROOT, "deduplication_framework_spark")
+    hits = []
+    for dirpath, _, files in os.walk(pkg_root):
+        for f in sorted(files):
+            if f.endswith(".py") and f != "__init__.py":
+                path = os.path.join(dirpath, f)
+                rel = os.path.relpath(path, ROOT)
+                hits += [f"{rel}:{ln} {n}" for ln, n in _unused_imports(path)]
+    assert not hits, "unused imports:\n" + "\n".join(hits)

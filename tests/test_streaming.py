@@ -3,6 +3,7 @@ with persistent state across micro-batches and restarts."""
 
 import os
 
+import pytest
 from pyspark.sql import functions as F
 
 from deduplication_framework_spark.sources.pages import PAGES_SCHEMA
@@ -537,6 +538,174 @@ def test_stateful_replay_does_not_consume_state_slots(spark, tmp_path):
     assert pairs == {(1, 2), (1, 3), (2, 3)}
     assert max(r.n_state_evicted for r in rows) == 1
 
+
+
+class _FakeGroupState:
+    """The slice of ``GroupState`` the band match function touches."""
+
+    def __init__(self):
+        self.value = None
+
+    @property
+    def exists(self):
+        return self.value is not None
+
+    @property
+    def get(self):
+        return self.value
+
+    def update(self, value):
+        self.value = value
+
+
+def test_band_match_composite_group_semantics():
+    """Spark-free: two buckets (band keys 1 and 257) share one composite
+    state group. The cap and the replay guard hold per bucket, the
+    eviction counter sums the group's drops and is stamped with its
+    end-of-trigger value, an evicting trigger with no match emits the
+    NULL-edge row, and rows outside the Hamming limit never pair."""
+    import pandas as pd
+
+    from deduplication_framework_spark.streaming.stateful import _match_bands
+
+    state = _FakeGroupState()
+
+    def trigger(rows):
+        pdf = pd.DataFrame(rows, columns=["band_key", "doc_id", "fp"])
+        out = list(_match_bands(iter([pdf]), state, 3, 2))
+        return {
+            tuple(None if pd.isna(v) else int(v) for v in row)
+            for df in out
+            for row in df.itertuples(index=False)
+        }
+
+    # bucket 1 fills its cap of 2 while bucket 257 holds one member: the
+    # group retains 3 docs with nothing evicted
+    assert trigger([(1, 10, 0), (1, 11, 0), (257, 20, 0)]) == {(10, 11, 0, 0)}
+    assert state.get == ([1, 1, 257], [10, 11, 20], [0, 0, 0], 0)
+    # doc 10 is new to bucket 257 (joins it) but a replay in bucket 1
+    # (matches, takes no slot, is not an eviction); docs 12 and 22 arrive
+    # at full buckets: two drops, both stamped on every row of the trigger
+    assert trigger(
+        [(257, 10, 0), (1, 10, 0), (1, 12, 0), (257, 22, 0)]
+    ) == {
+        (10, 20, 0, 2),
+        (10, 11, 0, 2),
+        (10, 12, 0, 2),
+        (11, 12, 0, 2),
+        (20, 22, 0, 2),
+        (10, 22, 0, 2),
+    }
+    assert state.get == ([1, 1, 257, 257], [10, 11, 20, 10], [0] * 4, 2)
+    # Hamming 8 > 3 from both bucket-1 members: no pair, and two
+    # evictions (doc 20 is retained in bucket 257, not in bucket 1), so
+    # the trigger's only row is the NULL-edge accounting row
+    null_row = (None, None, None, 4)
+    assert trigger([(1, 30, 0xFF), (1, 20, 0xFF)]) == {null_row}
+    # Hamming 3 <= 3: pairs, carrying the distance
+    assert trigger([(257, 40, 0b111)]) == {(20, 40, 3, 5), (10, 40, 3, 5)}
+    # a trigger that neither matches nor evicts emits nothing
+    assert trigger([(9, 50, 0)]) == set()
+    assert state.get[3] == 5
+
+
+# the two stateful LSH layouts before the shared band operator:
+# (grouping of the band rows, state schema, output schema, Spark's error
+# class on restart). The SimHash key's band_key was NOT NULL where the
+# composite pmod group is nullable, so the key check fires first.
+_OLD_LAYOUTS = {
+    "simhash": (
+        lambda bands: bands.groupBy("band_idx", "band_key"),
+        "ids array<long>, fps array<long>, evicted long",
+        "src long, dst long, hamming int, n_state_evicted long",
+        "STATE_STORE_KEY_SCHEMA_NOT_COMPATIBLE",
+    ),
+    "minhash": (
+        lambda bands: bands.withColumn(
+            "_grp", F.pmod(F.col("band_key"), F.lit(256))
+        ).groupBy("band_idx", "_grp"),
+        "bkeys array<long>, ids array<long>, evicted long",
+        "src long, dst long, n_state_evicted long",
+        "STATE_STORE_VALUE_SCHEMA_NOT_COMPATIBLE",
+    ),
+}
+
+
+@pytest.mark.parametrize("family", sorted(_OLD_LAYOUTS))
+def test_stateful_old_checkpoint_layout_fails_loudly(spark, tmp_path, family):
+    """A query restarted on a checkpoint written with the older state
+    layout of its family must fail on Spark's state schema check, never
+    read the old state as the new layout. A parquet sink, because a
+    memory sink refuses to recover."""
+    from pyspark.errors import StreamingQueryException
+    from pyspark.sql.streaming.state import GroupStateTimeout
+
+    from deduplication_framework_spark.operators.lsh import (
+        minhash_bands,
+        simhash_bands,
+    )
+    from deduplication_framework_spark.streaming.stateful import (
+        stateful_minhash_candidates,
+        stateful_simhash_candidates,
+    )
+
+    group, state_schema, out_schema, error = _OLD_LAYOUTS[family]
+    schema = {
+        "simhash": "doc_id long, simhash long",
+        "minhash": "doc_id long, sig array<long>",
+    }[family]
+    value = {"simhash": 12345, "minhash": [7, 8, 9, 10]}[family]
+    src = tmp_path / "s"
+    src.mkdir()
+
+    def add_batch(i, doc_id):
+        spark.createDataFrame([(doc_id, value)], schema).coalesce(
+            1
+        ).write.parquet(str(src / f"b{i}"))
+
+    def stream():
+        return (
+            spark.readStream.schema(schema)
+            .option("maxFilesPerTrigger", 1)
+            .parquet(str(src / "b*"))
+        )
+
+    def run(df):
+        q = (
+            df.writeStream.format("parquet")
+            .option("path", str(tmp_path / "out"))
+            .option("checkpointLocation", str(tmp_path / "c"))
+            .outputMode("append")
+            .start()
+        )
+        try:
+            q.processAllAvailable()
+        finally:
+            q.stop()
+
+    def old_state(key, pdfs, state):
+        state.update(([0], [0], 0))
+        return iter(())
+
+    if family == "simhash":
+        bands = simhash_bands(stream(), 10)
+        restarted = stateful_simhash_candidates(stream(), dist=10)
+    else:
+        bands = minhash_bands(stream(), b=2, r=2)
+        restarted = stateful_minhash_candidates(stream(), b=2, r=2)
+    add_batch(0, 1)
+    run(
+        group(bands).applyInPandasWithState(
+            old_state,
+            outputStructType=out_schema,
+            stateStructType=state_schema,
+            outputMode="append",
+            timeoutConf=GroupStateTimeout.NoTimeout,
+        )
+    )
+    add_batch(1, 2)
+    with pytest.raises(StreamingQueryException, match=error):
+        run(restarted)
 
 def test_stream_text_candidates_minhash(spark, pages, tmp_path):
     """Text-in end to end: raw pages stream → Arrow featurization inside
