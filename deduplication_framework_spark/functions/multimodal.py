@@ -390,9 +390,12 @@ def video_near_dup_edges(
     Same bucket/pair/verify machinery as every other detector — videos are
     just another feature universe."""
     from deduplication_framework_spark.functions.text import jaccard_expr
-    from deduplication_framework_spark.operators.lsh import candidate_pairs
+    from deduplication_framework_spark.operators.lsh import (
+        _persist_tracked,
+        candidate_pairs,
+    )
 
-    fps_df = video_fingerprints(media, n_frames=n_frames).persist()
+    fps_df = _persist_tracked(video_fingerprints(media, n_frames=n_frames))
     bands = fps_df.select(
         F.col("media_id").alias("doc_id"),
         F.lit(0).alias("band_idx"),

@@ -65,7 +65,7 @@ __all__ = [
 
 
 def _featurize(df: DataFrame, cfg: PipelineConfig, id_col: str, text_col: str):
-    if getattr(cfg.dedup, "hash_family", "sha1") == "jvm":
+    if cfg.dedup.hash_family == "jvm":
         # the Python-worker-free family (functions/jvm_minhash.py) emits
         # the same (_id, sig, shingles) contract; the stored-index config
         # hash covers hash_family, so an index built under one family is

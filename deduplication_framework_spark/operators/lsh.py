@@ -43,26 +43,33 @@ from deduplication_framework_spark.functions.kernels import simhash_band_layout
 # CC, bench between reps) can release them instead of letting repeated runs
 # in one session stack corpus-scale cache entries until LRU pressure evicts
 # something live mid-job. Unpersisting early is never incorrect — at worst
-# a later action recomputes from source.
+# a later action recomputes from source. Broadcasts are tracked the same
+# way (``_track``): ``Broadcast.unpersist()`` drops the executor copies and
+# a later use re-sends the value, unlike ``destroy()``.
 _LIVE_CENSUS_CACHES: list = []
 
 
+def _track(handle):
+    """Register ``handle`` (anything with ``unpersist()``: a persisted
+    frame, a broadcast) for ``release_census_caches``; returns it."""
+    _LIVE_CENSUS_CACHES.append(handle)
+    return handle
+
+
 def _persist_tracked(df: DataFrame) -> DataFrame:
-    df = df.persist()
-    _LIVE_CENSUS_CACHES.append(df)
-    return df
+    return _track(df.persist())
 
 
 def release_census_caches() -> int:
-    """Unpersist every band/census frame persisted since the last release;
-    returns how many were freed. Concurrent-safe in the weak sense: a
-    release while another thread's plan still needs a frame only forces a
-    recompute, never a wrong answer."""
+    """Unpersist every band/census frame and broadcast tracked since the
+    last release; returns how many were freed. Concurrent-safe in the weak
+    sense: a release while another thread's plan still needs one only
+    forces a recompute (or a re-send), never a wrong answer."""
     n = 0
     while _LIVE_CENSUS_CACHES:
-        df = _LIVE_CENSUS_CACHES.pop()
+        handle = _LIVE_CENSUS_CACHES.pop()
         try:
-            df.unpersist()
+            handle.unpersist()
             n += 1
         except Exception:
             pass
@@ -133,6 +140,92 @@ def simhash_bands(
     )
 
 
+def _n_over(cap: int):
+    """Band rows inside buckets larger than ``cap`` (the stats' capped and
+    hot row counts)."""
+    return F.sum(F.when(F.col("bucket_size") > cap, 1).otherwise(0))
+
+
+def _sized(rows: DataFrame, keys, **over) -> DataFrame:
+    """``rows`` + ``bucket_size`` over the bucket ``keys``, multi-member
+    buckets only (a singleton can never pair). ``over`` adds further
+    aggregates over the same unordered window: one shuffle for all."""
+    w = Window.partitionBy(*keys)
+    return rows.select(
+        "*",
+        F.count("*").over(w).alias("bucket_size"),
+        *[agg.over(w).alias(name) for name, agg in over.items()],
+    ).filter(F.col("bucket_size") > 1)
+
+
+def _census(rows: DataFrame, keys, cap: int) -> Tuple[DataFrame, int]:
+    """Persisted ``_sized`` table + its count of rows in buckets over
+    ``cap``. The persist is the persist-race rule (every pair and stats
+    consumer scans this window; concurrent stages of one cold job would
+    each recompute it), and the ONE filter-count both materializes the
+    cache (it scans every partition) and tells the driver whether the
+    hot-bucket stages need to exist at all: the adaptive plan, so a
+    hot-free corpus gets the plain self-join DAG."""
+    sized = _persist_tracked(_sized(rows, keys))
+    return sized, int(sized.filter(F.col("bucket_size") > cap).count())
+
+
+def _self_pairs(rows: DataFrame, keys, carry=(), keep=None) -> DataFrame:
+    """The bucket self-join: every ``doc_id`` pair sharing ``keys``, as
+    (src, dst) with src < dst. Each ``carry`` column rides along as
+    ``<c>_a`` (src side) / ``<c>_b`` (dst side), so ``keep``, a predicate
+    over them, filters inside the join task before anything shuffles."""
+
+    def side(end: str, suffix: str) -> DataFrame:
+        return rows.select(
+            *keys, F.col("doc_id").alias(end),
+            *[F.col(c).alias(c + suffix) for c in carry],
+        )
+
+    cond = F.col("src") < F.col("dst")
+    return (
+        side("src", "_a").join(side("dst", "_b"), list(keys))
+        .filter(cond if keep is None else cond & keep)
+        .drop(*keys)
+    )
+
+
+def _capped_pairs(hot: DataFrame, keys, cap: int, carry=(), keep=None) -> DataFrame:
+    """Pairs of over-cap buckets (north_rule skew handling): SALTED into
+    ceil(size/cap) sub-buckets by a secondary hash with all-pairs within
+    each salt group (``keep`` applies to these), PLUS star+chain edges
+    across the whole bucket in doc_id order, so every member stays
+    connected to the bucket minimum whatever the salting split. Pair
+    volume ~ size*cap/2 instead of size^2/2. Columns as ``_self_pairs``."""
+    n_salts = F.ceil(F.col("bucket_size") / F.lit(cap)).cast("int")
+    salted = hot.withColumn("salt", F.pmod(F.xxhash64("doc_id"), n_salts))
+    w = Window.partitionBy(*keys).orderBy("doc_id")
+    me = F.struct(
+        F.col("doc_id").alias("src"), *[F.col(c).alias(c + "_a") for c in carry]
+    )
+    carry_b = [c + "_b" for c in carry]
+    backbone = (
+        hot.select(
+            F.col("doc_id").alias("dst"),
+            *[F.col(c).alias(c + "_b") for c in carry],
+            F.array(F.first(me).over(w), F.lag(me).over(w)).alias("ends"),
+        )
+        .select(
+            F.explode(
+                F.array_distinct(
+                    F.filter("ends", lambda s: s["src"] != F.col("dst"))
+                )
+            ).alias("s"),
+            "dst",
+            *carry_b,
+        )
+        .select("s.*", "dst", *carry_b)
+    )
+    return _self_pairs(salted, [*keys, "salt"], carry, keep).unionByName(
+        backbone
+    )
+
+
 def simhash_candidate_edges(
     fingerprints: DataFrame,
     dist: int = 10,
@@ -166,10 +259,10 @@ def simhash_candidate_edges(
 
     NOT a pure plan builder: this runs one small census job at call time
     (materializing the persisted band table and reading the hot-row
-    count on the driver, which selects the adaptive plan shape). The
-    persisted band census (~dist+1 rows per distinct fingerprint) is
-    left to session-lifetime LRU — repeated calls in one long session
-    rely on eviction, the repo's accepted operator-persist pattern.
+    count on the driver, which selects the adaptive plan shape), and a
+    second one over the sub-bucket table when a bucket is hot. Both
+    persisted census frames (~dist+1 rows per distinct fingerprint) are
+    tracked and freed by ``release_census_caches()``.
 
     Identical fingerprints are PRE-AGGREGATED before banding (round 3;
     VERDICT r2 "What's wrong #2"): exact-dup docs and templated
@@ -195,228 +288,115 @@ def simhash_candidate_edges(
         F.lit(0).alias("hamming"),
     )
     reps = tagged.filter(F.col("doc_id") == F.col("rep"))
-    bands = simhash_bands(reps, dist, "doc_id", "fp")
+    keys = ["band_idx", "band_key"]
+    ham = F.bit_count(F.col("fp_a").bitwiseXOR(F.col("fp_b")))
+    near = ham <= dist
 
-    # persist + eager count: the census window feeds several downstream
-    # scans (small a/b, sub-band consumers when hot buckets exist, stats),
-    # and the repo's persist-race rule applies — concurrent stages of one
-    # cold job each recompute the window. One small job at operator-build
-    # time buys a warm cache for every consumer AND a free driver-side
-    # hot-row census (session-lifetime LRU owns the cleanup).
-    sized = _persist_tracked(
-        bands.withColumn(
-            "bucket_size",
-            F.count("*").over(Window.partitionBy("band_idx", "band_key")),
-        ).filter(F.col("bucket_size") > 1)
-    )
     # adaptive plan (the adaptive-CC pattern): the recursive-pigeonhole
     # machinery costs ~5 extra (empty) stages per edge consumption when no
     # bucket is hot — measured +3 s on the hot-free 20k bench corpus — so
-    # only BUILD it when the census says a hot bucket exists. This ONE
-    # filter-count both materializes the persisted frame (scans every
-    # partition, so the cache is warm for all consumers) and returns the
-    # hot-row count — no separate count() job.
-    n_hot_rows = int(
-        sized.filter(F.col("bucket_size") > bucket_cap).count()
+    # it is only BUILT when the census says a hot bucket exists
+    sized, n_hot_rows = _census(
+        simhash_bands(reps, dist, "doc_id", "fp"), keys, bucket_cap
     )
-
     small = sized.filter(F.col("bucket_size") <= bucket_cap)
-    hot = sized.filter(F.col("bucket_size") > bucket_cap)
-
-    a = small.select("band_idx", "band_key", F.col("doc_id").alias("src"),
-                     F.col("fp").alias("fp_a"))
-    b = small.select("band_idx", "band_key", F.col("doc_id").alias("dst"),
-                     F.col("fp").alias("fp_b"))
-    ham = F.bit_count(F.col("fp_a").bitwiseXOR(F.col("fp_b")))
-    small_edges = (
-        a.join(b, ["band_idx", "band_key"])
-        .filter((F.col("src") < F.col("dst")) & (ham <= dist))
-        .select("src", "dst", ham.alias("hamming"))
-    )
-
+    parts = [_self_pairs(small, keys, ["fp"], near)]
+    counts = [
+        F.countDistinct(*keys).alias("n_buckets"),
+        F.coalesce(F.max("bucket_size"), F.lit(0)).alias("max_bucket_size"),
+    ]
     if n_hot_rows == 0:
-        edges = (
-            small_edges.unionByName(member_edges)
-            .groupBy("src", "dst")
-            .agg(F.min("hamming").alias("hamming"))
+        stats = sized.groupBy().agg(*counts).select(
+            "n_buckets", F.lit(0).alias("n_capped_band_rows"),
+            "max_bucket_size", F.lit(0).alias("n_hot_band_rows"),
+        )
+    else:
+        # hot buckets: recursive pigeonhole (see docstring). All members
+        # agree on block band_idx, so re-band each on dist+1 sub-blocks of
+        # the COMPLEMENT bits — any hamming<=dist pair shares a sub-bucket.
+        zero = F.lit(0).cast("long")
+        subarr = None
+        for i, (off, w_blk) in enumerate(simhash_band_layout(64, dist)):
+            hi = off + w_blk
+            low = F.col("fp").bitwiseAND(F.lit((1 << off) - 1)) if off else zero
+            # NOTE: JVM shifts are mod-64 — shiftrightunsigned(fp, 64) is
+            # fp, not 0, so the last block needs the explicit zero branch
+            high = (
+                F.shiftleft(F.shiftrightunsigned(F.col("fp"), hi), off)
+                if hi < 64
+                else zero
+            )
+            comp_i = low.bitwiseOR(high)  # the (64 - w_blk)-bit complement
+            subs_i = F.array(
+                *[
+                    F.struct(
+                        F.lit(j).alias("sub_idx"),
+                        F.shiftrightunsigned(comp_i, soff)
+                        .bitwiseAND(F.lit((1 << sw) - 1))
+                        .alias("sub_bits"),
+                    )
+                    for j, (soff, sw) in enumerate(
+                        simhash_band_layout(64 - w_blk, dist)
+                    )
+                ]
+            )
+            on_i = F.col("band_idx") == i
+            subarr = (
+                F.when(on_i, subs_i)
+                if subarr is None
+                else subarr.when(on_i, subs_i)
+            )
+
+        sub = (
+            sized.filter(F.col("bucket_size") > bucket_cap)
+            .select("band_idx", "band_key", "doc_id", "fp",
+                    F.explode(subarr).alias("sub"))
             .select(
-                "src", "dst",
-                ((F.lit(64) - F.col("hamming")) / 64.0).alias("sim"),
+                "doc_id",
+                "fp",
+                F.xxhash64(
+                    "band_idx", "band_key", "sub.sub_idx", "sub.sub_bits"
+                ).alias("sub_key"),
             )
         )
+        sub_sized, n_sub_hot = _census(sub, ["sub_key"], bucket_cap)
+        ssmall = sub_sized.filter(F.col("bucket_size") <= bucket_cap)
+        parts.append(_self_pairs(ssmall, ["sub_key"], ["fp"], near))
+        if n_sub_hot:
+            # residual fallback: a sub-bucket that is ITSELF hot (approximate;
+            # counted in stats, never silent). The backbone's edges are not
+            # Hamming-checked by _capped_pairs, so the filter runs again here
+            shot = sub_sized.filter(F.col("bucket_size") > bucket_cap)
+            parts.append(
+                _capped_pairs(shot, ["sub_key"], bucket_cap, ["fp"], near)
+                .filter(near)
+            )
+        # n_capped_band_rows = rows that actually hit the LOSSY fallback
+        # (second-level hot sub-buckets); first-level hot rows are handled
+        # exactly and reported separately
         stats = (
             sized.groupBy()
-            .agg(
-                F.countDistinct("band_idx", "band_key").alias("n_buckets"),
-                F.coalesce(F.max("bucket_size"), F.lit(0)).alias(
-                    "max_bucket_size"
-                ),
+            .agg(*counts, _n_over(bucket_cap).alias("n_hot_band_rows"))
+            .crossJoin(
+                sub_sized.groupBy().agg(
+                    F.coalesce(_n_over(bucket_cap), F.lit(0)).alias(
+                        "n_capped_band_rows"
+                    )
+                )
             )
-            .withColumn("n_capped_band_rows", F.lit(0))
-            .withColumn("n_hot_band_rows", F.lit(0))
             .select(
                 "n_buckets", "n_capped_band_rows", "max_bucket_size",
                 "n_hot_band_rows",
             )
         )
-        return edges, stats
 
-    # hot buckets: recursive pigeonhole (see docstring). All members agree
-    # on block band_idx, so re-band each on dist+1 sub-blocks of the
-    # COMPLEMENT bits — any hamming<=dist pair shares a sub-bucket.
-    layout = simhash_band_layout(64, dist)
-    subarr = None
-    for i, (off, w_blk) in enumerate(layout):
-        hi = off + w_blk
-        low = (
-            F.col("fp").bitwiseAND(F.lit((1 << off) - 1))
-            if off > 0
-            else F.lit(0).cast("long")
-        )
-        # NOTE: JVM shifts are mod-64 — shiftrightunsigned(fp, 64) is fp,
-        # not 0, so the last block needs the explicit zero branch
-        high = (
-            F.shiftleft(F.shiftrightunsigned(F.col("fp"), hi), off)
-            if hi < 64
-            else F.lit(0).cast("long")
-        )
-        comp_i = low.bitwiseOR(high)  # the (64 - w_blk)-bit complement
-        subs_i = F.array(
-            *[
-                F.struct(
-                    F.lit(j).alias("sub_idx"),
-                    F.shiftrightunsigned(comp_i, soff)
-                    .bitwiseAND(F.lit((1 << sw) - 1))
-                    .alias("sub_bits"),
-                )
-                for j, (soff, sw) in enumerate(
-                    simhash_band_layout(64 - w_blk, dist)
-                )
-            ]
-        )
-        subarr = (
-            F.when(F.col("band_idx") == i, subs_i)
-            if subarr is None
-            else subarr.when(F.col("band_idx") == i, subs_i)
-        )
-
-    sub_rows = _persist_tracked(
-        hot.select("band_idx", "band_key", "doc_id", "fp",
-                   F.explode(subarr).alias("sub"))
-        .select(
-            "doc_id",
-            "fp",
-            F.xxhash64(
-                "band_idx", "band_key",
-                F.col("sub.sub_idx"), F.col("sub.sub_bits"),
-            ).alias("sub_key"),
-        )
-        .withColumn(
-            "sub_size", F.count("*").over(Window.partitionBy("sub_key"))
-        )
-        .filter(F.col("sub_size") > 1)
-    )  # five consumers (sub a/b, salt a/b, backbone) + stats
-    # persist-race rule again: the five consumers fan into ONE job — an
-    # eager pass here turns their race into one compute + cache reads
-    sub_rows.count()
-    ssmall = sub_rows.filter(F.col("sub_size") <= bucket_cap)
-    sa = ssmall.select("sub_key", F.col("doc_id").alias("src"),
-                       F.col("fp").alias("fp_a"))
-    sb = ssmall.select("sub_key", F.col("doc_id").alias("dst"),
-                       F.col("fp").alias("fp_b"))
-    sub_edges = (
-        sa.join(sb, "sub_key")
-        .filter((F.col("src") < F.col("dst")) & (ham <= dist))
-        .select("src", "dst", ham.alias("hamming"))
-    )
-
-    # residual fallback: a sub-bucket that is ITSELF hot — salted
-    # all-pairs within salt groups + hamming-filtered star/chain backbone
-    # (approximate; counted in stats, never silent)
-    shot = sub_rows.filter(F.col("sub_size") > bucket_cap)
-    n_salts = F.ceil(F.col("sub_size") / F.lit(bucket_cap)).cast("int")
-    salted = shot.withColumn(
-        "salt", F.pmod(F.xxhash64(F.col("doc_id")), n_salts)
-    )
-    sha = salted.select("sub_key", "salt", F.col("doc_id").alias("src"),
-                        F.col("fp").alias("fp_a"))
-    shb = salted.select("sub_key", "salt", F.col("doc_id").alias("dst"),
-                        F.col("fp").alias("fp_b"))
-    salt_edges = (
-        sha.join(shb, ["sub_key", "salt"])
-        .filter((F.col("src") < F.col("dst")) & (ham <= dist))
-        .select("src", "dst", ham.alias("hamming"))
-    )
-
-    w = Window.partitionBy("sub_key").orderBy("doc_id")
-    hot_ranked = shot.select(
-        "sub_key",
-        F.col("doc_id").alias("dst"),
-        F.col("fp").alias("fp_b"),
-        F.first("doc_id").over(w).alias("star_src"),
-        F.first("fp").over(w).alias("star_fp"),
-        F.lag("doc_id").over(w).alias("chain_src"),
-        F.lag("fp").over(w).alias("chain_fp"),
-    )
-    hot_edges = (
-        hot_ranked.select(
-            F.explode(
-                F.array_distinct(
-                    F.filter(
-                        F.array(
-                            F.struct(F.col("star_src").alias("src"),
-                                     F.col("star_fp").alias("fp_a")),
-                            F.struct(F.col("chain_src").alias("src"),
-                                     F.col("chain_fp").alias("fp_a")),
-                        ),
-                        lambda s: s["src"].isNotNull() & (s["src"] != F.col("dst")),
-                    )
-                )
-            ).alias("s"),
-            "dst",
-            "fp_b",
-        )
-        .select(F.col("s.src").alias("src"), "dst", F.col("s.fp_a").alias("fp_a"),
-                "fp_b")
-        .filter(F.bit_count(F.col("fp_a").bitwiseXOR(F.col("fp_b"))) <= dist)
-        .select("src", "dst",
-                F.bit_count(F.col("fp_a").bitwiseXOR(F.col("fp_b"))).alias("hamming"))
-    )
-
+    edges = member_edges
+    for p in parts:
+        edges = edges.unionByName(p.select("src", "dst", ham.alias("hamming")))
     edges = (
-        small_edges.unionByName(sub_edges).unionByName(salt_edges)
-        .unionByName(hot_edges)
-        .unionByName(member_edges)
-        .groupBy("src", "dst")
+        edges.groupBy("src", "dst")
         .agg(F.min("hamming").alias("hamming"))
         .select("src", "dst", ((F.lit(64) - F.col("hamming")) / 64.0).alias("sim"))
-    )
-    # n_capped_band_rows = rows that actually hit the LOSSY fallback
-    # (second-level hot sub-buckets); first-level hot rows are handled
-    # exactly now and reported separately
-    stats = (
-        sized.groupBy()
-        .agg(
-            F.countDistinct("band_idx", "band_key").alias("n_buckets"),
-            F.sum(
-                F.when(F.col("bucket_size") > bucket_cap, 1).otherwise(0)
-            ).alias("n_hot_band_rows"),
-            F.max("bucket_size").alias("max_bucket_size"),
-        )
-        .crossJoin(
-            sub_rows.groupBy().agg(
-                F.coalesce(
-                    F.sum(
-                        F.when(F.col("sub_size") > bucket_cap, 1).otherwise(0)
-                    ),
-                    F.lit(0),
-                ).alias("n_capped_band_rows")
-            )
-        )
-        .select(
-            "n_buckets", "n_capped_band_rows", "max_bucket_size",
-            "n_hot_band_rows",
-        )
     )
     return edges, stats
 
@@ -441,7 +421,18 @@ def candidate_pairs(
     size^2/2; capped-bucket counts reported in bucket_stats (no silent
     loss). ``collision_threshold`` > 1 keeps only pairs colliding in >=
     that many bands (reference audio J9 semantics, default 2 there; text
-    LSH uses 1).
+    LSH uses 1). This path runs ONE census job at build time (persist the
+    sized band table + count over-cap rows) so hot-free corpora get a
+    salt-free DAG — plans are not free to construct here, the same
+    adaptive trade the simhash operator makes.
+
+    ``bucket_cap`` <= 1 (with ``collision_threshold`` 1) is the clique
+    path, for callers whose buckets are TRUE cliques (substring/suffix
+    array: every member provably shares the bucket's k-gram): star edges
+    to the bucket minimum alone reproduce the clique's connected
+    component, from ONE window shuffle of the band table and no census
+    job. ``collision_threshold`` > 1 keeps the general path: it counts
+    bucket CO-OCCURRENCE of a pair, which star-only edges cannot express.
 
     ``group_col`` (suffix-array left-extension suppression — VERDICT r2
     "What's wrong #1"): a nullable column such that two same-bucket rows
@@ -454,237 +445,91 @@ def candidate_pairs(
     prev gram, whose bucket sits strictly earlier in both docs; doc starts
     have null prev, which never matches), while a shared span of S chars
     stops re-asserting the same pair in all S−L+1 of its buckets. NULLs
-    are grouped per-doc (never equal across docs). NOTE: on batch inputs
-    the general (cap>1) path runs ONE census job at build time (persist
-    the sized band table + count over-cap rows) so hot-free corpora get a
-    salt-free DAG — plans are not free to construct here, same adaptive
-    trade the simhash operator makes. With ``bucket_cap=1``
-    the clique star pairing drops edges whose member shares the STAR's
-    group (connectivity through the prev bucket's edges replaces them —
-    identical connected components, same single window shuffle as the
-    plain path); with larger caps the all-pairs self-joins gain an
-    inter-group filter — the pair SET is identical as long as the
-    ancestor (prev-gram) bucket where a suppressed pair re-emerges is not
-    itself hot-salted (salting may split the pair across salt groups; the
-    star/chain backbone still preserves CONNECTIVITY, which is what the
-    CC-consuming substring callers need — callers consuming raw pair sets
-    with finite caps should treat group_col as connectivity-preserving
-    only). Incompatible with ``collision_threshold`` > 1 (suppression
-    changes per-band collision counts).
+    are grouped per-doc (never equal across docs). On the clique path a
+    star edge is dropped when its member shares the STAR's group
+    (connectivity through the prev bucket's edges replaces it — identical
+    connected components, same single window shuffle); with larger caps
+    the all-pairs self-joins gain an inter-group filter — the pair SET is
+    identical as long as the ancestor (prev-gram) bucket where a
+    suppressed pair re-emerges is not itself hot-salted (salting may
+    split the pair across salt groups; the star/chain backbone still
+    preserves CONNECTIVITY, which is what the CC-consuming substring
+    callers need — callers consuming raw pair sets with finite caps
+    should treat group_col as connectivity-preserving only). Incompatible
+    with ``collision_threshold`` > 1 (suppression changes per-band
+    collision counts).
     """
     if group_col is not None and collision_threshold > 1:
         raise ValueError("group_col requires collision_threshold == 1")
+    keys = ["band_idx", "band_key"]
+    gcols = [] if group_col is None else ["_g"]
     # per-doc unique group for NULLs: doc starts must never merge across
     # docs (the suppression induction's base case)
-    _g = (
-        F.coalesce(
-            F.col(group_col), F.xxhash64(F.lit("_noprev"), F.col(id_col))
-        )
-        if group_col is not None
-        else None
+    rows = bands.select(
+        F.col(id_col).alias("doc_id"),
+        *keys,
+        *[
+            F.coalesce(
+                F.col(group_col), F.xxhash64(F.lit("_noprev"), F.col(id_col))
+            ).alias("_g")
+            for _ in gcols
+        ],
     )
 
-    if bucket_cap <= 1 and collision_threshold <= 1 and group_col is not None:
-        # clique path + suppression: SAME single window shuffle as the
-        # plain cap=1 path (one extra long column), but a star edge
-        # (star, m) is emitted only when m's group differs from the STAR's
-        # group — members sharing the star's prev gram connect to it in
-        # that earlier bucket instead (docstring induction), so interior
-        # buckets of an n-doc shared run emit ZERO rows pre-distinct.
-        w_b = Window.partitionBy("band_idx", "band_key")
-        annotated = (
-            bands.select(
-                F.col(id_col).alias("_m"),
-                _g.alias("_g"),
-                "band_idx",
-                "band_key",
-            )
-            .select(
-                "_m",
-                "_g",
-                F.min(F.struct("_m", "_g")).over(w_b).alias("_starrow"),
-                F.count("*").over(w_b).alias("bucket_size"),
-            )
-            .select(
-                "_m",
-                "_g",
-                F.col("_starrow._m").alias("_star"),
-                F.col("_starrow._g").alias("_gstar"),
-                "bucket_size",
-            )
-            .filter(F.col("bucket_size") > 1)
+    if bucket_cap <= 1 and collision_threshold <= 1:
+        # clique path: the star is the min (doc_id, group) row of its
+        # bucket, from the same window as the size — the per-bucket
+        # minimum never joins back. Rows sharing the star's group connect
+        # to it in that earlier bucket instead (docstring induction), so
+        # interior buckets of an n-doc shared run emit ZERO rows
+        # pre-distinct.
+        sized = _persist_tracked(
+            _sized(rows, keys, _star=F.min(F.struct("doc_id", *gcols)))
+            .drop(*keys)
         )
-        annotated = _persist_tracked(annotated)
+        is_star = F.col("doc_id") == F.col("_star.doc_id")
+        keep = ~is_star
+        for g in gcols:
+            keep = keep & (F.col(g) != F.col("_star." + g))
         pairs = (
-            annotated.filter(
-                (F.col("_m") != F.col("_star"))
-                & (F.col("_g") != F.col("_gstar"))
+            sized.filter(keep)
+            .select(
+                F.col("_star.doc_id").alias("src"), F.col("doc_id").alias("dst")
             )
-            .select(F.col("_star").alias("src"), F.col("_m").alias("dst"))
             .distinct()
         )
-        bucket_stats = annotated.groupBy().agg(
-            F.sum(
-                F.when(F.col("_m") == F.col("_star"), 1).otherwise(0)
-            ).alias("n_buckets"),
-            F.sum(
-                F.when(F.col("bucket_size") > bucket_cap, 1).otherwise(0)
-            ).alias("n_capped_band_rows"),
-            F.max("bucket_size").alias("max_bucket_size"),
-        )
-        return pairs, bucket_stats
-
-    # bucket_cap=1 fast path — for callers whose buckets are TRUE cliques
-    # (substring/suffix-array: every member provably shares the bucket's
-    # k-gram), star edges to the bucket minimum alone reproduce the clique's
-    # connected component; no chain, no salting. ONE shuffle of the band
-    # table (unordered window frames: min + count over the bucket key — the
-    # per-bucket minimum never joins back), then only rows inside multi-
-    # member buckets survive to the persisted frame that feeds both the
-    # edges and the stats jobs. collision_threshold > 1 keeps the general
-    # path: its semantics count bucket CO-OCCURRENCE of a pair, which
-    # star-only edges cannot express.
-    if bucket_cap <= 1 and collision_threshold <= 1:
-        w_b = Window.partitionBy("band_idx", "band_key")
-        annotated = _persist_tracked(
-            bands.select(
-                F.col(id_col).alias("_m"),
-                F.min(id_col).over(w_b).alias("_star"),
-                F.count("*").over(w_b).alias("bucket_size"),
-            ).filter(F.col("bucket_size") > 1)
-        )
-        star_pairs = annotated.filter(F.col("_m") != F.col("_star")).select(
-            F.col("_star").alias("src"), F.col("_m").alias("dst")
-        )
-        pairs = star_pairs.distinct()
-        # n_capped_band_rows keeps the general path's semantics: band ROWS
-        # inside over-cap buckets (here: every surviving row), not a bucket
-        # count — round-over-round metric comparisons depend on it
-        bucket_stats = annotated.groupBy().agg(
-            F.sum(
-                F.when(F.col("_m") == F.col("_star"), 1).otherwise(0)
-            ).alias("n_buckets"),
-            F.sum(
-                F.when(F.col("bucket_size") > bucket_cap, 1).otherwise(0)
-            ).alias("n_capped_band_rows"),
-            F.max("bucket_size").alias("max_bucket_size"),
-        )
-        return pairs, bucket_stats
-
-    if _g is not None:
-        bands = bands.withColumn("_g", _g)
-    sized = bands.withColumn(
-        "bucket_size", F.count("*").over(Window.partitionBy("band_idx", "band_key"))
-    )
-    # drop singleton buckets early — they can never produce a pair
-    sized = sized.filter(F.col("bucket_size") > 1)
-
-    # same treatment the simhash operator measured out: the census window
-    # feeds up to ~6 downstream scans (small a/b, salt a/b, star/chain
-    # window, stats) — persist once, and the ONE filter-count both
-    # materializes the cache and tells the driver whether the salted-hot
-    # stages need to exist at all (adaptive plan; on hot-free corpora the
-    # pair DAG is just the small self-join). Skipped for streaming inputs,
-    # where an eager action is illegal — they keep the full lazy plan.
-    n_hot_rows = None
-    if not bands.isStreaming:
-        sized = _persist_tracked(sized)
-        n_hot_rows = int(
-            sized.filter(F.col("bucket_size") > bucket_cap).count()
-        )
-
-    small = sized.filter(F.col("bucket_size") <= bucket_cap)
-
-    gcols = ["_g"] if _g is not None else []
-    inter_group = (
-        (F.col("_ga") != F.col("_gb")) if _g is not None else F.lit(True)
-    )
-    a = small.select(
-        "band_idx", "band_key", F.col(id_col).alias("src"),
-        *[F.col("_g").alias("_ga") for _ in gcols],
-    )
-    b = small.select(
-        "band_idx", "band_key", F.col(id_col).alias("dst"),
-        *[F.col("_g").alias("_gb") for _ in gcols],
-    )
-    small_pairs = (
-        a.join(b, ["band_idx", "band_key"])
-        .filter((F.col("src") < F.col("dst")) & inter_group)
-    )
-
-    if n_hot_rows == 0:
-        # census proved every bucket fits under the cap: the salted/hot
-        # subplan (two more joins + a window shuffle over the cache) would
-        # produce zero rows — drop it from the DAG entirely
-        all_pairs = small_pairs.select("src", "dst")
+        n_buckets = F.sum(F.when(is_star, 1).otherwise(0))
     else:
-        hot = sized.filter(F.col("bucket_size") > bucket_cap)
-
-        # hot buckets: SALT into ceil(size/cap) sub-buckets by a secondary
-        # hash (all-pairs within each salt group → local precision
-        # preserved, pair volume bounded by ~size*cap/2) PLUS star+chain
-        # edges across the whole bucket (global connectivity to the bucket
-        # minimum survives salting).
-        n_salts = F.ceil(F.col("bucket_size") / F.lit(bucket_cap)).cast("int")
-        salted = hot.withColumn(
-            "salt", F.pmod(F.xxhash64(F.col(id_col)), n_salts)
-        )
-        sa = salted.select(
-            "band_idx", "band_key", "salt", F.col(id_col).alias("src"),
-            *[F.col("_g").alias("_ga") for _ in gcols],
-        )
-        sb = salted.select(
-            "band_idx", "band_key", "salt", F.col(id_col).alias("dst"),
-            *[F.col("_g").alias("_gb") for _ in gcols],
-        )
-        salt_pairs = sa.join(sb, ["band_idx", "band_key", "salt"]).filter(
-            (F.col("src") < F.col("dst")) & inter_group
-        )
-
-        w = Window.partitionBy("band_idx", "band_key").orderBy(F.col(id_col))
-        hot_ranked = hot.select(
-            "band_idx",
-            "band_key",
-            F.col(id_col).alias("dst"),
-            F.first(id_col).over(w).alias("star_src"),
-            F.lag(id_col).over(w).alias("chain_src"),
-        )
-        hot_pairs = (
-            hot_ranked.select(
-                "band_idx",
-                "band_key",
-                F.explode(
-                    F.array_distinct(
-                        F.filter(
-                            F.array("star_src", "chain_src"),
-                            lambda s: s.isNotNull() & (s != F.col("dst")),
-                        )
-                    )
-                ).alias("src"),
-                "dst",
+        sized, n_hot_rows = _census(rows, keys, bucket_cap)
+        keep = (F.col("_g_a") != F.col("_g_b")) if gcols else None
+        small = sized.filter(F.col("bucket_size") <= bucket_cap)
+        all_pairs = _self_pairs(small, keys, gcols, keep).select("src", "dst")
+        if n_hot_rows:
+            # census saw an over-cap bucket: only then does the salted
+            # subplan (two more joins + a window shuffle) join the DAG
+            hot = sized.filter(F.col("bucket_size") > bucket_cap)
+            all_pairs = all_pairs.unionByName(
+                _capped_pairs(hot, keys, bucket_cap, gcols, keep).select(
+                    "src", "dst"
+                )
             )
-        )
+        if collision_threshold > 1:
+            pairs = (
+                all_pairs.groupBy("src", "dst")
+                .count()
+                .filter(F.col("count") >= collision_threshold)
+                .drop("count")
+            )
+        else:
+            pairs = all_pairs.distinct()
+        n_buckets = F.countDistinct(*keys)
 
-        all_pairs = small_pairs.select("src", "dst").unionByName(
-            salt_pairs.select("src", "dst")
-        ).unionByName(
-            hot_pairs.select("src", "dst")
-        )
-    if collision_threshold > 1:
-        pairs = (
-            all_pairs.groupBy("src", "dst")
-            .count()
-            .filter(F.col("count") >= collision_threshold)
-            .drop("count")
-        )
-    else:
-        pairs = all_pairs.distinct()
-
+    # n_capped_band_rows counts band ROWS inside over-cap buckets (on the
+    # clique path: every surviving row), not buckets — round-over-round
+    # metric comparisons depend on it
     bucket_stats = sized.groupBy().agg(
-        F.countDistinct("band_idx", "band_key").alias("n_buckets"),
-        F.sum(F.when(F.col("bucket_size") > bucket_cap, 1).otherwise(0)).alias(
-            "n_capped_band_rows"
-        ),
+        n_buckets.alias("n_buckets"),
+        _n_over(bucket_cap).alias("n_capped_band_rows"),
         F.max("bucket_size").alias("max_bucket_size"),
     )
     return pairs, bucket_stats

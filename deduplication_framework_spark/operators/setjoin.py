@@ -160,7 +160,11 @@ def _dense_allpairs_edges(
         (row_idx, codes >> 6),
         np.uint64(1) << (codes & 63).astype(np.uint64),
     )
-    bc = spark.sparkContext.broadcast((ids, lens, mat, int(len(uniq))))
+    from deduplication_framework_spark.operators.lsh import _track
+
+    # tracked: release_census_caches() unpersists it (executor copies
+    # only; a later recompute of the edges re-sends it from the driver)
+    bc = _track(spark.sparkContext.broadcast((ids, lens, mat, int(len(uniq)))))
 
     out_col = "sim" if mode == "jaccard" else "containment"
     schema = T.StructType(

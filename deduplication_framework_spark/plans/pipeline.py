@@ -172,7 +172,7 @@ def run_pipeline(
     # hash_family="jvm": minhash featurization is per-row JVM expressions
     # (functions/jvm_minhash.py — zero Python workers, zero shuffle); the
     # fused Arrow pass then only runs for the detectors that need it
-    jvm_mh = need_sig and getattr(cfg.dedup, "hash_family", "sha1") == "jvm"
+    jvm_mh = need_sig and cfg.dedup.hash_family == "jvm"
     arrow_sig = need_sig and not jvm_mh
     arrow_feats = need_feats and not jvm_mh
     feats = None
@@ -341,11 +341,12 @@ def run_pipeline(
         # without a store, branch DECLARATION is mostly lazy — the single
         # stats job below (or the caller's first action) schedules the
         # detector stages in one Spark job, which runs independent stages
-        # concurrently by itself. Exception: the simhash branch runs one
-        # small census job at build time (its adaptive hot-bucket switch
-        # needs the bucket-size census on the driver; see
-        # simhash_candidate_edges) — so a simhash plan is not free to
-        # construct, it costs featurization + one band-window pass.
+        # concurrently by itself. Exception: the minhash branch (with
+        # bucket_cap > 1) and the simhash branch each run one small
+        # census job at build time (their adaptive hot-bucket switch
+        # needs the bucket-size census on the driver; see candidate_pairs
+        # and simhash_candidate_edges) — so their plans are not free to
+        # construct, each costs featurization + one band-window pass.
         outs = [b() for b in branches]
     edge_parts.extend(o[0] for o in outs)
     stats_parts = [o[1] for o in outs if o[1] is not None]

@@ -4,7 +4,7 @@
 import pytest
 from pyspark.sql import functions as F
 
-from deduplication_framework_spark.api import METHODS, dedup_texts
+from deduplication_framework_spark.api import dedup_texts
 from deduplication_framework_spark.config import PipelineConfig
 from deduplication_framework_spark.oracle import numpy_oracle as O
 

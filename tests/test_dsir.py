@@ -71,8 +71,6 @@ def _hand_weights():
 
 @pytest.fixture(scope="module")
 def scored(spark):
-    from pyspark.sql import functions as F
-
     df = spark.createDataFrame(TEXTS, ["doc_id", "text", "is_t"])
     rows = {
         r.doc_id: r
@@ -106,8 +104,6 @@ def test_planted_shift_separates(scored):
 
 
 def test_duckdb_oracle_parity(spark):
-    from pyspark.sql import functions as F
-
     df = spark.createDataFrame(TEXTS, ["doc_id", "text", "is_t"])
     sp = (
         dsir_log_weights(df, target_col="is_t")

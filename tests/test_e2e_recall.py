@@ -4,7 +4,6 @@ assignments vs the sequential reference-semantics oracle on the planted
 reference clusters at identical shingle/band/row/bit-width configs.
 """
 
-import pytest
 from pyspark.sql import functions as F
 
 from deduplication_framework_spark.config import PipelineConfig

@@ -2,7 +2,6 @@
 
 import numpy as np
 import pytest
-from pyspark.sql import functions as F
 
 from deduplication_framework_spark.operators.embeddings import (
     cosine_pairs_bruteforce,
@@ -125,7 +124,6 @@ class TestD4Prune:
         """Two blocks with a KNOWN most-prototypical member: vec 0 (block
         0) and vec 100 (block 1) ARE the block mean direction; the rest
         fan out symmetrically around it."""
-        import math
         rng = np.random.default_rng(3)
         rows = []
         for blk, base_id in ((0, 0), (1, 100)):

@@ -8,7 +8,6 @@ kernels) so a kernel bug can't self-validate.
 import re
 
 import numpy as np
-import pytest
 
 from deduplication_framework_spark.functions import kernels as K
 

@@ -6,7 +6,6 @@ observability, and the bipartite eval-vs-train form."""
 import random
 
 import pytest
-from pyspark.sql import functions as F
 
 from deduplication_framework_spark.operators.lsh import (
     release_census_caches,

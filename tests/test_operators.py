@@ -6,7 +6,6 @@ import pytest
 from pyspark.sql import functions as F
 
 from deduplication_framework_spark.functions import kernels as K
-from deduplication_framework_spark.functions.text import jaccard_expr
 from deduplication_framework_spark.operators.cluster import (
     clusters_from_edges,
     keepers,

@@ -468,7 +468,6 @@ def test_minhash_jaccard_estimator_invariants(sf_dir, spark):
     dyadic and the 1e6 product is an exactly-representable integer, so
     round() has no edge in either engine); and the numpy third opinion
     agrees with the Spark n_match on every pair (non-vacuously)."""
-    import pandas as pd
 
     from __spark_entry__ import q_minhash_jaccard_estimates
 

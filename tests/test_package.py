@@ -150,14 +150,17 @@ def _unused_imports(path):
 
 
 def test_no_unused_imports():
-    """Every name imported by a package module (``__init__.py`` files
-    excepted: they import to re-export) is used in that module."""
-    pkg_root = os.path.join(ROOT, "deduplication_framework_spark")
+    """Every name imported by a package, ``tools/`` or ``tests/`` module
+    (``__init__.py`` files excepted: they import to re-export) is used in
+    that module."""
     hits = []
-    for dirpath, _, files in os.walk(pkg_root):
-        for f in sorted(files):
-            if f.endswith(".py") and f != "__init__.py":
-                path = os.path.join(dirpath, f)
-                rel = os.path.relpath(path, ROOT)
-                hits += [f"{rel}:{ln} {n}" for ln, n in _unused_imports(path)]
+    for top in ("deduplication_framework_spark", "tools", "tests"):
+        for dirpath, _, files in os.walk(os.path.join(ROOT, top)):
+            for f in sorted(files):
+                if f.endswith(".py") and f != "__init__.py":
+                    path = os.path.join(dirpath, f)
+                    rel = os.path.relpath(path, ROOT)
+                    hits += [
+                        f"{rel}:{ln} {n}" for ln, n in _unused_imports(path)
+                    ]
     assert not hits, "unused imports:\n" + "\n".join(hits)

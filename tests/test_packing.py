@@ -6,7 +6,6 @@ import hashlib
 
 import duckdb
 import pytest
-from pyspark.sql import functions as F
 
 from deduplication_framework_spark.operators.packing import (
     DEFAULT_SALT,

@@ -7,7 +7,6 @@ correctness tests can't see."""
 import contextlib
 import io
 
-import pytest
 from pyspark.sql import functions as F
 
 from deduplication_framework_spark.config import TextEmbeddingConfig

@@ -4,7 +4,6 @@ semantics live here), first-fail ordering, and engine parity."""
 
 import duckdb
 import pytest
-from pyspark.sql import functions as F
 
 from deduplication_framework_spark.functions.quality import (
     RULES,

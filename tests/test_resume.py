@@ -1,7 +1,6 @@
 """Resumable-restart tests (north_rule; reference analog: config-hash +
 _SUCCESS skip in /root/reference/pipelines/orchestrator.py:65-83)."""
 
-import json
 import os
 
 from deduplication_framework_spark.config import PipelineConfig

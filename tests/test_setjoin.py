@@ -9,7 +9,6 @@ hot-element corpora, and both positional-filter settings.
 import random
 
 import pytest
-from pyspark.sql import functions as F
 
 from deduplication_framework_spark.operators.lsh import release_census_caches
 from deduplication_framework_spark.operators.setjoin import ssjoin_jaccard
@@ -96,6 +95,33 @@ def test_dense_bound_checked_before_collect(spark, monkeypatch):
     release_census_caches()
     assert "path" not in stats
     assert got == _py_oracle(sets, 0.8)
+
+
+def test_dense_broadcast_released_with_census_caches(spark, monkeypatch):
+    """The dense path's bitmap broadcast is freed by
+    release_census_caches() — unpersisted, not destroyed, so the lazy
+    edges frame still recomputes to the same set after the release."""
+    from pyspark.broadcast import Broadcast
+
+    released = []
+    unpersist = Broadcast.unpersist
+
+    def spy(self, blocking=False):
+        released.append(self)
+        return unpersist(self, blocking)
+
+    monkeypatch.setattr(Broadcast, "unpersist", spy)
+    sets = _random_corpus(4)
+    df = spark.createDataFrame(
+        [(i, list(s)) for i, s in sets.items()], ["doc_id", "grams"]
+    )
+    edges, stats = ssjoin_jaccard(df, threshold=0.5, dense=True)
+    before = {(r.src, r.dst, r.sim) for r in edges.collect()}
+    release_census_caches()
+    assert stats["path"] == "dense"
+    assert len(released) == 1
+    assert {(r.src, r.dst, r.sim) for r in edges.collect()} == before
+    release_census_caches()
 
 
 def _random_corpus(seed, n_docs=60, universe=40):

@@ -80,12 +80,18 @@ def test_capping_bounds_pair_volume(spark, pages):
     bands.unpersist()
 
 
-def test_hot_free_plan_drops_salt_stages(spark):
+@pytest.mark.parametrize("op", ["candidate_pairs", "simhash_candidate_edges"])
+def test_hot_free_plan_drops_salt_stages(spark, op):
     """Adaptive DAG pin: the build-time census prunes the salted/hot
     subplan (salt joins + star/chain window) when no bucket exceeds the
     cap, and keeps it when one does. Pair sets stay correct either way
-    (covered above); this pins the plan shape itself."""
+    (covered above); this pins the plan shape itself. For SimHash the
+    pruned subplan is the recursive-pigeonhole re-banding (``sub_key``)."""
     from deduplication_framework_spark.operators.lsh import candidate_pairs
+
+    if op == "simhash_candidate_edges":
+        _simhash_hot_free_plan(spark)
+        return
 
     rows = [(i, 0, "b%d" % (i % 5)) for i in range(20)]
     bands = spark.createDataFrame(rows, ["doc_id", "band_idx", "band_key"])
@@ -103,3 +109,40 @@ def test_hot_free_plan_drops_salt_stages(spark):
     # for the exact regime)
     assert cold.count() == 5 * 6
     assert stats.collect()[0].n_capped_band_rows > 0
+
+
+def _simhash_hot_free_plan(spark):
+    """test_operators' recursive-pigeonhole fixture: 30 distinct
+    fingerprints sharing block 0, so that bucket is hot at cap 8."""
+    import numpy as np
+
+    from deduplication_framework_spark.functions.kernels import (
+        simhash_band_layout,
+    )
+    from deduplication_framework_spark.operators.lsh import (
+        simhash_candidate_edges,
+    )
+
+    rng = np.random.RandomState(7)
+    off0, w0 = simhash_band_layout(64, 10)[0]
+    mask_not0 = ~(((1 << w0) - 1) << off0) & 0xFFFFFFFFFFFFFFFF
+    fps = []
+    while len(fps) < 30:
+        v = int(rng.randint(0, 2**63, dtype=np.int64)) & mask_not0
+        if v not in fps:
+            fps.append(v)
+    df = spark.createDataFrame(list(enumerate(fps)), "doc_id long, simhash long")
+
+    cold, cold_stats = simhash_candidate_edges(df, dist=10, bucket_cap=2000)
+    cold_plan = cold._jdf.queryExecution().optimizedPlan().toString()
+    assert "sub_key" not in cold_plan, "hot-free census must prune sub-banding"
+
+    hot, stats = simhash_candidate_edges(df, dist=10, bucket_cap=8)
+    hot_plan = hot._jdf.queryExecution().optimizedPlan().toString()
+    assert "sub_key" in hot_plan
+    # recursive pigeonhole is exact: same edges either way
+    edge_set = lambda e: {(r.src, r.dst) for r in e.collect()}  # noqa: E731
+    assert edge_set(hot) == edge_set(cold)
+    s = stats.collect()[0]
+    assert s.n_hot_band_rows == 30 and s.n_capped_band_rows == 0
+    assert cold_stats.collect()[0].n_hot_band_rows == 0

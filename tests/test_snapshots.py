@@ -2,8 +2,6 @@
 
 import datetime
 
-from pyspark.sql import functions as F
-
 from deduplication_framework_spark.operators.snapshots import latest_snapshot
 
 

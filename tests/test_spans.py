@@ -4,8 +4,6 @@ import random
 
 import pytest
 
-from pyspark.sql import functions as F
-
 from deduplication_framework_spark.operators.spans import (
     dedup_spans,
     dedup_spans_df,

@@ -5,7 +5,6 @@ singleton fallback, determinism, rate behavior, and stats."""
 import hashlib
 
 import pytest
-from pyspark.sql import functions as F
 
 from deduplication_framework_spark.operators.splits import (
     DEFAULT_SALT,

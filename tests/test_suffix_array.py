@@ -203,19 +203,21 @@ def test_left_extension_suppression_collapses_interior_buckets(spark, seed):
         (r.src, r.dst) for r in plain.collect()
     }
 
-    # clique path (bucket_cap=1): identical connected components
+    # clique path (bucket_cap=1) and the salted hot path (bucket_cap=3:
+    # the 6-doc span buckets are over cap): identical connected components
     from deduplication_framework_spark.oracle.numpy_oracle import (
         clusters_to_pairs,
         pairs_to_labels,
     )
 
-    p_plain, _ = candidate_pairs(bands.drop("prev"), bucket_cap=1)
-    p_supp, _ = candidate_pairs(bands, bucket_cap=1, group_col="prev")
     ids = list(range(6))
     cc = lambda pairs: clusters_to_pairs(  # noqa: E731
         pairs_to_labels(ids, {(r.src, r.dst) for r in pairs.collect()})
     )
-    assert cc(p_supp) == cc(p_plain)
+    for cap in (1, 3):
+        p_plain, _ = candidate_pairs(bands.drop("prev"), bucket_cap=cap)
+        p_supp, _ = candidate_pairs(bands, bucket_cap=cap, group_col="prev")
+        assert cc(p_supp) == cc(p_plain), f"bucket_cap={cap}"
     bands.unpersist()
 
 
