@@ -8,7 +8,9 @@ Two Arrow UDFs exist: ``make_shingles_udf`` (the multi-granularity 64-bit
 shingle set that exact-Jaccard verification uses) and
 ``make_fused_features_udf``, the only featurization path for MinHash
 signatures, LSH verification features, SimHash fingerprints and winnowing
-fingerprints. Both delegate per-document math to
+fingerprints; ``minhash_features`` is the one MinHash featurizer every
+caller uses (the fused UDF, or the JVM family). Both UDFs delegate
+per-document math to
 :mod:`deduplication_framework_spark.functions.kernels` — the spec, pinned
 to datasketch / simhash-lib by tests/test_kernels.py and shared with the
 NumPy oracle — so Spark-vs-oracle tests isolate the *distributed*
@@ -21,7 +23,7 @@ from typing import Optional
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import Column
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.pandas.functions import pandas_udf
@@ -156,12 +158,13 @@ def make_fused_features_udf(
         emb.strip_mode,
     )
     num_perm, max_words, max_grams = ded.num_perm, ded.max_words, ded.max_char_grams
-    hash_family = getattr(ded, "hash_family", "sha1")
+    hash_family = ded.hash_family
     need_hash_family = with_minhash or with_lsh_feats
     if need_hash_family and hash_family not in ("sha1", "kr32", "oph"):
-        # "jvm" never reaches the Arrow path: the pipeline routes it to
-        # functions/jvm_minhash.jvm_minhash_features (per-row JVM exprs)
-        # and only asks this UDF for the non-minhash detector features
+        # "jvm" never reaches the Arrow path: minhash_features routes it
+        # to functions/jvm_minhash.jvm_minhash_features (per-row JVM
+        # exprs) and the pipeline only asks this UDF for the non-minhash
+        # detector features
         raise ValueError(
             f"hash_family {hash_family!r} has no Arrow featurization path"
             " (valid here: sha1, kr32, oph; jvm is handled by"
@@ -286,6 +289,50 @@ def make_fused_features_udf(
         return pd.DataFrame(cols, columns=names)
 
     return fused_features
+
+
+def minhash_features(
+    df: DataFrame,
+    emb: TextEmbeddingConfig,
+    ded: TextDedupConfig,
+    *,
+    id_col: str = "doc_id",
+    text_col: str = "text",
+    with_shingles: bool = True,
+    include_words: bool = True,
+) -> DataFrame:
+    """(id, text) → (id, sig[, shingles]): the one MinHash featurizer,
+    dispatching on ``ded.hash_family``. ``jvm`` builds both columns from
+    per-row JVM expressions (``functions/jvm_minhash.jvm_minhash_features``:
+    no Python workers); every other family is one pass of the fused Arrow
+    UDF above. ``shingles`` are the LSH features' own sorted-distinct ids,
+    the input ``operators/verify.verify_jaccard`` expects; callers that
+    verify on other features pass ``with_shingles=False``."""
+    if ded.hash_family == "jvm":
+        from deduplication_framework_spark.functions.jvm_minhash import (
+            jvm_minhash_features,
+        )
+
+        feats = jvm_minhash_features(
+            df,
+            num_perm=ded.num_perm,
+            ngram_size=emb.ngram_size,
+            max_words=ded.max_words,
+            max_char_grams=ded.max_char_grams,
+            include_words=include_words,
+            id_col=id_col,
+            text_col=text_col,
+            emb=emb,
+        )
+        return feats.select(id_col, "sig", *(["shingles"] if with_shingles else []))
+    fused = make_fused_features_udf(
+        emb,
+        ded,
+        with_minhash=True,
+        with_lsh_feats=with_shingles,
+        include_words=include_words,
+    )
+    return df.select(id_col, fused(text_col).alias("f")).select(id_col, "f.*")
 
 
 # ---------------------------------------------------------------------------

@@ -50,10 +50,10 @@ from pyspark.sql import functions as F
 
 from ..config import PipelineConfig
 from ..functions import kernels as K
-from ..functions.text import make_fused_features_udf
+from ..functions.text import minhash_features
 from .bloom import BloomFilter, bloom_build, bloom_tag
 from .lsh import _persist_tracked, minhash_bands
-from .verify import _EPS, make_sorted_jaccard_udf
+from .verify import _jaccard_at_least
 
 __all__ = [
     "incremental_near_new_rows",
@@ -62,34 +62,6 @@ __all__ = [
     "append_fuzzy_index",
     "load_admitted_texts",
 ]
-
-
-def _featurize(df: DataFrame, cfg: PipelineConfig, id_col: str, text_col: str):
-    if cfg.dedup.hash_family == "jvm":
-        # the Python-worker-free family (functions/jvm_minhash.py) emits
-        # the same (_id, sig, shingles) contract; the stored-index config
-        # hash covers hash_family, so an index built under one family is
-        # never silently verified under another
-        from deduplication_framework_spark.functions.jvm_minhash import (
-            jvm_minhash_features,
-        )
-
-        return jvm_minhash_features(
-            df,
-            num_perm=cfg.dedup.num_perm,
-            ngram_size=cfg.embedding.ngram_size,
-            max_words=cfg.dedup.max_words,
-            max_char_grams=cfg.dedup.max_char_grams,
-            id_col=id_col,
-            text_col=text_col,
-            emb=cfg.embedding,
-        ).select(F.col(id_col).alias("_id"), "sig", "shingles")
-    fused = make_fused_features_udf(
-        cfg.embedding, cfg.dedup, with_minhash=True, with_lsh_feats=True
-    )
-    return df.select(
-        F.col(id_col).alias("_id"), fused(text_col).alias("f")
-    ).select("_id", "f.*")
 
 
 def incremental_near_new_rows(
@@ -129,9 +101,16 @@ def incremental_near_new_rows(
     cfg = cfg or PipelineConfig()
     b, r = K.optimal_band_param(cfg.dedup.threshold, cfg.dedup.num_perm)
 
+    def featurize(df):
+        # the stored-index config hash covers hash_family, so an index
+        # built under one family is never verified under another
+        return minhash_features(
+            df, cfg.embedding, cfg.dedup, id_col=id_col, text_col=text_col
+        ).select(F.col(id_col).alias("_id"), "sig", "shingles")
+
     computed_feats = old_features is None
     if computed_feats:
-        old_feats = _featurize(old_df, cfg, id_col, text_col)
+        old_feats = featurize(old_df)
     else:
         old_feats = old_features.select(
             F.col(id_col).alias("_id"), "sig", "shingles"
@@ -163,7 +142,7 @@ def incremental_near_new_rows(
             fpp=fpp,
         )
 
-    new_feats = _persist_tracked(_featurize(new_df, cfg, id_col, text_col))
+    new_feats = _persist_tracked(featurize(new_df))
     n_batch = new_feats.count()
     tagged = _persist_tracked(
         bloom_tag(
@@ -245,7 +224,8 @@ def incremental_near_new_rows(
     )
     stats["n_candidate_pairs"] = pairs.count()
 
-    th = float(cfg.dedup.threshold)
+    # each side joins its OWN features: batch and history ids may overlap
+    # (or differ in type) without naming the same document
     pv = pairs.join(
         new_feats.select("_id", F.col("shingles").alias("_sh_n")), "_id"
     ).join(
@@ -254,15 +234,8 @@ def incremental_near_new_rows(
         ),
         "_old_id",
     )
-    if th > 0:
-        # -_EPS mirrors verify_jaccard's guard: recall-safe for any
-        # threshold whose double literal rounds above the rational value
-        sa, sb = F.size("_sh_n"), F.size("_sh_o")
-        pv = pv.filter((sa >= th * sb - _EPS) & (sb >= th * sa - _EPS))
-    sim = make_sorted_jaccard_udf()(F.col("_sh_n"), F.col("_sh_o"))
     dup_ids = _persist_tracked(
-        pv.withColumn("_sim", sim)
-        .filter(F.col("_sim") >= th)
+        _jaccard_at_least(pv, "_sh_n", "_sh_o", cfg.dedup.threshold)
         .select(F.col("_id").alias(id_col))
         .distinct()
     )
@@ -339,21 +312,16 @@ def save_fuzzy_index(
     hg = f"{_index_hash(cfg, fpp, src_ident)}|gen={uuid.uuid4().hex[:12]}"
 
     feats = store.write(
-        _featurize(old_df, cfg, id_col, text_col).select(
-            F.col("_id").alias("doc_id"), "sig", "shingles"
-        ),
+        minhash_features(
+            old_df, cfg.embedding, cfg.dedup, id_col=id_col, text_col=text_col
+        ).select(F.col(id_col).alias("doc_id"), "sig", "shingles"),
         _IDX_FEATURES,
         hg,
         lineage=["history"],
     )
     n_old = store.read_commit(_IDX_FEATURES).rows
     bands = store.write(
-        minhash_bands(
-            feats.select(F.col("doc_id").alias("_id"), "sig"),
-            b,
-            r,
-            id_col="_id",
-        ).select(F.col("_id").alias("doc_id"), "band_key"),
+        minhash_bands(feats, b, r).select("doc_id", "band_key"),
         _IDX_BANDS,
         hg,
         lineage=[_IDX_FEATURES],
@@ -516,9 +484,9 @@ def append_fuzzy_index(
         # lineage over the index tables being replaced
         fresh.write.mode("overwrite").parquet(f"{tmp}/texts")
         new_texts = spark.read.parquet(f"{tmp}/texts")
-        _featurize(new_texts, cfg, "doc_id", "text").select(
-            F.col("_id").alias("doc_id"), "sig", "shingles"
-        ).write.mode("overwrite").parquet(f"{tmp}/feats")
+        minhash_features(new_texts, cfg.embedding, cfg.dedup).write.mode(
+            "overwrite"
+        ).parquet(f"{tmp}/feats")
         new_feats = spark.read.parquet(f"{tmp}/feats")
         n_added = new_feats.count()
         if n_added == 0:
@@ -528,12 +496,7 @@ def append_fuzzy_index(
                 "m_bits": old_bloom.m_bits,
                 "k": old_bloom.k,
             }
-        new_bands = minhash_bands(
-            new_feats.select(F.col("doc_id").alias("_id"), "sig"),
-            b,
-            r,
-            id_col="_id",
-        ).select(F.col("_id").alias("doc_id"), "band_key")
+        new_bands = minhash_bands(new_feats, b, r).select("doc_id", "band_key")
 
         # part filter over JUST the new band rows at the stored
         # geometry: Bloom union at identical (m, k) is bit-exact with a

@@ -29,12 +29,17 @@ Capped-bucket counts are reported in the metrics dict (no silent loss).
 
 from __future__ import annotations
 
-from typing import Tuple
+from typing import Optional, Tuple
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from deduplication_framework_spark.functions.kernels import simhash_band_layout
+from deduplication_framework_spark.config import PipelineConfig
+from deduplication_framework_spark.functions.kernels import (
+    optimal_band_param,
+    simhash_band_layout,
+)
+from deduplication_framework_spark.operators.verify import verify_jaccard
 
 # Band/census frames persisted by the operators below scale with the corpus
 # (all multi-member band rows), unlike the small per-call frames the
@@ -533,3 +538,33 @@ def candidate_pairs(
         F.max("bucket_size").alias("max_bucket_size"),
     )
     return pairs, bucket_stats
+
+
+def minhash_edges(
+    sigs: DataFrame,
+    verify_feats: Optional[DataFrame],
+    cfg: PipelineConfig,
+    id_col: str = "doc_id",
+) -> Tuple[DataFrame, DataFrame]:
+    """The paper's MinHash candidate → verification chain, one copy for
+    every caller: ``(id, sig)`` → bands at ``optimal_band_param(threshold,
+    num_perm)`` → ``candidate_pairs`` (``cfg.spark.bucket_cap``) →
+    edges(src, dst, sim) with sim = exact Jaccard over ``verify_feats``
+    ``(id, shingles)`` (``verify_jaccard`` at ``cfg.dedup.threshold``), or
+    NULL sim (every band collision is an edge) when ``verify_feats`` is
+    None. Returns ``(edges, bucket_stats)``; builds ``candidate_pairs``'
+    census at call time."""
+    b, r = optimal_band_param(cfg.dedup.threshold, cfg.dedup.num_perm)
+    # no bands.persist() here: candidate_pairs' build-time census persists
+    # + materializes the sized band table, after which bands itself has
+    # exactly one consumer (filling that cache)
+    bands = minhash_bands(sigs, b, r, id_col=id_col)
+    pairs, stats = candidate_pairs(
+        bands, bucket_cap=cfg.spark.bucket_cap, id_col=id_col
+    )
+    if verify_feats is None:
+        return pairs.withColumn("sim", F.lit(None).cast("double")), stats
+    edges = verify_jaccard(
+        pairs, verify_feats, cfg.dedup.threshold, id_col=id_col
+    )
+    return edges, stats

@@ -180,10 +180,12 @@ def near_dedup_spans(
     2. reps get a 64-bit identity ``xxhash64(span)`` (distinct texts by
        construction; a collision would weld two clusters at ~2^-64 per
        rep pair — the budget already accepted by ``operators/exact.py``);
-    3. datasketch-spec MinHash signatures → LSH bands →
-       ``candidate_pairs`` (salted/capped hot buckets) → exact-Jaccard
-       verification (``verify_jaccard``) → ``clusters_from_edges`` (the
-       driver union-find when the edges fit ``cc_broadcast_threshold``);
+    3. datasketch-spec MinHash signatures (``minhash_features``, sha1)
+       → the pipeline's one MinHash edge chain ``lsh.minhash_edges``
+       (bands → ``candidate_pairs`` with salted/capped hot buckets →
+       ``verify_jaccard`` over the reps' full multi-granularity shingles)
+       → ``clusters_from_edges`` (the driver union-find when the edges
+       fit ``cc_broadcast_threshold``);
     4. per cluster, the surviving span is the rep with the smallest
        (order, pos) — min-of-struct, map-side combinable;
     5. reassembly via the shared ``reassemble_spans`` shuffle plan.
@@ -196,11 +198,9 @@ def near_dedup_spans(
     from dataclasses import replace
 
     from ..config import PipelineConfig
-    from ..functions import kernels as K
-    from ..functions.text import make_fused_features_udf, make_shingles_udf
+    from ..functions.text import make_shingles_udf, minhash_features
     from .cluster import clusters_from_edges
-    from .lsh import _persist_tracked, candidate_pairs, minhash_bands
-    from .verify import verify_jaccard
+    from .lsh import _persist_tracked, minhash_edges
 
     cfg = cfg or PipelineConfig()
     order_col = order_col or id_col
@@ -217,24 +217,13 @@ def near_dedup_spans(
     n_reps = reps.count()  # eager: one materialization before the fan-out
 
     # sha1 signatures whatever cfg.dedup.hash_family says
-    sig_udf = make_fused_features_udf(
-        cfg.embedding,
-        replace(cfg.dedup, hash_family="sha1"),
-        with_minhash=True,
-    )
-    b, r = K.optimal_band_param(cfg.dedup.threshold, cfg.dedup.num_perm)
-    bands = minhash_bands(
-        reps.select("_rid", sig_udf(F.col("span"))["sig"].alias("sig")),
-        b, r, id_col="_rid",
-    )
-    pairs, bucket_stats = candidate_pairs(
-        bands, bucket_cap=cfg.spark.bucket_cap, id_col="_rid"
+    sigs = minhash_features(
+        reps, cfg.embedding, replace(cfg.dedup, hash_family="sha1"),
+        id_col="_rid", text_col="span", with_shingles=False,
     )
     shingle_udf = make_shingles_udf(cfg.embedding)
     feats = reps.select("_rid", shingle_udf(F.col("span")).alias("shingles"))
-    edges = verify_jaccard(
-        pairs, feats, cfg.dedup.threshold, id_col="_rid", feat_col="shingles"
-    )
+    edges, bucket_stats = minhash_edges(sigs, feats, cfg, id_col="_rid")
     labels, cc_rounds = clusters_from_edges(
         reps, edges, id_col="_rid",
         driver_threshold=cfg.spark.cc_broadcast_threshold,

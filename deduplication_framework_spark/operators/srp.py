@@ -32,6 +32,8 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from deduplication_framework_spark.operators.lsh import _track, candidate_pairs
+
 
 def srp_bands(
     df: DataFrame,
@@ -56,7 +58,8 @@ def srp_bands(
         dim = len(probe[0][0])
     rng = np.random.RandomState(seed)
     planes = rng.randn(b * r, dim)
-    bc = spark.sparkContext.broadcast(planes)
+    # tracked: release_census_caches() unpersists it with the band caches
+    bc = _track(spark.sparkContext.broadcast(planes))
     weights = (1 << np.arange(r, dtype=np.int64))
 
     def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -106,7 +109,6 @@ def srp_candidate_edges(
     keep recall ~1 while unrelated pairs (cos <= 0.2, p <= 0.56,
     P <= 1.6% per band) rarely collide."""
     from deduplication_framework_spark.operators.embeddings import _dot_expr
-    from deduplication_framework_spark.operators.lsh import candidate_pairs
 
     bands = srp_bands(
         df, b=b, r=r, seed=seed, id_col=id_col, vec_col=vec_col, dim=dim

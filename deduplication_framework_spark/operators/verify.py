@@ -1,10 +1,10 @@
 """Candidate-pair verification (SURVEY.md J1/J9/P9).
 
 Joins candidate (src, dst) pairs back to per-doc features and keeps pairs
-passing the exact predicate — all JVM-side expressions:
+passing the exact predicate:
 
-* Jaccard on hashed shingle sets: size(array_intersect)/size(array_union),
-  both-empty → 1.0 (reference ``pipeline_api.py:478-485``).
+* Jaccard on hashed sorted-distinct shingle sets: a linear-merge Arrow
+  UDF, both-empty → 1.0 (reference ``pipeline_api.py:478-485``).
 * SimHash: bit_count(a XOR b) <= dist (reference ``pipeline_api.py:393``).
 * MinHash estimate: fraction of agreeing signature positions (what
   datasketch's LSH *implies*; the reference's ours_lsh accepts any band
@@ -26,7 +26,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.pandas.functions import pandas_udf
 
-from deduplication_framework_spark.functions.text import hamming_expr, jaccard_expr
+from deduplication_framework_spark.functions.text import hamming_expr
 
 # conservative guard for float threshold arithmetic in recall-safe
 # prefilters: a threshold whose double literal rounds ABOVE its rational
@@ -72,27 +72,15 @@ def make_sorted_jaccard_udf():
     return sorted_jaccard
 
 
-def verify_jaccard(
-    pairs: DataFrame,
-    features: DataFrame,
-    threshold: float,
-    id_col: str = "doc_id",
-    feat_col: str = "shingles",
-    size_prefilter: bool = True,
-    use_sorted_udf: bool = True,
+def _jaccard_at_least(
+    joined: DataFrame, a, b, threshold: float, size_prefilter: bool = True
 ) -> DataFrame:
-    """→ edges(src, dst, sim) with sim = exact Jaccard >= threshold.
-
-    ``use_sorted_udf`` (default): linear-merge Jaccard via Arrow UDF —
-    requires the feature arrays to be sorted-distinct (all our feature UDFs
-    emit np.unique output). Set False for arbitrary arrays (JVM
-    array_intersect path) — that mode also disables the size prefilter,
-    whose |A| >= θ|B| necessity argument only holds when array length =
-    SET size (a duplicate-laden array can pass set-Jaccard yet fail the
-    raw-length ratio)."""
-    joined = _attach(pairs, features, id_col, [feat_col])
-    a, b = F.col(f"{feat_col}_a"), F.col(f"{feat_col}_b")
-    if size_prefilter and threshold > 0 and use_sorted_udf:
+    """``joined`` plus ``sim`` = exact Jaccard of the sorted-distinct
+    array columns ``a``/``b``, keeping rows with sim >= threshold: the
+    size guard, the linear-merge UDF and the threshold filter that every
+    Jaccard verifier here shares."""
+    a, b = F.col(a), F.col(b)
+    if size_prefilter and threshold > 0:
         # |A| >= θ|B| and |B| >= θ|A| are necessary for J >= θ; -_EPS
         # mirrors the setjoin candidate-side guard so the prune is
         # provably recall-safe for ANY threshold literal (ADVICE r4)
@@ -100,12 +88,29 @@ def verify_jaccard(
         joined = joined.filter(
             (sa >= threshold * sb - _EPS) & (sb >= threshold * sa - _EPS)
         )
-    sim = make_sorted_jaccard_udf()(a, b) if use_sorted_udf else jaccard_expr(a, b)
-    return (
-        joined.withColumn("sim", sim)
-        .filter(F.col("sim") >= threshold)
-        .select("src", "dst", "sim")
+    return joined.withColumn("sim", make_sorted_jaccard_udf()(a, b)).filter(
+        F.col("sim") >= threshold
     )
+
+
+def verify_jaccard(
+    pairs: DataFrame,
+    features: DataFrame,
+    threshold: float,
+    id_col: str = "doc_id",
+    feat_col: str = "shingles",
+    size_prefilter: bool = True,
+) -> DataFrame:
+    """→ edges(src, dst, sim) with sim = exact Jaccard >= threshold.
+
+    Linear-merge Jaccard via Arrow UDF: the feature arrays must be
+    sorted-distinct (every feature UDF here emits np.unique output), which
+    is also what makes the size prefilter's |A| >= θ|B| necessity argument
+    hold (array length = SET size)."""
+    joined = _attach(pairs, features, id_col, [feat_col])
+    return _jaccard_at_least(
+        joined, f"{feat_col}_a", f"{feat_col}_b", threshold, size_prefilter
+    ).select("src", "dst", "sim")
 
 
 def verify_hamming(

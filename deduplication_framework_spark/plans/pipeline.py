@@ -24,11 +24,10 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from deduplication_framework_spark.config import PipelineConfig
-from deduplication_framework_spark.functions import kernels as K
-from deduplication_framework_spark.functions.jvm_minhash import (
-    jvm_minhash_features,
+from deduplication_framework_spark.functions.text import (
+    make_fused_features_udf,
+    minhash_features,
 )
-from deduplication_framework_spark.functions.text import make_fused_features_udf
 from deduplication_framework_spark.operators.cluster import (
     clusters_from_edges,
     keepers as keepers_op,
@@ -36,11 +35,10 @@ from deduplication_framework_spark.operators.cluster import (
 from deduplication_framework_spark.operators.exact import exact_dedup
 from deduplication_framework_spark.operators.lsh import (
     candidate_pairs,
-    minhash_bands,
+    minhash_edges,
     release_census_caches,
     simhash_candidate_edges,
 )
-from deduplication_framework_spark.operators.verify import verify_jaccard
 from deduplication_framework_spark.plans.checkpoint import ParquetTableStore
 
 ALL_DETECTORS = ("exact", "minhash", "simhash", "substring", "suffix_array")
@@ -101,6 +99,96 @@ def prepare_docs(
     )
 
 
+class StageRunner:
+    """Config-hash stage resume: ``stage(name, make, lineage)`` reuses a
+    stage committed under ``chash`` (recording ``<name>.resumed`` in
+    ``metrics``), else computes ``make()`` and commits it through the
+    store. ``persist=True`` marks stages consumed by >1 downstream action:
+    with a store they are materialized to parquet anyway; without one they
+    are cached so UDF stages don't recompute per action."""
+
+    def __init__(self, store: Optional[ParquetTableStore], chash: str):
+        self.store, self.chash = store, chash
+        self.metrics: Dict[str, float] = {}
+
+    def valid(self, name: str) -> bool:
+        return self.store is not None and self.store.is_valid(name, self.chash)
+
+    def __call__(self, name: str, make, lineage: List[str], m: Dict = None,
+                 persist: bool = False) -> DataFrame:
+        if self.valid(name):
+            self.metrics[f"{name}.resumed"] = 1.0
+            return self.store.read(name)
+        df = make()
+        if self.store is not None:
+            df = self.store.write(
+                df, name, self.chash, lineage=lineage, metrics=m or {}
+            )
+        elif persist:
+            df = df.persist()
+        return df
+
+
+def cluster_and_keep(
+    stage: StageRunner, docs: DataFrame, make_edges, cfg: PipelineConfig
+) -> PipelineResult:
+    """The pipeline's tail for any edge builder: ``make_edges()`` →
+    edges(src, dst, sim) → connected components → min-id keepers, each a
+    resumable stage of ``stage``, then the band/census caches are
+    released."""
+    edges = stage(
+        "edges", lambda: make_edges().select("src", "dst", "sim"),
+        ["detectors"], persist=True,
+    )
+
+    # CC runs inside the stage's make(), so a resume that finds the
+    # clusters commit valid skips the loop and takes its round count from
+    # the commit's recorded cc_rounds; on a fresh run stage() commits cc_m
+    # after make() has filled it
+    cc_m: Dict[str, float] = {}
+
+    def _clusters():
+        # with a store, CC rounds checkpoint through it (atomic commits a
+        # real cluster can resume/inspect — the Iceberg analog of
+        # localCheckpoint; reference _SUCCESS-per-stage contract extended
+        # to loop state)
+        cc_ckpt = None
+        if stage.store is not None:
+            _round = [0]
+
+            def cc_ckpt(df):
+                _round[0] += 1
+                return stage.store.write(
+                    df, f"cc_state_{_round[0]}", stage.chash, lineage=["edges"]
+                )
+
+        clusters, rounds = clusters_from_edges(
+            docs,
+            edges.select("src", "dst"),
+            driver_threshold=cfg.spark.cc_broadcast_threshold,
+            checkpoint=cc_ckpt,
+        )
+        cc_m["cc_rounds"] = rounds
+        return clusters
+
+    clusters = stage("clusters", _clusters, ["edges"], cc_m)
+    if "cc_rounds" not in cc_m:
+        cc_m = stage.store.read_commit("clusters").metrics
+    cc_rounds = int(cc_m.get("cc_rounds", 0))
+    stage.metrics["cc_rounds"] = float(cc_rounds)
+
+    keep = stage(
+        "keepers", lambda: keepers_op(docs, clusters), ["clusters", "docs"]
+    )
+
+    # every consumer of the detectors' band/census caches has materialized
+    # by now (stats collected, edges cached + consumed by CC) — free the
+    # corpus-scale cache entries so repeated runs in one session don't
+    # stack them until LRU evicts something live
+    release_census_caches()
+    return PipelineResult(docs, edges, clusters, keep, cc_rounds, stage.metrics)
+
+
 def run_pipeline(
     spark: SparkSession,
     pages: DataFrame,
@@ -124,25 +212,10 @@ def run_pipeline(
         raise ValueError(
             f"unknown detector(s) {sorted(unknown)}; valid: {ALL_DETECTORS}"
         )
-    chash = effective_config_hash(cfg, detectors, verify, input_tag)
-    metrics: Dict[str, float] = {}
-
-    def stage(name: str, make: "callable", lineage: List[str], m: Dict = None,
-              persist: bool = False):
-        """config-hash resume wrapper: reuse a committed stage, else compute.
-
-        ``persist=True`` marks stages consumed by >1 downstream action: with
-        a store they are materialized to parquet anyway; without one they are
-        cached so UDF stages don't recompute per action."""
-        if store is not None and store.is_valid(name, chash):
-            metrics[f"{name}.resumed"] = 1.0
-            return store.read(name)
-        df = make()
-        if store is not None:
-            df = store.write(df, name, chash, lineage=lineage, metrics=m or {})
-        elif persist:
-            df = df.persist()
-        return df
+    stage = StageRunner(
+        store, effective_config_hash(cfg, detectors, verify, input_tag)
+    )
+    metrics = stage.metrics
 
     docs = stage("docs", lambda: prepare_docs(pages), ["pages"])
 
@@ -214,13 +287,8 @@ def run_pipeline(
     if jvm_mh:
         mh_feats = stage(
             "features_minhash_jvm",
-            lambda: jvm_minhash_features(
-                uniq_docs,
-                num_perm=cfg.dedup.num_perm,
-                ngram_size=cfg.embedding.ngram_size,
-                max_words=cfg.dedup.max_words,
-                max_char_grams=cfg.dedup.max_char_grams,
-                emb=cfg.embedding,
+            lambda: minhash_features(
+                uniq_docs, cfg.embedding, cfg.dedup, with_shingles=need_feats
             ),
             ["docs_uniq"],
             persist=True,
@@ -231,59 +299,22 @@ def run_pipeline(
             mh_feats.count()
     lsh_feats = mh_feats.select("doc_id", "shingles") if need_feats else None
 
-    # ---- detector branches: each returns (edges, stats-with-detector-col).
-    # Stats are NOT collected here — they are unioned into ONE deferred job
-    # after all branches are declared, so detector DAGs run concurrently
-    # (round 1 ran an eager 1-row collect() per detector, serializing them).
-    def _resume_branch(name: str, det: str):
-        """Resumed detector: reuse the committed edges AND its recorded
-        bucket metrics (the deferred stats job wrote them into the commit)
-        instead of re-running the banding jobs."""
-        c = store.read_commit(name)
-        if c is not None:
-            for k, v in c.metrics.items():
-                metrics[f"{det}.{k}"] = float(v)
-        return stage(name, None, []), None
+    # ---- detector branches: each builder returns (edges, stats); branch()
+    # stages the edges and tags the stats with the detector. Stats are NOT
+    # collected here — they are unioned into ONE deferred job after all
+    # branches are declared, so detector DAGs run concurrently (round 1
+    # ran an eager 1-row collect() per detector, serializing them).
+    def _minhash():
+        return minhash_edges(mh_feats.select("doc_id", "sig"), lsh_feats, cfg)
 
-    def _minhash_branch():
-        name = "edges_minhash"
-        if store is not None and store.is_valid(name, chash):
-            return _resume_branch(name, "minhash")
-        b, r = K.optimal_band_param(cfg.dedup.threshold, cfg.dedup.num_perm)
-        sigs = mh_feats.select("doc_id", "sig")
-        # no bands.persist() here: candidate_pairs' build-time census
-        # persists + materializes the sized band table, after which bands
-        # itself has exactly one consumer (filling that cache)
-        bands = minhash_bands(sigs, b, r)
-        pairs, bstats = candidate_pairs(bands, bucket_cap=cfg.spark.bucket_cap)
-        if verify:
-            mh_edges = verify_jaccard(pairs, lsh_feats, cfg.dedup.threshold)
-        else:
-            mh_edges = pairs.withColumn("sim", F.lit(None).cast("double"))
-        mh_edges = stage(
-            name,
-            lambda: mh_edges,
-            ["features_minhash_jvm" if jvm_mh else "features"],
-        )
-        return mh_edges, bstats.withColumn("detector", F.lit("minhash"))
-
-    def _simhash_branch():
-        name = "edges_simhash"
-        if store is not None and store.is_valid(name, chash):
-            return _resume_branch(name, "simhash")
-        fps = feats.select("doc_id", "simhash")
-        sh_edges, sbstats = simhash_candidate_edges(
-            fps,
+    def _simhash():
+        return simhash_candidate_edges(
+            feats.select("doc_id", "simhash"),
             dist=cfg.dedup.simhash_dist,
             bucket_cap=cfg.spark.simhash_bucket_cap,
         )
-        sh_edges = stage(name, lambda: sh_edges, ["features"])
-        return sh_edges, sbstats.withColumn("detector", F.lit("simhash"))
 
-    def _substring_branch():
-        name = "edges_substring"
-        if store is not None and store.is_valid(name, chash):
-            return _resume_branch(name, "substring")
+    def _substring():
         # docs sharing any winnowing fingerprint share a k-gram (exact
         # substring); bucket_cap=1 because a fingerprint bucket is a TRUE
         # clique (every member provably shares the same k-gram) — star+chain
@@ -295,14 +326,9 @@ def run_pipeline(
             F.explode("winnow").alias("band_key"),
         )
         sub_pairs, substats = candidate_pairs(sub_bands, bucket_cap=1)
-        sub_edges = sub_pairs.select("src", "dst", F.lit(1.0).alias("sim"))
-        sub_edges = stage(name, lambda: sub_edges, ["features"])
-        return sub_edges, substats.withColumn("detector", F.lit("substring"))
+        return sub_pairs.select("src", "dst", F.lit(1.0).alias("sim")), substats
 
-    def _suffix_array_branch():
-        name = "edges_suffix_array"
-        if store is not None and store.is_valid(name, chash):
-            return _resume_branch(name, "suffix_array")
+    def _suffix_array():
         from deduplication_framework_spark.operators.suffix_array import (
             substring_edges_suffix_array,
         )
@@ -312,7 +338,7 @@ def run_pipeline(
         # no cache_bands: with bucket_cap=1 the band table has exactly one
         # consumer (the fused window census inside candidate_pairs, which
         # persists its own multi-member-bucket frame for the stats job)
-        sa_edges, sa_stats = substring_edges_suffix_array(
+        return substring_edges_suffix_array(
             uniq_docs,
             cfg.suffix.min_match_chars,
             bucket_cap=1,
@@ -320,23 +346,36 @@ def run_pipeline(
             # ran — skip the operator's own collapse shuffle then
             collapse_exact="exact" not in detectors,
         )
-        sa_edges = stage(name, lambda: sa_edges, ["docs_uniq"])
-        return sa_edges, sa_stats.withColumn("detector", F.lit("suffix_array"))
 
-    branch_fns = {
-        "minhash": _minhash_branch,
-        "simhash": _simhash_branch,
-        "substring": _substring_branch,
-        "suffix_array": _suffix_array_branch,
+    builders = {
+        "minhash": (_minhash, "features_minhash_jvm" if jvm_mh else "features"),
+        "simhash": (_simhash, "features"),
+        "substring": (_substring, "features"),
+        "suffix_array": (_suffix_array, "docs_uniq"),
     }
-    branches = [branch_fns[d] for d in detectors if d in branch_fns]
-    if store is not None and len(branches) > 1:
+
+    def branch(det: str):
+        name = f"edges_{det}"
+        if stage.valid(name):
+            # resumed detector: reuse the committed edges AND its recorded
+            # bucket metrics (the deferred stats job wrote them into the
+            # commit) instead of re-running the banding jobs
+            for k, v in store.read_commit(name).metrics.items():
+                metrics[f"{det}.{k}"] = float(v)
+            return stage(name, None, []), None
+        build, parent = builders[det]
+        det_edges, det_stats = build()
+        det_edges = stage(name, lambda: det_edges, [parent])
+        return det_edges, det_stats.withColumn("detector", F.lit(det))
+
+    dets = [d for d in detectors if d in builders]
+    if store is not None and len(dets) > 1:
         # O4 parallel detector dispatch (reference orchestrator.py:1412-1440
         # analog): with a store each branch ends in an independent parquet
         # write — submit them as concurrent Spark jobs. The shared features
         # stage is already committed above, so branches only read it.
-        with ThreadPoolExecutor(max_workers=len(branches)) as ex:
-            outs = [f.result() for f in [ex.submit(b) for b in branches]]
+        with ThreadPoolExecutor(max_workers=len(dets)) as ex:
+            outs = list(ex.map(branch, dets))
     else:
         # without a store, branch DECLARATION is mostly lazy — the single
         # stats job below (or the caller's first action) schedules the
@@ -347,7 +386,7 @@ def run_pipeline(
         # needs the bucket-size census on the driver; see candidate_pairs
         # and simhash_candidate_edges) — so their plans are not free to
         # construct, each costs featurization + one band-window pass.
-        outs = [b() for b in branches]
+        outs = [branch(d) for d in dets]
     edge_parts.extend(o[0] for o in outs)
     stats_parts = [o[1] for o in outs if o[1] is not None]
 
@@ -379,61 +418,4 @@ def run_pipeline(
     edges = edge_parts[0]
     for e in edge_parts[1:]:
         edges = edges.unionByName(e)
-    edges = stage(
-        "edges", lambda: edges.select("src", "dst", "sim"), ["detectors"],
-        persist=True,
-    )
-
-    # CC runs inside the stage's make(), so a resume that finds the
-    # clusters commit valid skips the loop and takes its round count from
-    # the commit's recorded cc_rounds; on a fresh run stage() commits cc_m
-    # after make() has filled it
-    cc_m: Dict[str, float] = {}
-
-    def _clusters():
-        # with a store, CC rounds checkpoint through it (atomic commits a
-        # real cluster can resume/inspect — the Iceberg analog of
-        # localCheckpoint; reference _SUCCESS-per-stage contract extended
-        # to loop state)
-        cc_ckpt = None
-        if store is not None:
-            _round = [0]
-
-            def cc_ckpt(df):
-                _round[0] += 1
-                return store.write(
-                    df, f"cc_state_{_round[0]}", chash, lineage=["edges"]
-                )
-
-        clusters, rounds = clusters_from_edges(
-            docs,
-            edges.select("src", "dst"),
-            driver_threshold=cfg.spark.cc_broadcast_threshold,
-            checkpoint=cc_ckpt,
-        )
-        cc_m["cc_rounds"] = rounds
-        return clusters
-
-    clusters = stage("clusters", _clusters, ["edges"], cc_m)
-    if "cc_rounds" not in cc_m:
-        cc_m = store.read_commit("clusters").metrics
-    cc_rounds = int(cc_m.get("cc_rounds", 0))
-    metrics["cc_rounds"] = float(cc_rounds)
-
-    keep = keepers_op(docs, clusters)
-    keep = stage("keepers", lambda: keep, ["clusters", "docs"])
-
-    # every consumer of the detectors' band/census caches has materialized
-    # by now (stats collected above, edges cached + consumed by CC) — free
-    # the corpus-scale cache entries so repeated runs in one session don't
-    # stack them until LRU evicts something live
-    release_census_caches()
-
-    return PipelineResult(
-        docs=docs,
-        edges=edges,
-        clusters=clusters,
-        keepers=keep,
-        cc_rounds=cc_rounds,
-        metrics=metrics,
-    )
+    return cluster_and_keep(stage, docs, lambda: edges, cfg)

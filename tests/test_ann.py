@@ -307,6 +307,44 @@ class TestSRP:
         assert n < 0.15 * allpairs, f"{n} candidates vs {allpairs} pairs"
 
 
+def test_srp_plane_broadcast_released_with_census_caches(spark, monkeypatch):
+    """The SRP projection-plane broadcast is freed by
+    release_census_caches() — unpersisted, not destroyed, so the lazy
+    edges frame still recomputes to the same set after the release."""
+    from pyspark.broadcast import Broadcast
+
+    from deduplication_framework_spark.operators.lsh import (
+        release_census_caches,
+    )
+    from deduplication_framework_spark.operators.srp import srp_candidate_edges
+
+    released = []
+    unpersist = Broadcast.unpersist
+
+    def spy(self, blocking=False):
+        released.append(self)
+        return unpersist(self, blocking)
+
+    monkeypatch.setattr(Broadcast, "unpersist", spy)
+    release_census_caches()  # start from an empty registry
+    released.clear()
+    rng = np.random.RandomState(3)
+    rows = []
+    for g in range(20):
+        base = rng.randn(16)
+        for k in range(2):  # planted near-identical pairs
+            v = base + 0.01 * rng.randn(16)
+            rows.append((2 * g + k, [float(x) for x in v / np.linalg.norm(v)]))
+    df = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
+    edges, _ = srp_candidate_edges(df, threshold=0.9)
+    before = {(r.src, r.dst, r.sim) for r in edges.collect()}
+    release_census_caches()
+    assert before
+    assert len(released) == 1
+    assert {(r.src, r.dst, r.sim) for r in edges.collect()} == before
+    release_census_caches()
+
+
 class TestCrossNeighborCounts:
     def test_bipartite_counts_and_zero_rows(self, spark):
         from deduplication_framework_spark.operators.ann import (

@@ -82,18 +82,41 @@ def test_unknown_method_raises(spark, pages):
         dedup_texts(spark, pages, method="nope")
 
 
-def test_pipeline_releases_census_caches(spark, pages):
+@pytest.mark.parametrize("method", ["pipeline", "minhash_lsh", "jaccard"])
+def test_pipeline_releases_census_caches(spark, pages, method):
     """The corpus-scale band/census frames persisted by the LSH operators
-    are freed at pipeline end, and the returned frames stay actionable
-    afterwards (recompute-at-worst, never wrong)."""
+    are freed at pipeline end — by run_pipeline and by the facade methods
+    that compose their own edges — and the returned frames stay
+    actionable afterwards (recompute-at-worst, never wrong)."""
     from deduplication_framework_spark.config import PipelineConfig
     from deduplication_framework_spark.operators import lsh
     from deduplication_framework_spark.plans.pipeline import run_pipeline
 
-    res = run_pipeline(
-        spark, pages, PipelineConfig(),
-        detectors=["exact", "minhash", "simhash"], verify=False,
-    )
+    if method == "pipeline":
+        res = run_pipeline(
+            spark, pages, PipelineConfig(),
+            detectors=["exact", "minhash", "simhash"], verify=False,
+        )
+    else:
+        res = dedup_texts(spark, pages, method=method)
     assert lsh._LIVE_CENSUS_CACHES == [], "pipeline must release its caches"
     assert res.keepers.count() > 0
     assert res.clusters.count() > 0
+
+
+def test_store_resumes_every_stage(spark, pages, tmp_path):
+    """With a store, a repeated facade call resumes docs, edges, clusters
+    and keepers and returns the same keepers; commits of one method never
+    resume another (the store key covers the method)."""
+    from deduplication_framework_spark.plans.checkpoint import ParquetTableStore
+
+    store = ParquetTableStore(spark, str(tmp_path / "store"))
+    for method in ("md5", "jaccard"):
+        first = dedup_texts(spark, pages, method=method, store=store)
+        assert not [k for k in first.metrics if k.endswith(".resumed")]
+        keep = sorted(r.doc_id for r in first.keepers.collect())
+        again = dedup_texts(spark, pages, method=method, store=store)
+        for stage in ("docs", "edges", "clusters", "keepers"):
+            assert again.metrics[f"{stage}.resumed"] == 1.0
+        assert again.cc_rounds == first.cc_rounds
+        assert sorted(r.doc_id for r in again.keepers.collect()) == keep

@@ -16,8 +16,8 @@ from pyspark.sql import functions as F
 
 from deduplication_framework_spark.config import PipelineConfig
 from deduplication_framework_spark.functions import kernels as K
+from deduplication_framework_spark.functions.text import minhash_features
 from deduplication_framework_spark.operators.incremental_fuzzy import (
-    _featurize,
     incremental_near_new_rows,
 )
 from deduplication_framework_spark.operators.lsh import (
@@ -33,7 +33,9 @@ def _oracle_new_ids(spark, new, old, cfg=None):
     th = cfg.dedup.threshold
 
     def side(df):
-        feats = _featurize(df, cfg, "doc_id", "text")
+        feats = minhash_features(
+            df, cfg.embedding, cfg.dedup
+        ).withColumnRenamed("doc_id", "_id")
         bands = {}
         shingles = {}
         for row in feats.collect():
@@ -107,6 +109,24 @@ def test_matches_no_bloom_reference(spark):
     release_census_caches()
 
 
+@pytest.mark.parametrize("history_ids", ["overlapping", "md5"])
+def test_batch_ids_never_borrow_history_features(spark, history_ids):
+    """Batch ids that collide with history ids name different documents,
+    and history ids may be of another type (the CLI keys history by
+    md5(text) strings): each side of the verify join takes its own
+    features, so the answer is the planted one either way."""
+    old, new = _corpora(spark)
+    new = new.withColumn("doc_id", F.col("doc_id") - 100)  # 0..29 ⊂ 0..39
+    if history_ids == "md5":
+        old = old.select(F.md5("text").alias("doc_id"), "text")
+    res, stats = incremental_near_new_rows(new, old)
+    got = sorted(r.doc_id for r in res.collect())
+    assert got == _oracle_new_ids(spark, new, old)
+    assert got == [j - 100 for j in range(100, 130) if j % 3 == 1]
+    assert stats["n_dup_docs"] == 20
+    release_census_caches()
+
+
 def test_tiny_bloom_same_answer(spark):
     """fpp near 1: almost every band row becomes a candidate, yet the
     answer is unchanged — the filter routes rows, never decides them."""
@@ -138,8 +158,7 @@ def test_precomputed_features_and_bloom_reuse(spark):
     old, new = _corpora(spark)
     cfg = PipelineConfig()
     old_feats = (
-        _featurize(old, cfg, "doc_id", "text")
-        .select(F.col("_id").alias("doc_id"), "sig", "shingles")
+        minhash_features(old, cfg.embedding, cfg.dedup)
         .persist()
     )
     res1, stats1 = incremental_near_new_rows(new, old, old_features=old_feats)
@@ -166,8 +185,7 @@ def test_precomputed_band_table_same_answer(spark):
     cfg = PipelineConfig()
     b, r = K.optimal_band_param(cfg.dedup.threshold, cfg.dedup.num_perm)
     old_feats = (
-        _featurize(old, cfg, "doc_id", "text")
-        .select(F.col("_id").alias("doc_id"), "sig", "shingles")
+        minhash_features(old, cfg.embedding, cfg.dedup)
         .persist()
     )
     band_table = (
@@ -194,7 +212,7 @@ def test_precomputed_band_table_same_answer(spark):
     assert s_warm["n_dup_docs"] == s_cold["n_dup_docs"]
     assert s_warm["n_candidate_pairs"] == s_cold["n_candidate_pairs"]
     # history is never re-featurized or re-exploded on this path by
-    # construction: _featurize/minhash_bands are only reachable when the
+    # construction: minhash_features/minhash_bands are only reachable when the
     # corresponding argument is None (see operator source)
     old_feats.unpersist()
     band_table.unpersist()
@@ -527,7 +545,7 @@ def test_cli_rebuild_preserves_admitted_docs(spark, tmp_path):
 
 
 def test_jvm_hash_family_same_answer(spark):
-    """hash_family="jvm" routes _featurize to the Python-worker-free
+    """hash_family="jvm" routes minhash_features to the Python-worker-free
     jvm_minhash_features (the review-pass finding: the first cut raised
     ValueError mid-run from the fused-UDF factory). Same no-bloom
     reference contract, same planted answer."""

@@ -164,3 +164,72 @@ def test_no_unused_imports():
                         f"{rel}:{ln} {n}" for ln, n in _unused_imports(path)
                     ]
     assert not hits, "unused imports:\n" + "\n".join(hits)
+
+
+def _calls(path):
+    """``(enclosing function, called name)`` for every call in ``path``:
+    the innermost enclosing ``def`` (``<module>`` outside any), and the
+    call's bare name or attribute, import aliases resolved; a method call
+    on a bare name reads ``obj.attr``."""
+    import ast
+
+    with open(path) as f:
+        tree = ast.parse(f.read(), path)
+    alias = {
+        a.asname: a.name
+        for n in ast.walk(tree)
+        if isinstance(n, ast.ImportFrom)
+        for a in n.names
+        if a.asname
+    }
+    out = []
+
+    def visit(node, fn):
+        for child in ast.iter_child_nodes(node):
+            inner = fn
+            if isinstance(child, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                inner = child.name
+            if isinstance(child, ast.Call):
+                f = child.func
+                if isinstance(f, ast.Name):
+                    out.append((inner, alias.get(f.id, f.id)))
+                elif isinstance(f, ast.Attribute):
+                    out.append((inner, f.attr))
+                    if isinstance(f.value, ast.Name):
+                        out.append((inner, f"{f.value.id}.{f.attr}"))
+            visit(child, inner)
+
+    visit(tree, "<module>")
+    return out
+
+
+def test_one_composition_of_the_pipeline():
+    """The paper's steps are composed once: one package function calls
+    the JVM MinHash featurizer, only ``operators/verify.py`` builds the
+    sorted-Jaccard UDF, and the API facade hands clustering, keepers,
+    banding and stage commits to the pipeline instead of rebuilding
+    them."""
+    pkg = os.path.join(ROOT, "deduplication_framework_spark")
+    jvm_callers, jaccard_udf_files = set(), set()
+    for dirpath, _, files in os.walk(pkg):
+        for f in sorted(files):
+            if not f.endswith(".py"):
+                continue
+            path = os.path.join(dirpath, f)
+            rel = os.path.relpath(path, ROOT)
+            for fn, name in _calls(path):
+                if name == "jvm_minhash_features":
+                    jvm_callers.add(f"{rel}::{fn}")
+                if name == "make_sorted_jaccard_udf":
+                    jaccard_udf_files.add(rel)
+    assert len(jvm_callers) == 1, sorted(jvm_callers)
+    assert jaccard_udf_files == {
+        os.path.join("deduplication_framework_spark", "operators", "verify.py")
+    }
+    banned = {
+        "clusters_from_edges", "keepers", "candidate_pairs", "minhash_bands",
+        "store.write",
+    }
+    api = os.path.join(pkg, "api.py")
+    hits = sorted({name for _, name in _calls(api)} & banned)
+    assert not hits, f"api.py rebuilds pipeline steps: {hits}"

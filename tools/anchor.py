@@ -481,8 +481,8 @@ def fuzzy(run):
     from deduplication_framework_spark.config import PipelineConfig
     from deduplication_framework_spark.functions import kernels as K
     from deduplication_framework_spark.operators.bloom import bloom_build
+    from deduplication_framework_spark.functions.text import minhash_features
     from deduplication_framework_spark.operators.incremental_fuzzy import (
-        _featurize,
         incremental_near_new_rows,
     )
     from deduplication_framework_spark.operators.lsh import (
@@ -496,12 +496,11 @@ def fuzzy(run):
     old, new = _recrawl(run, near=True)
 
     # old_features'/old_bands' contract names the id column id_col
-    # (= doc_id here); _featurize emits "_id"
+    # (= doc_id here), as minhash_features does
     b, r = K.optimal_band_param(cfg.dedup.threshold, cfg.dedup.num_perm)
     with run.phase("index_build"):
         old_feats = (
-            _featurize(old, cfg, "doc_id", "text")
-            .withColumnRenamed("_id", "doc_id")
+            minhash_features(old, cfg.embedding, cfg.dedup)
             .persist()
         )
         old_feats.count()
