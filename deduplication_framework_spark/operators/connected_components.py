@@ -6,28 +6,40 @@ randomly (``/root/reference/audio/method/caculate_dedup.py:37-44``). The
 north rule replaces this with proper connected components: every doc's
 cluster id = the minimum doc id reachable through verified duplicate edges.
 
-Algorithm: alternating *min-label propagation* + *pointer jumping*
-(path-halving), the DataFrame formulation of the map-reduce CC family
+Algorithm: alternating *pointer jumping* (path-halving) + *min-label
+propagation*, the DataFrame formulation of the map-reduce CC family
 (Kiveris et al. 2014, "Connected Components in MapReduce and Beyond" —
-public). Each round:
+public). The initial label is min(v, min over neighbors u of u); each round
+then runs
 
-  1. label'(v) = min(label(v), min over neighbors u of label(u))   [propagate]
-  2. label''(v) = label(label'(v))                                  [jump]
+  1. label'(v) = label(label(v)), three times                       [jump]
+  2. label''(v) = min(label'(v), min over neighbors u of label'(u)) [propagate]
 
-Pointer jumping halves chain depth per round, so convergence is
-O(log(diameter)) rounds — near-dup clusters have tiny diameters (stars
-through the keeper), so 2-4 rounds in practice. Every round materializes via
-``localCheckpoint`` to truncate lineage (a driver-loop over joins would
-otherwise build an exponentially deep plan); on a cluster each round can
-instead checkpoint to the table store (see plans.checkpoint) for
-resumability.
+and stops in the round whose propagate changes no label. That is the
+fixpoint: with no change, both ends of every edge carry one label, so each
+component carries one label. Every label(v) is a vertex of v's component
+and at most v, so the component's minimum m has label(m) = m, and that one
+label is m.
+
+Pointer jumping halves the depth of a label chain per jump, so where ids
+rise along the graph's paths convergence is O(log(diameter)) rounds, and
+near-dup clusters (stars through the keeper) take 1-3. A path whose ids
+are shuffled along it gives the jumps little to shorten, and its round
+count grows with its length: 18 rounds at 64 vertices, no convergence
+within 50 at 256.
+
+Every round materializes through the ``checkpoint`` callable to truncate
+lineage (a driver-loop over joins would otherwise build an exponentially
+deep plan): by default a ``localCheckpoint`` whose blocks are freed once
+the next round holds its own; on a cluster each round can instead
+checkpoint to the table store (see plans.checkpoint) for resumability.
 """
 
 from __future__ import annotations
 
 from typing import Optional, Tuple
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
 
@@ -42,43 +54,25 @@ def connected_components(
     """edges(src, dst) → labels(doc_id, cluster_id) for every vertex that
     appears in an edge. cluster_id = min vertex id in the component.
 
-    ``checkpoint``: optional callable DataFrame -> DataFrame used to
-    materialize per-round state (defaults to localCheckpoint).
+    ``checkpoint``: optional callable DataFrame -> DataFrame that must
+    materialize the frame it is given (run one action over all of its rows)
+    and return a frame over the stored rows; the round's change count is
+    observed during that action. A callable that runs no action raises a
+    RuntimeError. Defaults to a ``localCheckpoint`` the loop frees itself:
+    only the returned labels stay persisted.
 
-    ``round_stats``: optional caller-owned list; when provided, each round
-    appends {"round", "n_changed"} with the FULL changed-label count (the
-    default convergence test short-circuits at limit(1) — cheaper, but
-    invisible to benchmarking; the bench's distributed-CC entry passes a
-    list so per-round convergence is a recorded artifact).
+    ``round_stats``: optional caller-owned list; each round appends
+    {"round", "n_changed"}, the number of labels the round's propagate
+    changed (the bench's distributed-CC entry passes a list so per-round
+    convergence is a recorded artifact).
 
     Vertices with no edges are absent — callers union them back with
     cluster_id = own id (cheaper than shipping singletons through the loop).
     """
     ckpt = checkpoint or _stats_bounded_local_ckpt
-    spark = edges.sparkSession
-    # Spark 4's Dataset.checkpoint copies the child plan's CONSTRAINT set
-    # into the checkpointed LogicalRDD (LogicalRDD.rewriteStatsAndConstraints).
-    # In an iterative self-referential loop the per-round joins derive new
-    # constraints FROM the inherited ones, so the set compounds geometrically
-    # — measured ~4x driver time per round from ~round 8 (jstack:
-    # SizeInBytesOnlyStatsPlanVisitor under rewriteStatsAndConstraints),
-    # turning a 16-round toy graph into minutes. Constraint propagation is
-    # purely an optimizer inference (never changes results); disable it for
-    # the loop's queries and restore afterwards (guide §7.3 — driver
-    # planning hot spot).
-    _CP = "spark.sql.constraintPropagation.enabled"
-    try:
-        cp_old = spark.conf.get(_CP)
-    except Exception:
-        cp_old = None
-    spark.conf.set(_CP, "false")
-    try:
-        return _cc_loop(edges, src, dst, max_iterations, ckpt, round_stats)
-    finally:
-        if cp_old is None:
-            spark.conf.unset(_CP)
-        else:
-            spark.conf.set(_CP, cp_old)
+    return _cc_loop(
+        edges, src, dst, max_iterations, ckpt, round_stats, checkpoint is None
+    )
 
 
 def _stats_bounded_local_ckpt(df: DataFrame) -> DataFrame:
@@ -101,92 +95,116 @@ def _stats_bounded_local_ckpt(df: DataFrame) -> DataFrame:
     return out
 
 
-def _cc_loop(edges, src, dst, max_iterations, ckpt, round_stats):
-
+def _cc_loop(edges, src, dst, max_iterations, ckpt, round_stats, release):
     both = (
         edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
         .unionByName(edges.select(F.col(dst).alias("a"), F.col(src).alias("b")))
         .distinct()
     )
     both = ckpt(both)
-
-    labels = both.groupBy("a").agg(F.min("b").alias("nbr_min"))
-    labels = labels.select(
-        F.col("a").alias("doc_id"),
-        F.least(F.col("a"), F.col("nbr_min")).alias("cluster_id"),
-    )
-    labels = ckpt(labels)
-
-    # NOTE (r6): pre-partitioning the checkpointed frames does NOT carry
-    # co-partitioning into later rounds — under AQE the checkpoint's
-    # LogicalRDD records unknown output partitioning, so the per-round
-    # joins re-exchange regardless (A/B'd: identical interleaved minima
-    # with and without explicit repartitions). The round's wins are the
-    # SHUFFLE_HASH joins (no per-round sorts), the carried-old
-    # convergence test, and three jumps per round.
-    for it in range(max_iterations):
-        # 1. propagate: candidate label for each vertex = min over
-        #    neighbors' current labels; SHUFFLE_HASH skips the per-round
-        #    sort of the edge side. The vertex's own label rides the left
-        #    join below (not a union branch), which also carries the OLD
-        #    label so convergence needs no diff join.
-        lab_h = labels.hint("shuffle_hash")
-        nbr_min = (
-            both.join(lab_h, both.b == lab_h.doc_id, "inner")
-            .select(F.col("a").alias("doc_id"), F.col("cluster_id").alias("cand"))
-            .groupBy("doc_id")
-            .agg(F.min("cand").alias("_nmin"))
+    try:
+        labels = both.groupBy("a").agg(F.min("b").alias("nbr_min"))
+        labels = labels.select(
+            F.col("a").alias("doc_id"),
+            F.least(F.col("a"), F.col("nbr_min")).alias("cluster_id"),
         )
-        prop = (
-            labels.join(nbr_min.hint("shuffle_hash"), "doc_id", "left")
-            .select(
-                "doc_id",
-                F.col("cluster_id").alias("_old"),
-                F.least(
-                    F.col("cluster_id"), F.coalesce("_nmin", "cluster_id")
-                ).alias("cluster_id"),
-            )
-        )
+        labels = ckpt(labels)
 
-        # 2. pointer jump three times — each jump is a self-join on the
-        #    (small) label table that SQUARES the per-round shortcutting;
-        #    3 jumps cut the 6000-diameter bench chain from 7 rounds to 5
-        #    (r6 interleaved minima: 18.8s vs 20.8s) and extra jumps never
-        #    increase the round count, so the log2-diameter bound holds
-        jumped = prop
-        for _ in range(3):
-            parent = jumped.select(
-                F.col("doc_id").alias("p_id"), F.col("cluster_id").alias("p_label")
-            ).hint("shuffle_hash")
-            jumped = (
-                jumped.join(
-                    parent,
-                    jumped.cluster_id == parent.p_id,
-                    "left",
-                )
-                .select(
+        # NOTE (r6): pre-partitioning the checkpointed frames does NOT carry
+        # co-partitioning into later rounds — under AQE the checkpoint's
+        # LogicalRDD records unknown output partitioning, so the per-round
+        # joins re-exchange regardless (A/B'd: identical interleaved minima
+        # with and without explicit repartitions). The round's wins are the
+        # SHUFFLE_HASH joins (no per-round sorts), three jumps per round,
+        # and a change count observed during the checkpoint's own action.
+        for it in range(max_iterations):
+            # 1. pointer jump three times — each jump is a self-join on the
+            #    (small) label table that SQUARES the per-round shortcutting.
+            #    The non-null filter gives the frame feeding both sides of a
+            #    jump the constraint the join would otherwise infer on its
+            #    parent side only, so the two sides stay one subtree and
+            #    share their exchanges (a null id never matches a join).
+            jumped = labels.filter(F.col("doc_id").isNotNull())
+            for _ in range(3):
+                parent = jumped.select(
+                    F.col("doc_id").alias("p_id"), F.col("cluster_id").alias("p_label")
+                ).hint("shuffle_hash")
+                jumped = jumped.join(
+                    parent, jumped.cluster_id == parent.p_id, "left"
+                ).select(
                     "doc_id",
-                    "_old",
                     F.coalesce(F.col("p_label"), F.col("cluster_id")).alias(
                         "cluster_id"
                     ),
                 )
-            )
-        jumped = ckpt(jumped)
 
-        # carried-old convergence test: a filter scan over the checkpoint,
-        # not a join against the previous round (r6 — was 2 exchanges +
-        # a full shuffle join per round)
-        diff = jumped.filter(F.col("_old") != F.col("cluster_id"))
-        if round_stats is not None:
-            changed = diff.count()
-            round_stats.append({"round": it + 1, "n_changed": changed})
-        else:
-            changed = diff.limit(1).count()
-        labels = jumped.select("doc_id", "cluster_id")
-        if changed == 0:
-            return labels, it + 1
+            # 2. propagate: candidate label for each vertex = min over its
+            #    neighbors' jumped labels; SHUFFLE_HASH skips the per-round
+            #    sort of the edge side. The vertex's own jumped label rides
+            #    the left join as _old, so the change count is one observed
+            #    sum, filled by the checkpoint's action — no job of its own.
+            lab_h = jumped.hint("shuffle_hash")
+            nbr_min = (
+                both.join(lab_h, both.b == lab_h.doc_id, "inner")
+                .select(F.col("a").alias("doc_id"), F.col("cluster_id").alias("cand"))
+                .groupBy("doc_id")
+                .agg(F.min("cand").alias("_nmin"))
+            )
+            obs = Observation()
+            prop = (
+                jumped.join(nbr_min.hint("shuffle_hash"), "doc_id", "left")
+                .select(
+                    "doc_id",
+                    F.col("cluster_id").alias("_old"),
+                    F.least(
+                        F.col("cluster_id"), F.coalesce("_nmin", "cluster_id")
+                    ).alias("cluster_id"),
+                )
+                .observe(
+                    obs, F.sum((F.col("_old") != F.col("cluster_id")).cast("long"))
+                )
+            )
+            superseded, labels = labels, ckpt(prop.select("doc_id", "cluster_id"))
+            changed = _observed_count(obs, both.sparkSession)
+            if release:
+                _free(superseded)
+            if round_stats is not None:
+                round_stats.append({"round": it + 1, "n_changed": changed})
+            if changed == 0:
+                return labels, it + 1
+        if release:
+            _free(labels)
+    finally:
+        if release:
+            _free(both)
 
     raise RuntimeError(
         f"connected_components did not converge in {max_iterations} iterations"
     )
+
+
+def _observed_count(obs: Observation, spark) -> int:
+    """The one value ``obs`` collected during the checkpoint's action.
+
+    Observed metrics arrive through the listener bus after the action
+    returns, so an empty observation first drains the bus; one still
+    empty after that means the checkpoint ran no action over its input,
+    and waiting for it would block forever."""
+    row = obs._jo.getRowOrEmpty()
+    if row.isEmpty():
+        spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+        row = obs._jo.getRowOrEmpty()
+    if row.isEmpty():
+        raise RuntimeError(
+            "connected_components: the checkpoint callable returned without "
+            "materializing the frame it was given"
+        )
+    # sum over zero rows (an empty edge list) is NULL
+    return int(row.get().get(0) or 0)
+
+
+def _free(df: DataFrame) -> None:
+    """Drop a ``_stats_bounded_local_ckpt`` frame's blocks. Its plan is the
+    checkpointed LogicalRDD; ``DataFrame.unpersist`` only drops cache
+    entries, so the RDD itself is unpersisted."""
+    df._jdf.queryExecution().analyzed().rdd().unpersist(False)
