@@ -24,6 +24,14 @@ into every stage's resume key. A rerun with the same layers and values
 resumes from --checkpoint-dir; adding, dropping or re-valuing a layer
 starts fresh. The tag strings are an on-disk contract: changing one
 orphans existing checkpoint roots (pinned in tests/test_cli_layers.py).
+
+Each enabled layer's output is materialized once, by a lineage-cutting
+local checkpoint, so the next layer and the pipeline read its rows and
+never re-plan the layers below it. The layer's counts are ``observe()``
+aggregates filled by that same action (no job of their own); a per-reason
+or per-bucket count that observes 0 is left out of the metrics. The
+layer's tracked operator caches are released after its cut, and the cuts
+themselves when main() returns.
 """
 
 from __future__ import annotations
@@ -33,13 +41,19 @@ import json
 import os
 import sys
 import time
+from collections import ChainMap
+from collections.abc import Mapping
+from functools import cached_property
 from typing import Callable, NamedTuple
 
+from pyspark.sql import Observation
 from pyspark.sql import functions as F
 
 from deduplication_framework_spark.functions.quality import (
     apply_quality_filter,
 )
+from deduplication_framework_spark.operators import connected_components as cc
+from deduplication_framework_spark.operators.lsh import release_census_caches
 
 
 def _checked(cast, ok, msg):
@@ -277,154 +291,181 @@ def main(argv=None) -> int:
         args=args, spark=spark, cfg=cfg, error=p.error, fuzzy_src_ident=""
     )
     layer_metrics: dict = {}
-    for layer in LAYERS:
-        if _given(args, layer.flag):
-            pages, m = layer.apply(run, pages)
-            layer_metrics.update(m)
+    cuts: list = []
+    try:
+        for layer in LAYERS:
+            if _given(args, layer.flag):
+                pages, m = layer.apply(run, pages)
+                # the cut: later layers and the pipeline read this layer's
+                # rows, never its plan; its observed counts ride the action
+                pages = cc._stats_bounded_local_ckpt(pages)
+                cuts.append(pages)
+                release_census_caches()
+                layer_metrics.update(m)
 
-    store = (
-        ParquetTableStore(spark, args.checkpoint_dir)
-        if args.checkpoint_dir
-        else None
-    )
-    t0 = time.time()
-    res = run_pipeline(
-        spark,
-        pages,
-        cfg,
-        detectors=detectors,
-        verify=not args.no_verify,
-        store=store,
-        input_tag=input_tag(args),
-    )
-    res.metrics.update(layer_metrics)
-    res.keepers.write.mode("overwrite").parquet(f"{args.output}/keepers")
-    res.clusters.write.mode("overwrite").parquet(f"{args.output}/clusters")
-    res.edges.write.mode("overwrite").parquet(f"{args.output}/edges")
-
-    if args.soft_weights:
-        from deduplication_framework_spark.operators.cluster import (
-            soft_dedup_weights,
+        store = (
+            ParquetTableStore(spark, args.checkpoint_dir)
+            if args.checkpoint_dir
+            else None
         )
-
-        weights = soft_dedup_weights(
-            res.clusters.select("doc_id", "cluster_id")
-        )
-        weights.write.mode("overwrite").parquet(f"{args.output}/weights")
-        wdf = spark.read.parquet(f"{args.output}/weights")
-        row = wdf.selectExpr(
-            "count(*) AS n",
-            "sum(CAST(cluster_size > 1 AS INT)) AS n_downweighted",
-            "sum(weight_ppm) AS mass_ppm",
-        ).collect()[0]
-        res.metrics["soft_weights.n_docs"] = float(row.n)
-        res.metrics["soft_weights.n_downweighted"] = float(
-            row.n_downweighted or 0
-        )
-        # total mass / 1e6 ~ number of distinct content classes
-        res.metrics["soft_weights.mass"] = float(
-            (row.mass_ppm or 0) / 1_000_000.0
-        )
-
-    if args.assign_splits is not None:
-        from deduplication_framework_spark.operators.splits import (
-            leakage_safe_split,
-            split_stats,
-        )
-
-        assigned = leakage_safe_split(
-            res.docs, res.clusters, val_frac=args.assign_splits
-        )
-        assigned.write.mode("overwrite").parquet(f"{args.output}/splits")
-        # both sides always reported — an empty side is 0.0, not a
-        # missing key (consumers index these unconditionally)
-        for side in ("train", "val"):
-            res.metrics[f"split.n_{side}"] = 0.0
-            res.metrics[f"split.n_groups_{side}"] = 0.0
-        for r in split_stats(
-            spark.read.parquet(f"{args.output}/splits")
-        ).collect():
-            res.metrics[f"split.n_{r.split}"] = float(r.n_docs)
-            res.metrics[f"split.n_groups_{r.split}"] = float(r.n_groups)
-
-    if args.fuzzy_index_admit:
-        # the write half of the daily recrawl loop: admit this run's
-        # keepers (md5-text identity, matching the history id scheme) so
-        # the NEXT batch's --fuzzy-index load dedups against them
-        from deduplication_framework_spark.operators.incremental_fuzzy import (
-            append_fuzzy_index,
-        )
-
-        admitted = append_fuzzy_index(
-            ParquetTableStore(spark, args.fuzzy_index),
-            res.keepers.select(
-                F.md5("text").alias("doc_id"), "text"
-            ).dropDuplicates(["doc_id"]),
+        t0 = time.time()
+        res = run_pipeline(
+            spark,
+            pages,
             cfg,
-            id_col="doc_id",
-            src_ident=run.fuzzy_src_ident,
+            detectors=detectors,
+            verify=not args.no_verify,
+            store=store,
+            input_tag=input_tag(args),
         )
-        res.metrics["fuzzy_index.n_admitted"] = float(admitted["n_added"])
-        res.metrics["fuzzy_index.n_total"] = float(admitted["n_total"])
+        res.metrics.update(layer_metrics)
+        res.keepers.write.mode("overwrite").parquet(f"{args.output}/keepers")
+        res.clusters.write.mode("overwrite").parquet(f"{args.output}/clusters")
+        res.edges.write.mode("overwrite").parquet(f"{args.output}/edges")
 
-    elapsed = round(time.time() - t0, 2)
-    n_docs = res.docs.count()
-    n_keep = res.keepers.count()
-    if args.eval_recall and "minhash" in detectors:
-        res.metrics.update(
-            _recall_vs_oracle(res, cfg, verified=not args.no_verify)
+        if args.soft_weights:
+            from deduplication_framework_spark.operators.cluster import (
+                soft_dedup_weights,
+            )
+
+            weights = soft_dedup_weights(
+                res.clusters.select("doc_id", "cluster_id")
+            )
+            observed = _Observed(weights, {
+                "soft_weights.n_docs": F.count("*"),
+                "soft_weights.n_downweighted": F.sum(
+                    (F.col("cluster_size") > 1).cast("int")
+                ),
+                # total mass / 1e6 ~ number of distinct content classes
+                "soft_weights.mass": F.sum("weight_ppm") / 1_000_000.0,
+            })
+            observed.frame.write.mode("overwrite").parquet(
+                f"{args.output}/weights"
+            )
+            res.metrics.update(observed)
+
+        if args.assign_splits is not None:
+            from deduplication_framework_spark.operators.splits import (
+                leakage_safe_split,
+                split_stats,
+            )
+
+            assigned = leakage_safe_split(
+                res.docs, res.clusters, val_frac=args.assign_splits
+            )
+            assigned.write.mode("overwrite").parquet(f"{args.output}/splits")
+            # both sides always reported — an empty side is 0.0, not a
+            # missing key (consumers index these unconditionally)
+            for side in ("train", "val"):
+                res.metrics[f"split.n_{side}"] = 0.0
+                res.metrics[f"split.n_groups_{side}"] = 0.0
+            for r in split_stats(
+                spark.read.parquet(f"{args.output}/splits")
+            ).collect():
+                res.metrics[f"split.n_{r.split}"] = float(r.n_docs)
+                res.metrics[f"split.n_groups_{r.split}"] = float(r.n_groups)
+
+        if args.fuzzy_index_admit:
+            # the write half of the daily recrawl loop: admit this run's
+            # keepers (md5-text identity, matching the history id scheme) so
+            # the NEXT batch's --fuzzy-index load dedups against them
+            from deduplication_framework_spark.operators.incremental_fuzzy import (
+                append_fuzzy_index,
+            )
+
+            admitted = append_fuzzy_index(
+                ParquetTableStore(spark, args.fuzzy_index),
+                res.keepers.select(
+                    F.md5("text").alias("doc_id"), "text"
+                ).dropDuplicates(["doc_id"]),
+                cfg,
+                id_col="doc_id",
+                src_ident=run.fuzzy_src_ident,
+            )
+            res.metrics["fuzzy_index.n_admitted"] = float(admitted["n_added"])
+            res.metrics["fuzzy_index.n_total"] = float(admitted["n_total"])
+
+        elapsed = round(time.time() - t0, 2)
+        n_docs = res.docs.count()
+        n_keep = res.keepers.count()
+        if args.eval_recall and "minhash" in detectors:
+            res.metrics.update(
+                _recall_vs_oracle(res, cfg, verified=not args.no_verify)
+            )
+        summary = {
+            "elapsed_sec": elapsed,
+            "docs": n_docs,
+            "keepers": n_keep,
+            "cc_rounds": res.cc_rounds,
+            "metrics": res.metrics,
+            "config_hash": cfg.config_hash(),
+        }
+        print(json.dumps(summary))
+        with open(f"{args.output}/summary.json", "w") as fh:
+            json.dump(summary, fh, indent=2)
+
+        report = render_report(
+            res,
+            detectors=detectors,
+            elapsed_sec=elapsed,
+            config_hash=cfg.config_hash(),
+            store=store,
+            n_docs=n_docs,
+            n_keep=n_keep,
         )
-    summary = {
-        "elapsed_sec": elapsed,
-        "docs": n_docs,
-        "keepers": n_keep,
-        "cc_rounds": res.cc_rounds,
-        "metrics": res.metrics,
-        "config_hash": cfg.config_hash(),
-    }
-    print(json.dumps(summary))
-    with open(f"{args.output}/summary.json", "w") as fh:
-        json.dump(summary, fh, indent=2)
-
-    report = render_report(
-        res,
-        detectors=detectors,
-        elapsed_sec=elapsed,
-        config_hash=cfg.config_hash(),
-        store=store,
-        n_docs=n_docs,
-        n_keep=n_keep,
-    )
-    with open(f"{args.output}/report.md", "w") as fh:
-        fh.write(report)
-    while _LAYER_CACHES:
-        _LAYER_CACHES.pop().unpersist()
-    return 0
+        with open(f"{args.output}/report.md", "w") as fh:
+            fh.write(report)
+        return 0
+    finally:
+        for c in cuts:
+            cc._free(c)
 
 
-# frames the layers persisted for their downstream consumers; main() frees
-# them once every output is written. Not _persist_tracked: run_pipeline's
-# release_census_caches() would free them before the post-pipeline steps
-# and the final counts, which then recompute the whole layer chain.
-_LAYER_CACHES: list = []
+class _Observed(Mapping):
+    """``stats`` (metric name → aggregate) observed on ``df``: ``frame``
+    is ``df`` with the Observation attached, and the float metrics are
+    read on first access, which must follow an action over ``frame`` (the
+    layer cut, a write, a collect). Names in ``sparse`` are left out when
+    0, as a census reports only the categories that occur."""
+
+    def __init__(self, df, stats, sparse=()):
+        self._obs, self._sparse = Observation(), sparse
+        self.frame = df.observe(
+            self._obs, *[c.alias(k) for k, c in stats.items()]
+        )
+
+    @cached_property
+    def _values(self):
+        row = cc._observed_row(self._obs, self.frame.sparkSession).asDict()
+        return {
+            k: float(v or 0) for k, v in row.items()
+            if v or k not in self._sparse
+        }
+
+    def __getitem__(self, k):
+        return self._values[k]
+
+    def __iter__(self):
+        return iter(self._values)
+
+    def __len__(self):
+        return len(self._values)
 
 
-def _rejoin(docs, res, text, keep=None, stats=None, how="inner"):
+def _rejoin(docs, res, text, keep=None, stats=None, sparse=(), how="inner"):
     """The layers' shared tail: ``docs`` (``prepare_docs(pages)``, the
     pipeline's own doc identity; its text renamed ``_text_in``) joined to
     the per-doc layer result ``res`` on doc_id, filtered by ``keep`` (drops
     the docs the layer emptied), reshaped to the pages shape
-    ``(doc_order, url, text, lang)``. Returns ``(pages, metrics)``.
-    ``stats`` maps metric names to aggregates over ``res``; ``res`` is then
-    persisted first — the stats job materializes it and the output feeds
-    every downstream pipeline action — and recorded for main() to free."""
+    ``(doc_order, url, text, lang)``. Returns ``(pages, metrics)``:
+    ``stats`` maps metric names to aggregates over the joined rows,
+    observed below the ``keep`` filter (``sparse`` as in
+    :class:`_Observed`)."""
+    out = docs.withColumnRenamed("text", "_text_in").join(res, "doc_id", how)
     metrics = {}
     if stats:
-        res = res.persist()
-        _LAYER_CACHES.append(res)
-        row = res.agg(*[c.alias(k) for k, c in stats.items()]).first()
-        metrics = {k: float(row[k] or 0) for k in stats}
-    out = docs.withColumnRenamed("text", "_text_in").join(res, "doc_id", how)
+        metrics = _Observed(out, stats, sparse)
+        out = metrics.frame
     if keep is not None:
         out = out.filter(keep)
     return (
@@ -434,10 +475,6 @@ def _rejoin(docs, res, text, keep=None, stats=None, how="inner"):
         ),
         metrics,
     )
-
-
-def _census(df, col):
-    return {r[col]: r["count"] for r in df.groupBy(col).count().collect()}
 
 
 def _incremental_pages(run, pages):
@@ -471,8 +508,7 @@ def _incremental_fuzzy_pages(run, pages):
     corpus, metrics). History rows get md5(text) ids, so identical history
     texts collapse to one representative. Records the history's identity
     on ``run.fuzzy_src_ident`` for --fuzzy-index-admit. The operator's
-    tracked caches are released by the pipeline's own end-of-run
-    ``release_census_caches()``."""
+    tracked caches are released once main()'s layer cut holds the output."""
     from deduplication_framework_spark.operators.incremental_fuzzy import (
         incremental_near_new_rows,
     )
@@ -541,32 +577,29 @@ def _incremental_fuzzy_pages(run, pages):
 
 def _block_url_pages(run, pages):
     """pages → (pages whose url passes the block rules, metrics). Pure
-    per-row expressions + one census aggregation over the tiny reason
-    column (functions/urls.py); the cheapest reject, so it runs first."""
+    per-row expressions, their per-reason counts observed on the layer
+    cut (functions/urls.py); the cheapest reject, so it runs first."""
     from deduplication_framework_spark.functions.urls import (
         url_block_exprs,
-    )
-    from deduplication_framework_spark.operators.lsh import (
-        _persist_tracked,
     )
 
     if "url" not in pages.columns:
         run.error("--block-urls requires a url column in the input")
-    # census + the returned frame are two consumers: persist once (the
-    # census collect fills it), freed by release_census_caches()
-    flagged = _persist_tracked(
-        pages.withColumn("_ub_reason", url_block_exprs("url")["reason"])
-    )
-    census = _census(flagged, "_ub_reason")
-    kept = flagged.filter(F.col("_ub_reason") == "pass").drop("_ub_reason")
-    metrics = {
-        "url_block.n_in": float(sum(census.values())),
-        "url_block.n_kept": float(census.get("pass", 0)),
+    reason = F.col("_ub_reason")
+    drops = {  # url_block_exprs' block reasons
+        f"url_block.drop_{r}": F.count_if(reason == r)
+        for r in ("host", "words")
     }
-    for reason, n in census.items():
-        if reason != "pass":
-            metrics[f"url_block.drop_{reason}"] = float(n)
-    return kept, metrics
+    metrics = _Observed(
+        pages.withColumn("_ub_reason", url_block_exprs("url")["reason"]),
+        {
+            "url_block.n_in": F.count("*"),
+            "url_block.n_kept": F.count_if(reason == "pass"),
+            **drops,
+        },
+        sparse=drops,
+    )
+    return metrics.frame.filter(reason == "pass").drop("_ub_reason"), metrics
 
 
 def _lm_filter_pages(run, pages):
@@ -584,22 +617,26 @@ def _lm_filter_pages(run, pages):
 
     keep = run.args.lm_filter
     docs = prepare_docs(pages)
-    n_in = docs.count()
     scored = bucket_lm_scores(lm_score_docs(docs), approx=True)
-    census = _census(scored, "bucket")
-    out, _ = _rejoin(
-        docs, scored.select("doc_id", "bucket"), F.col("_text_in"),
-        keep=F.col("bucket").isNull() | F.col("bucket").isin(*keep),
-        how="left",
-    )
-    metrics = {
-        "lm_filter.n_in": float(n_in),
-        "lm_filter.n_unscored": float(n_in - sum(census.values())),
-        "lm_filter.kept_buckets": float(len(keep)),
+    bucket = F.col("bucket")
+    per_bucket = {  # bucket_lm_scores' tertile names
+        f"lm_filter.n_{b}": F.count_if(bucket == b)
+        for b in ("head", "middle", "tail")
     }
-    for b, n in census.items():
-        metrics[f"lm_filter.n_{b}"] = float(n)
-    return out, metrics
+    out, observed = _rejoin(
+        docs, scored.select("doc_id", "bucket"), F.col("_text_in"),
+        keep=bucket.isNull() | bucket.isin(*keep),
+        how="left",
+        stats={
+            "lm_filter.n_in": F.count("*"),
+            "lm_filter.n_unscored": F.count_if(bucket.isNull()),
+            **per_bucket,
+        },
+        sparse=per_bucket,
+    )
+    return out, ChainMap(
+        {"lm_filter.kept_buckets": float(len(keep))}, observed
+    )
 
 
 def _repeated_substring_pages(pages, min_len: int):
@@ -616,7 +653,7 @@ def _repeated_substring_pages(pages, min_len: int):
     rs, stats = remove_repeated_substrings(
         docs, min_len=min_len, key_mode="hash"
     )
-    out, metrics = _rejoin(
+    out, observed = _rejoin(
         docs, rs,
         F.when(F.col("n_spans_removed") > 0, F.col("text_clean"))
         .otherwise(F.col("_text_in")),
@@ -633,13 +670,10 @@ def _repeated_substring_pages(pages, min_len: int):
             ),
         },
     )
-    # rs is fully materialized by the stats job: the operator's two
-    # corpus-scale tracked caches (one row per CHARACTER) are dead weight
-    # for the rest of the run — free them now instead of at pipeline end
-    for f in stats.pop("_caches", []):
-        f.unpersist()
-    metrics["repeated_substrings.n_hot_grams"] = float(stats["n_hot_grams"])
-    return out, metrics
+    return out, ChainMap(
+        {"repeated_substrings.n_hot_grams": float(stats["n_hot_grams"])},
+        observed,
+    )
 
 
 def _span_pages(run, pages, prefix: str):
@@ -670,7 +704,7 @@ def _span_pages(run, pages, prefix: str):
         )
     else:
         sd = dedup_spans(docs, sep=run.args.span_dedup)
-    out, metrics = _rejoin(
+    out, observed = _rejoin(
         docs, sd,
         F.when(F.col("n_spans") == 0, F.col("_text_in"))
         .otherwise(F.col("text_dedup")),
@@ -683,14 +717,14 @@ def _span_pages(run, pages, prefix: str):
             ),
         },
     )
-    return out, {**metrics, **extra}
+    return out, ChainMap(extra, observed)
 
 
 def _decontaminate_pages(run, pages):
     """pages → (pages with eval-overlapping word spans removed, metrics).
     Docs whose every word is covered are DROPPED and counted in
-    ``n_docs_emptied``. The operator's tracked caches are released by the
-    pipeline's end-of-run ``release_census_caches()``."""
+    ``n_docs_emptied``. The operator's tracked caches are released once
+    main()'s layer cut holds the output."""
     from deduplication_framework_spark.operators.decontaminate import (
         remove_contaminated_spans,
     )
@@ -707,7 +741,7 @@ def _decontaminate_pages(run, pages):
     res, stats = remove_contaminated_spans(
         docs.select("doc_id", "text"), ev, n=run.args.decontaminate_ngram
     )
-    out, metrics = _rejoin(
+    out, observed = _rejoin(
         docs, res, F.col("text_clean"),
         keep=F.col("n_removed") < F.col("n_words"),
         stats={
@@ -718,9 +752,13 @@ def _decontaminate_pages(run, pages):
             ),
         },
     )
-    metrics["decontaminate.n_eval_grams"] = float(stats["n_eval_grams"])
-    metrics["decontaminate.n_docs_hit"] = float(stats["n_contaminated"])
-    return out, metrics
+    return out, ChainMap(
+        {
+            "decontaminate.n_eval_grams": float(stats["n_eval_grams"]),
+            "decontaminate.n_docs_hit": float(stats["n_contaminated"]),
+        },
+        observed,
+    )
 
 
 def _recall_vs_oracle(res, cfg, verified: bool) -> dict:

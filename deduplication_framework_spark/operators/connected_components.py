@@ -39,7 +39,8 @@ from __future__ import annotations
 
 from typing import Optional, Tuple
 
-from pyspark.sql import DataFrame, Observation
+from pyspark.serializers import CPickleSerializer
+from pyspark.sql import DataFrame, Observation, Row
 from pyspark.sql import functions as F
 
 
@@ -165,7 +166,8 @@ def _cc_loop(edges, src, dst, max_iterations, ckpt, round_stats, release):
                 )
             )
             superseded, labels = labels, ckpt(prop.select("doc_id", "cluster_id"))
-            changed = _observed_count(obs, both.sparkSession)
+            # sum over zero rows (an empty edge list) is NULL
+            changed = _observed_row(obs, both.sparkSession)[0] or 0
             if release:
                 _free(superseded)
             if round_stats is not None:
@@ -183,24 +185,27 @@ def _cc_loop(edges, src, dst, max_iterations, ckpt, round_stats, release):
     )
 
 
-def _observed_count(obs: Observation, spark) -> int:
-    """The one value ``obs`` collected during the checkpoint's action.
+def _observed_row(obs: Observation, spark) -> Row:
+    """The row ``obs`` collected during the action that materialized its
+    frame (a checkpoint, a write).
 
     Observed metrics arrive through the listener bus after the action
     returns, so an empty observation first drains the bus; one still
-    empty after that means the checkpoint ran no action over its input,
-    and waiting for it would block forever."""
+    empty after that means no action ran over the observed frame, and
+    waiting for it (``Observation.get``) would block forever."""
     row = obs._jo.getRowOrEmpty()
     if row.isEmpty():
         spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
         row = obs._jo.getRowOrEmpty()
     if row.isEmpty():
         raise RuntimeError(
-            "connected_components: the checkpoint callable returned without "
-            "materializing the frame it was given"
+            "an observed frame was not materialized: the action meant to "
+            "fill its observation never ran over it"
         )
-    # sum over zero rows (an empty edge list) is NULL
-    return int(row.get().get(0) or 0)
+    utils = getattr(
+        spark.sparkContext._jvm, "org.apache.spark.sql.api.python.PythonSQLUtils"
+    )
+    return CPickleSerializer().loads(utils.toPyRow(row.get()))
 
 
 def _free(df: DataFrame) -> None:

@@ -120,6 +120,42 @@ def ensemble_band_table(classes, partitions, threshold, num_perm,
     return table
 
 
+def _counted(df):
+    """→ ``(df persisted, its row count)``: the eager count fills the
+    tracked cache before the frame's consumers fan out."""
+    df = _persist_tracked(df)
+    return df, df.count()
+
+
+def _set_base(df, id_col, set_col):
+    """→ ``(base, n)``: the :func:`_counted` ``(_id, _set)`` frame of
+    ``df``'s non-empty distinct element sets."""
+    return _counted(
+        df.select(
+            F.col(id_col).alias("_id"),
+            F.array_distinct(F.col(set_col).cast("array<string>")).alias(
+                "_set"
+            ),
+        ).filter(F.size("_set") > 0)
+    )
+
+
+def _lex(base):
+    """(_id, _lex): a set base's sorted element arrays, the verify input."""
+    return base.select("_id", F.array_sort("_set").alias("_lex"))
+
+
+def _empty_edges(spark, src_type, dst_type):
+    """The edge frame ``(src, dst, containment)`` with no rows. ``dst``
+    takes the index side's id type, so an empty batch unions cleanly with
+    non-empty ones (whose dst type verify propagates from the index)."""
+    return spark.createDataFrame([], T.StructType([
+        T.StructField("src", src_type),
+        T.StructField("dst", dst_type),
+        T.StructField("containment", T.DoubleType()),
+    ]))
+
+
 def _ensemble_sigs(base, num_perm):
     """(_id, s00.., _sz) signature frame over a (_id, _set) base — one
     explode + one map-side-combined min aggregation, zero Python."""
@@ -267,41 +303,24 @@ def lshensemble_containment(
     t = float(threshold)
     bipartite = index_docs is not None
 
-    def _base(df):
-        b = _persist_tracked(
-            df.select(
-                F.col(id_col).alias("_id"),
-                F.array_distinct(F.col(set_col).cast("array<string>")).alias(
-                    "_set"
-                ),
-            ).filter(F.size("_set") > 0)
-        )
-        return b, b.count()
-
     def _empty_result(reason):
         # an empty side / empty band table means ZERO possible edges at t
         # -- return the empty edge frame, never crash (review finding:
-        # the size census and the band unions both indexed parts[0]).
-        # dst takes the INDEX side's id type: an empty batch must union
-        # cleanly with non-empty batches (whose dst type verify
-        # propagates from the index frame)
-        spark = docs.sparkSession
-        dst_src = index_docs if bipartite else docs
-        schema = T.StructType([
-            T.StructField("src", docs.schema[id_col].dataType),
-            T.StructField("dst", dst_src.schema[id_col].dataType),
-            T.StructField("containment", T.DoubleType()),
-        ])
-        stats = {
+        # the size census and the band unions both indexed parts[0])
+        edges = _empty_edges(
+            docs.sparkSession,
+            docs.schema[id_col].dataType,
+            (index_docs if bipartite else docs).schema[id_col].dataType,
+        )
+        return edges, {
             "n_candidates": 0, "n_probe_band_rows": 0,
             "n_index_band_rows": 0, "partitions": partitions or [],
             "band_table": {}, "empty_reason": reason,
         }
-        return spark.createDataFrame([], schema), stats
 
-    probe_base, n_probe_docs = _base(docs)
+    probe_base, n_probe_docs = _set_base(docs, id_col, set_col)
     if bipartite:
-        index_base, n_index_docs = _base(index_docs)
+        index_base, n_index_docs = _set_base(index_docs, id_col, set_col)
     else:
         index_base, n_index_docs = probe_base, n_probe_docs
     if n_probe_docs == 0 or n_index_docs == 0:
@@ -309,27 +328,14 @@ def lshensemble_containment(
 
     # ---- driver-side parameter table from a tiny size census (or the
     # caller's explicit stable ranges) ----
+    def size_ranges(base):
+        sizes = base.groupBy(F.size("_set").alias("_sz")).count().collect()
+        return _size_partitions([tuple(r) for r in sizes], num_partitions)
+
     if partitions is None:
-        idx_sizes = [
-            (r["_sz"], r["n"])
-            for r in index_base.select(F.size("_set").alias("_sz"))
-            .groupBy("_sz")
-            .agg(F.count("*").alias("n"))
-            .collect()
-        ]
-        partitions = _size_partitions(idx_sizes, num_partitions)
+        partitions = size_ranges(index_base)
     if classes is None:
-        if bipartite:
-            probe_sizes = [
-                (r["_sz"], r["n"])
-                for r in probe_base.select(F.size("_set").alias("_sz"))
-                .groupBy("_sz")
-                .agg(F.count("*").alias("n"))
-                .collect()
-            ]
-            classes = _size_partitions(probe_sizes, num_partitions)
-        else:
-            classes = partitions
+        classes = size_ranges(probe_base) if bipartite else partitions
     table = ensemble_band_table(
         classes, partitions, t, num_perm, false_negative_weight
     )
@@ -339,14 +345,11 @@ def lshensemble_containment(
         return _empty_result("no_feasible_cells")
 
     # ---- signatures (JVM-only: one explode + min aggregation) ----
-    probe_sigs = _persist_tracked(_ensemble_sigs(probe_base, num_perm))
+    probe_sigs, _ = _counted(_ensemble_sigs(probe_base, num_perm))
     index_sigs = (
-        _persist_tracked(_ensemble_sigs(index_base, num_perm))
+        _counted(_ensemble_sigs(index_base, num_perm))[0]
         if bipartite else probe_sigs
     )
-    probe_sigs.count()
-    if bipartite:
-        index_sigs.count()
 
     probe_bands = _probe_band_frame(
         probe_sigs, classes, partitions, table, t
@@ -356,10 +359,8 @@ def lshensemble_containment(
         # persisted BEFORE the stats counts: the counts double as the
         # eager cache fill, so the candidate join reads the cache instead
         # of re-running the explode (the candidate_pairs census pattern)
-        probe_bands = _persist_tracked(probe_bands)
-        index_bands = _persist_tracked(index_bands)
-        n_probe_rows = probe_bands.count()
-        n_index_rows = index_bands.count()
+        probe_bands, n_probe_rows = _counted(probe_bands)
+        index_bands, n_index_rows = _counted(index_bands)
     else:
         n_probe_rows = n_index_rows = None
 
@@ -369,19 +370,13 @@ def lshensemble_containment(
     )
     cands = joined.select("src", "dst").distinct()
     if collect_stats:
-        cands = _persist_tracked(cands)
-        n_candidates = cands.count()
+        cands, n_candidates = _counted(cands)
     else:
         n_candidates = None
 
+    feats = _lex(probe_base)
     if bipartite:
-        feats = probe_base.select(
-            "_id", F.array_sort("_set").alias("_lex")
-        ).unionByName(
-            index_base.select("_id", F.array_sort("_set").alias("_lex"))
-        ).dropDuplicates(["_id"])
-    else:
-        feats = probe_base.select("_id", F.array_sort("_set").alias("_lex"))
+        feats = feats.unionByName(_lex(index_base)).dropDuplicates(["_id"])
     edges = verify_containment(cands, feats, t, id_col="_id", feat_col="_lex")
     stats = {
         "n_candidates": n_candidates,
@@ -536,19 +531,14 @@ def build_ensemble_index(
     table = ensemble_band_table(
         classes, partitions, t, num_perm, false_negative_weight
     )
-    base = index_docs.select(
-        F.col(id_col).alias("_id"),
-        F.array_distinct(F.col(set_col).cast("array<string>")).alias("_set"),
-    ).filter(F.size("_set") > 0)
-    base = _persist_tracked(base)
-    n_docs = base.count()
+    base, n_docs = _set_base(index_docs, id_col, set_col)
     sigs = _ensemble_sigs(base, num_perm)
     bands = (
         _index_band_frame(sigs, partitions, table)
         if table
         else None
     )
-    feats = base.select("_id", F.array_sort("_set").alias("_lex"))
+    feats = _lex(base)
     meta = {
         "threshold": t,
         "num_perm": int(num_perm),
@@ -637,34 +627,21 @@ def query_ensemble_index(
         classes, partitions, t, meta["num_perm"],
         meta["false_negative_weight"],
     )
-    probe_base = _persist_tracked(
-        probe_docs.select(
-            F.col(id_col).alias("_id"),
-            F.array_distinct(F.col(set_col).cast("array<string>")).alias(
-                "_set"
-            ),
-        ).filter(F.size("_set") > 0)
-    )
-    n_probe = probe_base.count()
+    probe_base, n_probe = _set_base(probe_docs, id_col, set_col)
     if n_probe == 0 or not table or index["bands"] is None:
-        spark = probe_docs.sparkSession
-        schema = T.StructType([
-            T.StructField("src", probe_docs.schema[id_col].dataType),
-            # dst = the stored index's id type, so empty batches union
-            # cleanly with non-empty ones (review finding)
-            T.StructField("dst", index["feats"].schema["_id"].dataType),
-            T.StructField("containment", T.DoubleType()),
-        ])
-        return spark.createDataFrame([], schema), {
+        edges = _empty_edges(
+            probe_docs.sparkSession,
+            probe_docs.schema[id_col].dataType,
+            index["feats"].schema["_id"].dataType,
+        )
+        return edges, {
             "n_candidates": 0, "n_probe_band_rows": 0,
             "n_probe_docs": n_probe, "n_probe_out_of_class": 0,
         }
-    probe_sigs = _persist_tracked(_ensemble_sigs(probe_base, meta["num_perm"]))
-    probe_sigs.count()
+    probe_sigs, _ = _counted(_ensemble_sigs(probe_base, meta["num_perm"]))
     probe_bands = _probe_band_frame(probe_sigs, classes, partitions, table, t)
     if collect_stats:
-        probe_bands = _persist_tracked(probe_bands)
-        n_probe_rows = probe_bands.count()
+        probe_bands, n_probe_rows = _counted(probe_bands)
         cond = None
         for lc, hc in classes:
             rng = _in_range(F.size("_set"), lc, hc)
@@ -678,13 +655,12 @@ def query_ensemble_index(
     ).filter(F.col("_sb") >= t * F.col("_sa") - _EPS)
     cands = joined.select("src", "dst").distinct()
     if collect_stats:
-        cands = _persist_tracked(cands)
-        n_candidates = cands.count()
+        cands, n_candidates = _counted(cands)
     else:
         n_candidates = None
-    feats = probe_base.select(
-        "_id", F.array_sort("_set").alias("_lex")
-    ).unionByName(index["feats"].select("_id", "_lex")).dropDuplicates(["_id"])
+    feats = _lex(probe_base).unionByName(
+        index["feats"].select("_id", "_lex")
+    ).dropDuplicates(["_id"])
     edges = verify_containment(cands, feats, t, id_col="_id", feat_col="_lex")
     return edges, {
         "n_candidates": n_candidates,

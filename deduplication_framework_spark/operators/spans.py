@@ -515,11 +515,4 @@ def remove_repeated_substrings(
             F.col("_s.text_clean").alias("text_clean"),
         )
     )
-    # "_caches": the two corpus-scale tracked frames (keyed = one row per
-    # CHARACTER) — safe to unpersist as soon as a caller has materialized
-    # the output (lsh.release_census_caches() frees them too)
-    return out, {
-        "n_hot_grams": n_hot,
-        "hot_join_path": hot_join_path,
-        "_caches": [keyed, hot],
-    }
+    return out, {"n_hot_grams": n_hot, "hot_join_path": hot_join_path}

@@ -242,3 +242,70 @@ def test_cli_layer_caches_are_released(spark, tmp_path, flags):
         *flags,
     ]) == 0
     assert jsc.getPersistentRDDs().size() <= before
+
+
+class _Stop(Exception):
+    pass
+
+
+def test_stacked_layers_reach_the_pipeline_as_one_checkpoint(
+    spark, tmp_path, monkeypatch
+):
+    """Every layer's output is cut by a checkpoint, so the pipeline gets a
+    one-leaf plan however many layers stack. Without the cut each layer
+    re-plans all the layers below it: the plan grows 3-5x per layer, to
+    thousands of lines after five, and a deep enough stack exhausts the
+    driver heap. The spy stops main() before the pipeline runs."""
+    from deduplication_framework_spark.plans import pipeline
+
+    plans = []
+
+    def spy(spark, pages, *args, **kwargs):
+        plans.append(pages._jdf.queryExecution().analyzed().toString())
+        raise _Stop
+
+    monkeypatch.setattr(pipeline, "run_pipeline", spy)
+    shared = "menu home about\nthe river ran wide and slow past the mill\n"
+    inp, ev = str(tmp_path / "pages_s"), str(tmp_path / "eval_s")
+    spark.createDataFrame(
+        [(i, f"u{i}", f"{shared}note {i} on the weather", "en")
+         for i in range(8)]
+        + [(8, "u8", "one two three four five six seven eight nine", "en")],
+        ["doc_order", "url", "text", "lang"],
+    ).write.parquet(inp)
+    spark.createDataFrame(
+        [("one two three four five six seven eight nine",)], ["text"]
+    ).write.parquet(ev)
+    jsc = spark.sparkContext._jsc
+    before = jsc.getPersistentRDDs().size()
+    with pytest.raises(_Stop):
+        cli.main([
+            "--input", inp, "--output", str(tmp_path / "out_s"),
+            "--detectors", "exact",
+            "--remove-repeated-substrings", "20",
+            "--remove-frequent-spans", "5",
+            "--span-dedup",
+            "--decontaminate-against", ev, "--decontaminate-ngram", "4",
+        ])
+    (plan,) = plans
+    lines = plan.strip().splitlines()
+    assert len(lines) <= 3, f"{len(lines)}-line plan:\n{plan[:3000]}"
+    assert "LogicalRDD" in lines[-1]
+    assert jsc.getPersistentRDDs().size() <= before
+
+
+def test_observed_layer_metrics(spark):
+    """A layer's counts are observe() aggregates read after its cut:
+    reading them before any action over the frame raises instead of
+    blocking, and a sparse count that observed 0 is left out."""
+    from pyspark.sql import functions as F
+
+    metrics = cli._Observed(
+        spark.range(3),
+        {"n": F.count("*"), "n_big": F.count_if(F.col("id") > 5)},
+        sparse=["n_big"],
+    )
+    with pytest.raises(RuntimeError, match="materializ"):
+        metrics["n"]
+    metrics.frame.collect()
+    assert dict(metrics) == {"n": 3.0}
