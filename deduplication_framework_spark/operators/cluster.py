@@ -18,6 +18,7 @@ from pyspark.sql import functions as F
 from deduplication_framework_spark.operators.connected_components import (
     connected_components,
 )
+from deduplication_framework_spark.session import local_frame
 
 
 def _driver_union_find(rows: List[Row]) -> dict:
@@ -55,14 +56,11 @@ def clusters_from_edges(
     if driver_threshold > 0:
         rows = edges.select("src", "dst").limit(driver_threshold + 1).collect()
         if len(rows) <= driver_threshold:
-            labels_map = _driver_union_find(rows)
-            spark = docs.sparkSession
-            if labels_map:
-                labels = spark.createDataFrame(
-                    list(labels_map.items()), "doc_id long, cluster_id long"
-                )
-            else:
-                labels = spark.createDataFrame([], "doc_id long, cluster_id long")
+            labels = local_frame(
+                docs.sparkSession,
+                "doc_id long, cluster_id long",
+                _driver_union_find(rows).items(),
+            )
             clusters = (
                 docs.select(F.col(id_col).alias("doc_id"))
                 .join(F.broadcast(labels), "doc_id", "left")

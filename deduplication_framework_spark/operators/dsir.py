@@ -59,6 +59,7 @@ from deduplication_framework_spark.functions.quality import (
     _WS_SPARK,
 )
 from deduplication_framework_spark.operators.lm import _micro_ln
+from deduplication_framework_spark.session import local_frame
 
 __all__ = ["dsir_log_weights", "dsir_oracle_sql"]
 
@@ -112,8 +113,8 @@ def dsir_log_weights(
         F.sum("cr").alias("tr"), F.sum("ct").alias("tt")
     ).collect()[0]
     if tot.tr is None:  # zero non-empty docs: empty frame, stable schema
-        return toks.sparkSession.createDataFrame(
-            [],
+        return local_frame(
+            toks.sparkSession,
             "doc_id long, n_tokens long, logw_micro long, selected boolean",
         )
     tr, tt = int(tot.tr), int(tot.tt)

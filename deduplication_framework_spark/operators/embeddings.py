@@ -24,6 +24,8 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from deduplication_framework_spark.session import local_frame
+
 
 def _dot_expr(a, b):
     return F.aggregate(
@@ -89,9 +91,10 @@ def kmeans_block(
                 predictionCol="block_id")
     model = km.fit(feats)
     centers = model.clusterCenters()
-    centers_df = feats.sparkSession.createDataFrame(
-        [(i, [float(x) for x in c]) for i, c in enumerate(centers)],
+    centers_df = local_frame(
+        feats.sparkSession,
         "block_id int, centroid array<double>",
+        [(i, [float(x) for x in c]) for i, c in enumerate(centers)],
     )
     out = (
         model.transform(feats)

@@ -6,8 +6,14 @@ Reference semantics:
   (sha1 of file bytes);
 * hash prefilter before near-dup — ``clean_the_dataset.py:107-109``.
 
-Spark form: hash → groupBy → keeper = min(doc_order). One shuffle, map-side
-partial aggregation for the group counts. ``xxhash64`` is the fast 64-bit
+Spark form: hash → one window over a narrow ``(id, order, hash)``
+projection ranks each hash group; the rows ranked after the first are the
+duplicates, and the keepers are the docs left-anti-joined against the
+duplicate ids. Only ~40 bytes per doc (id + md5, compressed) move through
+the window's shuffle — never the text — and the anti-join broadcasts the
+duplicate-id set when the planner's estimate fits
+``autoBroadcastJoinThreshold``; above it, a sort-merge anti-join shuffles
+the docs once by id. ``xxhash64`` is the fast 64-bit
 prefilter option; at 10^10+ distinct docs its birthday-collision
 expectation becomes real (a collision silently welds two unrelated texts),
 so the pipeline's stage-1 dedup uses ``md5`` (128-bit, also byte-parity
@@ -29,11 +35,12 @@ def exact_dedup(
     order_col: str = None,
     hash_fn: str = "xxhash64",
 ) -> Tuple[DataFrame, DataFrame]:
-    """→ (keepers_df, exact_edges).
+    """→ (keepers_df, exact_edges). ``id_col`` must be unique.
 
     keepers_df: input rows minus exact duplicates (keeper = min order per
-    hash group). exact_edges(src, dst, sim=1.0): keeper → each dropped copy,
-    so exact groups merge into the same final clusters as near-dup edges.
+    hash group), with the input's columns in their order. exact_edges(src,
+    dst, sim=1.0): keeper → each dropped copy, so exact groups merge into the
+    same final clusters as near-dup edges. NULL texts form one group.
     """
     order_col = order_col or id_col
     if hash_fn == "md5":
@@ -43,18 +50,21 @@ def exact_dedup(
     else:
         h = F.xxhash64(F.col(text_col))
 
-    hashed = docs.withColumn("_h", h)
+    narrow = docs.select(*dict.fromkeys([id_col, order_col]), h.alias("_h"))
     w = Window.partitionBy("_h").orderBy(F.col(order_col))
-    ranked = hashed.withColumn("_keep_id", F.first(id_col).over(w)).withColumn(
-        "_rn", F.row_number().over(w)
+    dups = (
+        narrow.withColumn("_rn", F.row_number().over(w))
+        .withColumn("_keep_id", F.first(id_col).over(w))
+        .filter(F.col("_rn") > 1)
     )
-    keepers = ranked.filter(F.col("_rn") == 1).drop("_h", "_rn", "_keep_id")
-    edges = (
-        ranked.filter(F.col("_rn") > 1)
-        .select(
-            F.col("_keep_id").alias("src"),
-            F.col(id_col).alias("dst"),
-            F.lit(1.0).alias("sim"),
-        )
+    edges = dups.select(
+        F.col("_keep_id").alias("src"),
+        F.col(id_col).alias("dst"),
+        F.lit(1.0).alias("sim"),
+    )
+    keepers = docs.join(
+        dups.select(F.col(id_col).alias("_dup")),
+        F.col(id_col) == F.col("_dup"),
+        "left_anti",
     )
     return keepers, edges

@@ -51,6 +51,7 @@ from pyspark.sql import functions as F
 from ..config import PipelineConfig
 from ..functions import kernels as K
 from ..functions.text import minhash_features
+from ..session import local_frame
 from .bloom import BloomFilter, bloom_build, bloom_tag
 from .lsh import _persist_tracked, minhash_bands
 from .verify import _jaccard_at_least
@@ -353,10 +354,11 @@ def _write_bloom_row(store, spark, bloom: BloomFilter, hg: str) -> None:
         )
     ]
     store.write(
-        spark.createDataFrame(
-            row,
+        local_frame(
+            spark,
             "m_bits long, k int, n_items long, key_desc string, "
             "words binary",
+            row,
         ),
         _IDX_BLOOM,
         hg,

@@ -49,6 +49,7 @@ from deduplication_framework_spark.functions.quality import (
     _WS_DUCK,
     _WS_SPARK,
 )
+from deduplication_framework_spark.session import local_frame
 
 __all__ = ["lm_score_docs", "bucket_lm_scores", "lm_oracle_sql"]
 
@@ -110,8 +111,8 @@ def lm_score_docs(
         F.sum("c").alias("tt"), F.count("*").alias("vv")
     ).collect()[0]
     if tot.tt is None:  # zero non-empty docs: empty frame, stable schema
-        return base.sparkSession.createDataFrame(
-            [], "doc_id long, logp_micro long, n_tokens long"
+        return local_frame(
+            base.sparkSession, "doc_id long, logp_micro long, n_tokens long"
         )
     tt, vv = int(tot.tt), int(tot.vv)
 

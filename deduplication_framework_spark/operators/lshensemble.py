@@ -62,6 +62,7 @@ from deduplication_framework_spark.operators.verify import (
     _EPS,
     verify_containment,
 )
+from deduplication_framework_spark.session import local_frame
 
 
 def _size_partitions(size_counts, num_partitions):
@@ -149,7 +150,7 @@ def _empty_edges(spark, src_type, dst_type):
     """The edge frame ``(src, dst, containment)`` with no rows. ``dst``
     takes the index side's id type, so an empty batch unions cleanly with
     non-empty ones (whose dst type verify propagates from the index)."""
-    return spark.createDataFrame([], T.StructType([
+    return local_frame(spark, T.StructType([
         T.StructField("src", src_type),
         T.StructField("dst", dst_type),
         T.StructField("containment", T.DoubleType()),

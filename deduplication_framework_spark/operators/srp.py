@@ -33,6 +33,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from deduplication_framework_spark.operators.lsh import _track, candidate_pairs
+from deduplication_framework_spark.session import local_frame
 
 
 def srp_bands(
@@ -52,9 +53,7 @@ def srp_bands(
     if dim is None:
         probe = df.select(vec_col).limit(1).collect()
         if not probe:
-            return spark.createDataFrame(
-                [], f"{id_col} long, band_idx int, band_key long"
-            )
+            return local_frame(spark, f"{id_col} long, band_idx int, band_key long")
         dim = len(probe[0][0])
     rng = np.random.RandomState(seed)
     planes = rng.randn(b * r, dim)

@@ -45,6 +45,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
+from deduplication_framework_spark.session import local_frame
+
 
 @dataclass
 class StageCommit:
@@ -60,6 +62,15 @@ class StageCommit:
 
     def to_json(self) -> str:
         return json.dumps(self.__dict__, sort_keys=True)
+
+
+# metrics_df's columns: a StageCommit's fields (less its schema) in name
+# order, the two dict/list fields as JSON text
+_ROLLUP_SCHEMA = (
+    "committed_at double, config_hash string, lineage array<string>, "
+    "metrics string, partition_rows string, partitions long, rows long, "
+    "stage string"
+)
 
 
 def _stage_commit(
@@ -188,23 +199,18 @@ class ParquetTableStore:
 
     def metrics_df(self) -> DataFrame:
         """All stage commits as a DataFrame — the `_metrics` rollup surface."""
-        commits = []
+        rows = []
         for f in sorted(os.listdir(self.root)):
             if f.endswith("._commit.json"):
                 with open(os.path.join(self.root, f)) as fh:
                     c = json.load(fh)
-                c["metrics"] = json.dumps(c.get("metrics", {}))
-                c["partition_rows"] = json.dumps(c.get("partition_rows", []))
-                c.pop("schema", None)
-                commits.append(c)
-        if not commits:
-            return self.spark.createDataFrame(
-                [],
-                "stage string, config_hash string, rows long, partitions int, "
-                "partition_rows string, lineage array<string>, metrics string, "
-                "committed_at double",
-            )
-        return self.spark.createDataFrame(commits)
+                rows.append((
+                    c["committed_at"], c["config_hash"], c["lineage"],
+                    json.dumps(c.get("metrics", {})),
+                    json.dumps(c.get("partition_rows", [])),
+                    c["partitions"], c["rows"], c["stage"],
+                ))
+        return local_frame(self.spark, _ROLLUP_SCHEMA, rows)
 
 
 class IcebergTableStore:

@@ -223,8 +223,9 @@ def run_pipeline(
     # md5 (128-bit): at 10^12-doc corpus scale a 64-bit text hash has a
     # real birthday-collision expectation (~(10^10 distinct)^2/2^65 ≈ 3
     # false merges); 128 bits puts it at ~1e-19 — same risk budget as
-    # the suffix-array 128-bit gram keys. One JVM hash per doc; cost is
-    # noise next to featurization.
+    # the suffix-array 128-bit gram keys. One JVM hash per doc; the ranking
+    # window shuffles only (doc_id, md5) and the keepers are an anti-join
+    # against the duplicate ids, so the text never moves.
     uniq_docs, exact_edges = exact_dedup(docs, hash_fn="md5")
     if "exact" not in detectors:
         uniq_docs, exact_edges = docs, exact_edges.limit(0)

@@ -29,6 +29,7 @@ from pyspark.sql import functions as F
 
 from deduplication_framework_spark.config import PipelineConfig
 from deduplication_framework_spark.plans.pipeline import run_pipeline
+from deduplication_framework_spark.session import local_frame
 
 
 def downstream_probe(
@@ -58,9 +59,10 @@ def downstream_probe(
         {r[0] for r in train_docs.select(label_col).distinct().collect()}
         | {r[0] for r in eval_docs.select(label_col).distinct().collect()}
     )
-    mapping = spark.createDataFrame(
-        [(l, float(i)) for i, l in enumerate(labels)],
+    mapping = local_frame(
+        spark,
         f"{label_col} string, label double",
+        [(l, float(i)) for i, l in enumerate(labels)],
     )
     train = train_docs.select("text", label_col).join(mapping, label_col)
     evald = eval_docs.select("text", label_col).join(mapping, label_col)
@@ -182,4 +184,4 @@ def threshold_sweep(
     )
     if evaluate:
         schema += ", probe_accuracy double, vocab_size long, label_tv_shift double"
-    return spark.createDataFrame(rows, schema)
+    return local_frame(spark, schema, rows)

@@ -31,6 +31,7 @@ from pyspark.sql import functions as F
 
 from deduplication_framework_spark.config import PipelineConfig
 from deduplication_framework_spark.functions.text import make_fused_features_udf
+from deduplication_framework_spark.session import local_frame
 
 
 def stream_signatures(
@@ -123,7 +124,7 @@ class IncrementalExactDedup:
     def _seen(self, exclude_batch: Optional[int] = None) -> DataFrame:
         dirs = self._committed_batch_dirs(self.seen_path, exclude_batch)
         if not dirs:
-            return self.spark.createDataFrame([], "text_hash long")
+            return local_frame(self.spark, "text_hash long")
         return self.spark.read.parquet(*dirs).select("text_hash")
 
     def _done(self, batch_id: int) -> bool:
@@ -182,12 +183,12 @@ class IncrementalExactDedup:
                 from pyspark.sql.types import StructType
 
                 with open(sj) as fh:
-                    return self.spark.createDataFrame(
-                        [], StructType.fromJson(json.load(fh))
+                    return local_frame(
+                        self.spark, StructType.fromJson(json.load(fh))
                     )
             if self.schema is not None:
-                return self.spark.createDataFrame([], self.schema)
-            return self.spark.createDataFrame([], "url string, text string")
+                return local_frame(self.spark, self.schema)
+            return local_frame(self.spark, "url string, text string")
         return self.spark.read.parquet(*dirs)
 
 

@@ -21,6 +21,7 @@ from deduplication_framework_spark.operators.lsh import (
 )
 from deduplication_framework_spark.operators.verify import verify_jaccard
 from deduplication_framework_spark.oracle import numpy_oracle as O
+from deduplication_framework_spark.session import local_frame
 
 
 class TestExactDedup:
@@ -33,6 +34,85 @@ class TestExactDedup:
         assert {r.doc_id for r in keep.collect()} == {0, 1, 4}
         got = {(r.src, r.dst) for r in edges.collect()}
         assert got == {(0, 2), (0, 3)}
+
+    @staticmethod
+    def _random_docs(spark, seed, n=300):
+        """Shuffled unique ids, a separate unique order column, texts drawn
+        from a small pool (duplicate groups) with NULLs, and the id and
+        text columns in neither the first nor the last position."""
+        rng = np.random.RandomState(seed)
+        ids = rng.choice(10**6, n, replace=False)
+        order = rng.permutation(n)
+        pool = [f"text {i}" for i in range(40)] + [None]
+        texts = [pool[i] for i in rng.randint(0, len(pool), n)]
+        rows = [
+            (float(i) / 7, texts[i], int(ids[i]), int(order[i]), f"l{i % 3}")
+            for i in range(n)
+        ]
+        cols = "score double, text string, doc_id long, o long, lang string"
+        return spark.createDataFrame(rows, cols).repartition(4), rows
+
+    @pytest.mark.parametrize(
+        "seed,order_col,hash_fn",
+        [(0, "o", "md5"), (1, None, "xxhash64"), (2, "o", "sha1")],
+    )
+    def test_matches_reference_on_random_docs(self, spark, seed, order_col, hash_fn):
+        """Keepers and edges equal a first-seen-wins reference: per text
+        (all NULL texts are one group) the row with the least order keeps,
+        every other row is an edge keeper → copy; keepers keep the input's
+        columns, types and order."""
+        df, rows = self._random_docs(spark, seed)
+        keep, edges = exact_dedup(df, order_col=order_col, hash_fn=hash_fn)
+        rank = 3 if order_col else 2
+        first = {}
+        for r in sorted(rows, key=lambda r: r[rank]):
+            first.setdefault(r[1], r[2])
+        want_keep = sorted(r for r in rows if first[r[1]] == r[2])
+        want_edges = sorted(
+            (first[r[1]], r[2], 1.0) for r in rows if first[r[1]] != r[2]
+        )
+        assert keep.dtypes == df.dtypes
+        assert sorted(tuple(r) for r in keep.collect()) == want_keep
+        assert edges.columns == ["src", "dst", "sim"]
+        assert sorted(tuple(r) for r in edges.collect()) == want_edges
+        assert any(r[1] is None for r in want_keep)
+        assert len(want_edges) > len(want_keep) > 40
+
+    def test_window_shuffles_no_text(self, spark):
+        """The ranking window's shuffle carries ids and hashes only: no
+        Exchange under the Window of either output has the text column."""
+        df, _ = self._random_docs(spark, 3)
+        keep, edges = exact_dedup(df, order_col="o", hash_fn="md5")
+
+        def nodes(plan, stop=None):
+            """Pre-order plan nodes, not descending below a ``stop`` node."""
+            yield plan
+            if plan.nodeName() == stop:
+                return
+            if plan.nodeName() == "AdaptiveSparkPlan":
+                kids = [plan.initialPlan()]
+            else:
+                ch = plan.children()
+                kids = [ch.apply(i) for i in range(ch.size())]
+            for k in kids:
+                yield from nodes(k, stop)
+
+        for out in (keep, edges):
+            plan = out._jdf.queryExecution().executedPlan()
+            windows = [n for n in nodes(plan) if n.nodeName() == "Window"]
+            assert windows
+            # the shuffles that feed each window (the input's own
+            # repartition lies below them)
+            shuffles = [
+                n
+                for w in windows
+                for n in nodes(w, stop="Exchange")
+                if n.nodeName() == "Exchange"
+            ]
+            assert shuffles
+            for x in shuffles:
+                names = [x.output().apply(i).name() for i in range(x.output().size())]
+                assert "text" not in names, names
 
 
 class TestConnectedComponents:
@@ -303,6 +383,23 @@ class TestAdaptiveCC:
         a = {r.doc_id: r.cluster_id for r in fast.collect()}
         b = {r.doc_id: r.cluster_id for r in dist.collect()}
         assert a == b
+
+    @pytest.mark.parametrize("edge_rows", [[(1, 2), (2, 3), (5, 7)], []])
+    def test_driver_path_labels_are_a_local_relation(self, spark, edge_rows):
+        """The driver union-find's labels enter the plan as a LocalRelation
+        (no pickled-RDD scan, so no Python workers start), and an empty
+        edge set still yields one singleton cluster per doc."""
+        docs = spark.range(10).withColumnRenamed("id", "doc_id")
+        edges = local_frame(spark, "src long, dst long", edge_rows)
+        clusters, rounds = clusters_from_edges(docs, edges, driver_threshold=100)
+        plan = clusters._jdf.queryExecution().toString()
+        assert "LocalRelation" in plan
+        assert "ExistingRDD" not in plan and "LogicalRDD" not in plan, plan
+        got = {r.doc_id: r.cluster_id for r in clusters.collect()}
+        want = {i: i for i in range(10)}
+        if edge_rows:
+            want.update({2: 1, 3: 1, 7: 5})
+        assert rounds == 0 and got == want
 
     def test_driver_path_threshold_boundary(self, spark):
         """The bounded collect decides the path exactly as an edge count

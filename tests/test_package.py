@@ -233,3 +233,27 @@ def test_one_composition_of_the_pipeline():
     api = os.path.join(pkg, "api.py")
     hits = sorted({name for _, name in _calls(api)} & banned)
     assert not hits, f"api.py rebuilds pipeline steps: {hits}"
+
+
+def test_driver_frames_built_only_by_local_frame():
+    """No package module calls ``createDataFrame`` except
+    ``session.local_frame``: a frame from a list of Python rows is a
+    pickled RDD whose first action starts a resident Python daemon plus
+    one worker per core (an empty list too), while ``local_frame`` hands
+    over an Arrow table and starts none."""
+    pkg = os.path.join(ROOT, "deduplication_framework_spark")
+    callers = set()
+    for dirpath, _, files in os.walk(pkg):
+        for f in sorted(files):
+            if f.endswith(".py"):
+                path = os.path.join(dirpath, f)
+                rel = os.path.relpath(path, ROOT)
+                callers |= {
+                    f"{rel}::{fn}"
+                    for fn, name in _calls(path)
+                    if name == "createDataFrame"
+                }
+    assert callers == {
+        os.path.join("deduplication_framework_spark", "session.py")
+        + "::local_frame"
+    }, sorted(callers)
