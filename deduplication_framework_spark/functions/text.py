@@ -348,21 +348,6 @@ def jaccard_expr(a: Column, b: Column) -> Column:
     return F.when(union == 0, F.lit(1.0)).otherwise(inter / union)
 
 
-def hamming_expr(a: Column, b: Column) -> Column:
-    """bit_count(a XOR b) on 64-bit fingerprints — JVM builtin."""
-    return F.bit_count(a.bitwiseXOR(b))
-
-
-def minhash_agreement_expr(a: Column, b: Column, num_perm: int) -> Column:
-    """MinHash Jaccard estimate = fraction of agreeing signature positions."""
-    agree = F.aggregate(
-        F.zip_with(a, b, lambda x, y: (x == y).cast("int")),
-        F.lit(0),
-        lambda acc, v: acc + v,
-    )
-    return agree / F.lit(float(num_perm))
-
-
 def word_bigram_sets(
     df,
     *,

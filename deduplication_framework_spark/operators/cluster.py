@@ -127,19 +127,6 @@ def score_keepers(
     )
 
 
-def dup_pairs_from_clusters(clusters: DataFrame) -> DataFrame:
-    """(doc_id, cluster_id) → all intra-cluster pairs (src < dst), expressed
-    as each member paired with every later member *via the cluster key* —
-    used by the recall metric (pairs within a cluster are the positives)."""
-    a = clusters.select(F.col("cluster_id"), F.col("doc_id").alias("src"))
-    b = clusters.select(F.col("cluster_id"), F.col("doc_id").alias("dst"))
-    return (
-        a.join(b, "cluster_id")
-        .filter(F.col("src") < F.col("dst"))
-        .select("src", "dst")
-    )
-
-
 def soft_dedup_weights(
     clusters: DataFrame,
     *,

@@ -30,9 +30,11 @@ within 50 at 256.
 
 Every round materializes through the ``checkpoint`` callable to truncate
 lineage (a driver-loop over joins would otherwise build an exponentially
-deep plan): by default a ``localCheckpoint`` whose blocks are freed once
-the next round holds its own; on a cluster each round can instead
-checkpoint to the table store (see plans.checkpoint) for resumability.
+deep plan): by default ``_stats_bounded_local_ckpt``, a ``localCheckpoint``
+that costs the round one action and carries size statistics built from
+counts that action observed, whose blocks are freed once the next round
+holds its own; on a cluster each round can instead checkpoint to
+the table store (see plans.checkpoint) for resumability.
 """
 
 from __future__ import annotations
@@ -42,6 +44,7 @@ from typing import Optional, Tuple
 from pyspark.serializers import CPickleSerializer
 from pyspark.sql import DataFrame, Observation, Row
 from pyspark.sql import functions as F
+from pyspark.sql.types import BinaryType, StringType
 
 
 def connected_components(
@@ -77,23 +80,61 @@ def connected_components(
 
 
 def _stats_bounded_local_ckpt(df: DataFrame) -> DataFrame:
-    """localCheckpoint whose resulting LogicalRDD carries REAL (bounded)
-    size statistics. Spark 4's Dataset.checkpoint copies the child plan's
-    estimated stats into the checkpointed LogicalRDD; the size estimate of
-    a join is the PRODUCT of its children's sizes, so in an iterative
-    loop each round's checkpointed sizeInBytes is ~the 4th power of the
-    previous round's — after ~8 rounds the BigInteger arithmetic inside
-    SizeInBytesOnlyStatsPlanVisitor dominates the driver (measured ~4x
-    wall per round on a 400-node toy graph; jstack: BigInteger.
-    multiplyToomCook3 under LogicalRDD.rewriteStatsAndConstraints).
-    Persisting first makes the checkpointed plan an InMemoryRelation,
-    whose post-materialization stats are the ACTUAL cached bytes — one
-    extra cache scan per round buys O(1) stats forever. The InMemory
-    cache is dropped immediately: the checkpoint holds its own blocks."""
-    c = df.persist()
-    out = c.localCheckpoint(eager=True)
-    c.unpersist()
-    return out
+    """The lineage cut: ``df``'s rows as a ``localCheckpoint``, in ONE
+    action, whose LogicalRDD carries size statistics built from the row
+    count and string bytes observed during that action.
+
+    The statistics must not be the child plan's estimate, which Spark's
+    checkpoint copies into the LogicalRDD: a join's size estimate is the
+    PRODUCT of its children's, so in an iterative loop each round's
+    checkpointed sizeInBytes is ~the 4th power of the previous round's,
+    and after ~8 rounds the BigInteger arithmetic in the stats visitor
+    dominates the driver (jstack: BigInteger.multiplyToomCook3 under
+    LogicalRDD.rewriteStatsAndConstraints; an 18-round loop did not finish
+    in 240 s). So the checkpointed plan is rebound to the Statistics of a
+    ``spark.range(k)`` plan (8 B per row: sizeInBytes = 8k, rowCount =
+    k), k = ⌈bytes / 8⌉, where bytes = the observed bytes of the top-level
+    string and binary columns + rows × (8 B + the default size of each
+    other column, Spark's own per-row estimate). A string's default size
+    is 20 B, so without the observed bytes a cut of documents would look
+    small enough to broadcast at any corpus size.
+    (Py4J turns a Scala BigInt into a Python int, so Statistics cannot be
+    built from Python directly.) Persisting first would give real stats
+    too, from the cached bytes, but under AQE the cache build and the
+    checkpoint's count are two jobs."""
+    spark = df.sparkSession
+    var = [
+        isinstance(f.dataType, (StringType, BinaryType)) for f in df.schema.fields
+    ]
+    obs = Observation()
+    ckpt = df.observe(
+        obs,
+        F.count(F.lit(1)),
+        *[
+            F.sum(F.octet_length(df[i]))
+            for i, is_var in enumerate(var) if is_var
+        ],
+    ).localCheckpoint(eager=True)
+    rows, *var_bytes = _observed_row(obs, spark)
+    fixed = 8 + sum(
+        f.dataType().defaultSize()
+        for f, is_var in zip(df._jdf.schema().fields(), var) if not is_var
+    )
+    nbytes = rows * fixed + sum(b or 0 for b in var_bytes)
+    stats = (
+        spark.range(-(-nbytes // 8))._jdf.queryExecution()
+        .optimizedPlan().stats()
+    )
+    jvm, jsession = spark._jvm, df._jdf.sparkSession()
+    rdd_plan = ckpt._jdf.queryExecution().analyzed()
+    rebound = rdd_plan.copy(
+        rdd_plan.output(), rdd_plan.rdd(), rdd_plan.outputPartitioning(),
+        rdd_plan.outputOrdering(), rdd_plan.isStreaming(), rdd_plan.stream(),
+        jsession, jvm.scala.Some(stats), jvm.scala.Option.empty(),
+    )
+    return DataFrame(
+        jvm.org.apache.spark.sql.classic.Dataset.ofRows(jsession, rebound), spark
+    )
 
 
 def _cc_loop(edges, src, dst, max_iterations, ckpt, round_stats, release):

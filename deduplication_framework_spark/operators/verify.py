@@ -26,7 +26,6 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.pandas.functions import pandas_udf
 
-from deduplication_framework_spark.functions.text import hamming_expr
 
 # conservative guard for float threshold arithmetic in recall-safe
 # prefilters: a threshold whose double literal rounds ABOVE its rational
@@ -111,26 +110,6 @@ def verify_jaccard(
     return _jaccard_at_least(
         joined, f"{feat_col}_a", f"{feat_col}_b", threshold, size_prefilter
     ).select("src", "dst", "sim")
-
-
-def verify_hamming(
-    pairs: DataFrame,
-    fingerprints: DataFrame,
-    dist: int,
-    id_col: str = "doc_id",
-    fp_col: str = "simhash",
-) -> DataFrame:
-    """→ edges(src, dst, sim) with sim = 64 - hamming distance (so larger =
-    more similar, uniform edge schema across detectors)."""
-    joined = _attach(pairs, fingerprints, id_col, [fp_col])
-    d = hamming_expr(F.col(f"{fp_col}_a"), F.col(f"{fp_col}_b"))
-    return (
-        joined.withColumn("hamming", d)
-        .filter(F.col("hamming") <= dist)
-        .select(
-            "src", "dst", ((F.lit(64) - F.col("hamming")) / 64.0).alias("sim")
-        )
-    )
 
 
 def make_sorted_containment_udf():

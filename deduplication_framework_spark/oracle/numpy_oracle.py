@@ -128,32 +128,6 @@ def greedy_jaccard(
     return labels
 
 
-def windowed_jaccard(
-    features: Sequence[Set], threshold: float = 0.8, window_size: int = 100
-) -> Dict[int, int]:
-    """pipeline_api.py:531-576: compare against last `window_size` KEPT items;
-    dup matches ALL window hits (we label by the first hit's keeper)."""
-    labels: Dict[int, int] = {}
-    kept: List[int] = []
-    for idx in range(len(features)):
-        cur = features[idx]
-        first_hit = None
-        start = max(0, len(kept) - window_size)
-        for j in range(start, len(kept)):
-            a, b = cur, features[kept[j]]
-            union = a | b
-            sim = 1.0 if (not a and not b) else (len(a & b) / len(union) if union else 0.0)
-            if sim >= threshold:
-                first_hit = kept[j]
-                break
-        if first_hit is None:
-            labels[idx] = idx
-            kept.append(idx)
-        else:
-            labels[idx] = labels[first_hit]
-    return labels
-
-
 def md5_exact(texts: Sequence[str]) -> Dict[int, int]:
     """pipeline_api.py:340-370 on (already normalized) texts."""
     labels: Dict[int, int] = {}
@@ -273,30 +247,6 @@ def substring_pairs(
     for i in range(n):
         for j in range(i + 1, n):
             if K.longest_common_substring_len(texts[i], texts[j]) >= min_match_chars:
-                out.add((i, j))
-    return out
-
-
-def strong_jaccard_pairs(
-    texts: Sequence[str], ngram_size: int = 3, threshold: float = 0.9
-) -> Set[Tuple[int, int]]:
-    """Exact all-pairs multi-granularity Jaccard pairs with J >= threshold —
-    the "strong" oracle for VERIFIED pipelines: at J >= 0.9 the LSH S-curve
-    collides with P > 0.99, so a verify=True run must recover these pairs
-    (the unverified sequential-LSH oracle also contains band-collision
-    false positives a verified run rightly drops)."""
-    feats = shingle_sets(texts, n=ngram_size)
-    out: Set[Tuple[int, int]] = set()
-    for i in range(len(texts)):
-        a = feats[i]
-        for j in range(i + 1, len(texts)):
-            b = feats[j]
-            if not a and not b:
-                sim = 1.0
-            else:
-                u = a | b
-                sim = (len(a & b) / len(u)) if u else 0.0
-            if sim >= threshold:
                 out.add((i, j))
     return out
 

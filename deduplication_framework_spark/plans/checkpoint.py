@@ -179,9 +179,9 @@ class ParquetTableStore:
 
     def update_metrics(self, name: str, metrics: Dict[str, float]) -> None:
         """Merge detector/stage metrics into an existing commit record —
-        used by the pipeline's DEFERRED stats job, which collects bucket
-        metrics after the stage write so resumed runs can read them back
-        instead of recomputing the banding jobs."""
+        the pipeline records each detector's bucket metrics after its
+        edges write, so resumed runs can read them back instead of
+        recomputing the banding jobs."""
         c = self.read_commit(name)
         if c is None:
             return
@@ -293,9 +293,3 @@ class IcebergTableStore:
 
     def read(self, name: str) -> DataFrame:
         return self.spark.read.table(self._full(name))
-
-
-def get_store(spark: SparkSession, root: str, catalog: str = "parquet"):
-    if catalog == "iceberg":
-        return IcebergTableStore(spark, root)
-    return ParquetTableStore(spark, root)

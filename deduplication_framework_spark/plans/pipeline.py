@@ -171,7 +171,10 @@ def cluster_and_keep(
         cc_m["cc_rounds"] = rounds
         return clusters
 
-    clusters = stage("clusters", _clusters, ["edges"], cc_m)
+    # persist: without a store, keepers and every caller action would
+    # otherwise re-run the clusters plan (the driver path's label
+    # LocalRelation is re-converted and re-broadcast per action)
+    clusters = stage("clusters", _clusters, ["edges"], cc_m, persist=True)
     if "cc_rounds" not in cc_m:
         cc_m = stage.store.read_commit("clusters").metrics
     cc_rounds = int(cc_m.get("cc_rounds", 0))
@@ -181,10 +184,10 @@ def cluster_and_keep(
         "keepers", lambda: keepers_op(docs, clusters), ["clusters", "docs"]
     )
 
-    # every consumer of the detectors' band/census caches has materialized
-    # by now (stats collected, edges cached + consumed by CC) — free the
-    # corpus-scale cache entries so repeated runs in one session don't
-    # stack them until LRU evicts something live
+    # every consumer of the detectors' band caches and census cuts has
+    # materialized by now (edges committed, or cached and fully scanned by
+    # CC) — free them so repeated runs in one session don't stack
+    # corpus-scale blocks until LRU evicts something live
     release_census_caches()
     return PipelineResult(docs, edges, clusters, keep, cc_rounds, stage.metrics)
 
@@ -301,10 +304,9 @@ def run_pipeline(
     lsh_feats = mh_feats.select("doc_id", "shingles") if need_feats else None
 
     # ---- detector branches: each builder returns (edges, stats); branch()
-    # stages the edges and tags the stats with the detector. Stats are NOT
-    # collected here — they are unioned into ONE deferred job after all
-    # branches are declared, so detector DAGs run concurrently (round 1
-    # ran an eager 1-row collect() per detector, serializing them).
+    # stages the edges and records the stats. The stats are already known
+    # when a builder returns: its bucket census is a lineage cut whose one
+    # action observed them, so reading them costs no job.
     def _minhash():
         return minhash_edges(mh_feats.select("doc_id", "sig"), lsh_feats, cfg)
 
@@ -337,8 +339,8 @@ def run_pipeline(
         # bucket_cap=1: rank buckets are true cliques (identical L-char
         # prefix), star+chain is exactly equivalent after CC
         # no cache_bands: with bucket_cap=1 the band table has exactly one
-        # consumer (the fused window census inside candidate_pairs, which
-        # persists its own multi-member-bucket frame for the stats job)
+        # consumer (the census cut inside candidate_pairs, whose one action
+        # also observes the bucket stats)
         return substring_edges_suffix_array(
             uniq_docs,
             cfg.suffix.min_match_chars,
@@ -355,19 +357,37 @@ def run_pipeline(
         "suffix_array": (_suffix_array, "docs_uniq"),
     }
 
-    def branch(det: str):
+    def branch(det: str) -> DataFrame:
         name = f"edges_{det}"
         if stage.valid(name):
             # resumed detector: reuse the committed edges AND its recorded
-            # bucket metrics (the deferred stats job wrote them into the
-            # commit) instead of re-running the banding jobs
+            # bucket metrics instead of re-running the banding jobs
             for k, v in store.read_commit(name).metrics.items():
                 metrics[f"{det}.{k}"] = float(v)
-            return stage(name, None, []), None
+            return stage(name, None, [])
         build, parent = builders[det]
         det_edges, det_stats = build()
         det_edges = stage(name, lambda: det_edges, [parent])
-        return det_edges, det_stats.withColumn("detector", F.lit(det))
+        if collect_stats:
+            row = det_stats.first().asDict()
+            # simhash stats carry an extra n_hot_band_rows (first-level
+            # hot rows, handled exactly by recursive pigeonhole;
+            # n_capped_band_rows is the lossy-fallback count for every
+            # detector)
+            det_m = {
+                "n_buckets": float(row["n_buckets"]),
+                "capped_band_rows": float(row["n_capped_band_rows"]),
+                "max_bucket_size": float(row["max_bucket_size"]),
+            }
+            if "n_hot_band_rows" in row:
+                det_m["hot_band_rows"] = float(row["n_hot_band_rows"])
+            for k, v in det_m.items():
+                metrics[f"{det}.{k}"] = v
+            if store is not None:
+                # record onto the edges commit so resumed runs read the
+                # metrics back instead of re-running the banding jobs
+                store.update_metrics(name, det_m)
+        return det_edges
 
     dets = [d for d in detectors if d in builders]
     if store is not None and len(dets) > 1:
@@ -378,43 +398,16 @@ def run_pipeline(
         with ThreadPoolExecutor(max_workers=len(dets)) as ex:
             outs = list(ex.map(branch, dets))
     else:
-        # without a store, branch DECLARATION is mostly lazy — the single
-        # stats job below (or the caller's first action) schedules the
-        # detector stages in one Spark job, which runs independent stages
-        # concurrently by itself. Exception: the minhash branch (with
-        # bucket_cap > 1) and the simhash branch each run one small
-        # census job at build time (their adaptive hot-bucket switch
-        # needs the bucket-size census on the driver; see candidate_pairs
-        # and simhash_candidate_edges) — so their plans are not free to
-        # construct, each costs featurization + one band-window pass.
+        # without a store, branch DECLARATION is mostly lazy — the
+        # caller's first action schedules the detector stages in one Spark
+        # job, which runs independent stages concurrently by itself. Each
+        # branch's plan is not free to construct, though: its bucket
+        # census is one cut, run at build time (the adaptive hot-bucket
+        # switch needs the census on the driver; see candidate_pairs and
+        # simhash_candidate_edges), costing featurization + one
+        # band-window pass.
         outs = [branch(d) for d in dets]
-    edge_parts.extend(o[0] for o in outs)
-    stats_parts = [o[1] for o in outs if o[1] is not None]
-
-    if collect_stats and stats_parts:
-        allstats = stats_parts[0]
-        for s in stats_parts[1:]:
-            # allowMissingColumns: simhash stats carry an extra
-            # n_hot_band_rows column (first-level hot rows, handled
-            # exactly by recursive pigeonhole; n_capped_band_rows is the
-            # lossy-fallback count for every detector)
-            allstats = allstats.unionByName(s, allowMissingColumns=True)
-        for row in allstats.collect():
-            rowd = row.asDict()
-            det = row["detector"]
-            det_stats = {
-                "n_buckets": float(row["n_buckets"] or 0),
-                "capped_band_rows": float(row["n_capped_band_rows"] or 0),
-                "max_bucket_size": float(row["max_bucket_size"] or 0),
-            }
-            if rowd.get("n_hot_band_rows") is not None:
-                det_stats["hot_band_rows"] = float(rowd["n_hot_band_rows"])
-            for k, v in det_stats.items():
-                metrics[f"{det}.{k}"] = v
-            if store is not None:
-                # record onto the edges commit so resumed runs read the
-                # metrics back instead of re-running the banding jobs
-                store.update_metrics(f"edges_{det}", det_stats)
+    edge_parts.extend(outs)
 
     edges = edge_parts[0]
     for e in edge_parts[1:]:

@@ -332,12 +332,3 @@ def extract_text_col(html_col) -> "F.Column":
 TESTDATA_TABLES = (
     "region nation customer supplier part orders lineitem events documents embeddings"
 ).split()
-
-
-def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
-
-
-def register_testdata(spark: SparkSession, sf_dir: str) -> None:
-    for name in TESTDATA_TABLES:
-        load_table(spark, sf_dir, name).createOrReplaceTempView(name)

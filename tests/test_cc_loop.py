@@ -7,7 +7,11 @@ import threading
 import numpy as np
 import pytest
 
+from pyspark.sql import functions as F
+
 from deduplication_framework_spark.operators.connected_components import (
+    _free,
+    _stats_bounded_local_ckpt,
     connected_components,
 )
 from deduplication_framework_spark.oracle.numpy_oracle import UnionFind
@@ -56,7 +60,7 @@ def test_rounds(spark, pairs, rounds):
 
 
 def test_bench_chain_graph_rounds_jobs_and_freed_checkpoints(spark):
-    """Two rounds and at most 29 jobs; of the loop's default checkpoints
+    """Two rounds and at most 24 jobs; of the loop's default checkpoints
     only the returned labels stay persisted."""
     jsc = spark.sparkContext._jsc
     pairs = _chains()
@@ -66,9 +70,36 @@ def test_bench_chain_graph_rounds_jobs_and_freed_checkpoints(spark):
     labels, rounds = connected_components(edges)
     jobs = _last_job_id(spark) - before
     assert rounds == 2
-    assert jobs <= 29
+    assert jobs <= 24
     assert len(jsc.getPersistentRDDs()) - persisted <= 1
     assert _labels(labels) == _oracle(pairs)
+
+
+def test_shuffled_path_labels_keep_bounded_stats(spark):
+    """A path whose ids are shuffled along it takes 18 rounds; each
+    round's checkpoint carries statistics from its observed row count, so
+    the labels' size estimate stays within 4x of rows x row width instead
+    of compounding the per-round join estimates."""
+    perm = np.random.RandomState(3).permutation(64).tolist()
+    pairs = list(zip(perm[:-1], perm[1:]))
+    labels, rounds = connected_components(_edges(spark, pairs))
+    assert rounds == 18
+    assert _labels(labels) == _oracle(pairs)
+    size = labels._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
+    width = 8 + labels._jdf.schema().defaultSize()
+    assert 0 < size <= 4 * 64 * width
+
+
+def test_cut_counts_observed_string_bytes(spark):
+    """A cut's size estimate counts its strings' observed bytes, not
+    Spark's 20 B default, so a cut of documents never looks small enough
+    to broadcast."""
+    text = "x" * 5000
+    docs = spark.range(200).select("id", F.lit(text).alias("text"))
+    cut = _stats_bounded_local_ckpt(docs)
+    size = cut._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
+    _free(cut)
+    assert 200 * 5000 <= size <= 200 * (5000 + 64)
 
 
 def test_empty_edges(spark):

@@ -17,6 +17,7 @@ from deduplication_framework_spark.operators.exact import exact_dedup
 from deduplication_framework_spark.operators.lsh import (
     candidate_pairs,
     minhash_bands,
+    release_census_caches,
     simhash_bands,
 )
 from deduplication_framework_spark.operators.verify import verify_jaccard
@@ -189,6 +190,46 @@ class TestCandidatePairs:
         assert got == {(0, 1), (0, 2), (0, 3), (1, 2), (1, 3), (2, 3)}
         s = stats.collect()[0]
         assert s.n_buckets == 1 and s.max_bucket_size == 4
+
+    @pytest.mark.parametrize("cap", [1, 100], ids=["clique", "all_pairs"])
+    def test_n_buckets_exact_with_a_doc_twice_in_a_bucket(self, spark, cap):
+        """A doc can hold several rows of one bucket (a repeated L-gram in
+        suffix-array buckets); the bucket still counts once."""
+        rows = [(0, 0, 7), (0, 0, 7), (1, 0, 7), (2, 0, 8), (2, 0, 8), (3, 0, 8)]
+        _, stats = candidate_pairs(self._bands_df(spark, rows), bucket_cap=cap)
+        release_census_caches()
+        s = stats.collect()[0]
+        assert s.n_buckets == 2 and s.max_bucket_size == 3
+
+    def test_census_stats_are_observed_and_freed(self, spark):
+        """The census cut's observed stats equal a groupBy over the same
+        rows, reading them runs no job, and release_census_caches() frees
+        the cut's checkpoint blocks."""
+        jsc = spark.sparkContext._jsc
+        release_census_caches()
+        persisted = len(jsc.getPersistentRDDs())
+        rows = [(i, 0, 7) for i in range(10)] + [(i, 1, i % 3) for i in range(9)]
+        rows += [(20, 2, 5)]
+        bands = self._bands_df(spark, rows)
+        pairs, stats = candidate_pairs(bands, bucket_cap=5)
+        assert pairs.count() > 0
+        jobs = spark.sparkContext.statusTracker().getJobIdsForGroup()
+        got = stats.collect()[0].asDict()
+        assert spark.sparkContext.statusTracker().getJobIdsForGroup() == jobs
+        sizes = bands.groupBy("band_idx", "band_key").agg(
+            F.count("*").alias("size")
+        ).filter("size > 1")
+        want = sizes.agg(
+            F.count("*").alias("n_buckets"),
+            F.sum(F.when(F.col("size") > 5, F.col("size"))).alias(
+                "n_capped_band_rows"
+            ),
+            F.max("size").alias("max_bucket_size"),
+        ).collect()[0].asDict()
+        assert got == want
+        assert len(jsc.getPersistentRDDs()) > persisted
+        release_census_caches()
+        assert len(jsc.getPersistentRDDs()) == persisted
 
     def test_hot_bucket_salted_star_chain(self, spark):
         rows = [(i, 0, 7) for i in range(10)]
