@@ -6,27 +6,44 @@ randomly (``/root/reference/audio/method/caculate_dedup.py:37-44``). The
 north rule replaces this with proper connected components: every doc's
 cluster id = the minimum doc id reachable through verified duplicate edges.
 
-Algorithm: alternating *pointer jumping* (path-halving) + *min-label
-propagation*, the DataFrame formulation of the map-reduce CC family
-(Kiveris et al. 2014, "Connected Components in MapReduce and Beyond" —
-public). The initial label is min(v, min over neighbors u of u); each round
-then runs
+Algorithm: alternating *pointer jumping* (path-halving), *min-label
+propagation* and, from round 3 on, *label hooking*: the DataFrame
+formulation of the map-reduce CC family (Kiveris et al. 2014, "Connected
+Components in MapReduce and Beyond" — public) with the root hooking of
+union-find (BTS, "Load-Balanced Distributed Union-Find", ICDE 2024). The
+initial label is min(v, min over neighbors u of u); each round then runs
 
   1. label'(v) = label(label(v)), three times                       [jump]
-  2. label''(v) = min(label'(v), min over neighbors u of label'(u)) [propagate]
+  2. nmin(v) = min over neighbors u of label'(u)                [propagate]
+  3. hmin(r) = min over vertices v with label'(v) = r of nmin(v)     [hook]
+  4. label''(v) = min(label'(v), nmin(v), hmin(v))
 
-and stops in the round whose propagate changes no label. That is the
-fixpoint: with no change, both ends of every edge carry one label, so each
-component carries one label. Every label(v) is a vertex of v's component
-and at most v, so the component's minimum m has label(m) = m, and that one
-label is m.
+and stops in the round that changes no label (label'' = label'
+everywhere). That is the fixpoint: with no change, both ends of every
+edge carry one label, so each component carries one label. Every label(v)
+is a vertex of v's component and at most v, so the component's minimum m
+has label(m) = m, and that one label is m.
 
 Pointer jumping halves the depth of a label chain per jump, so where ids
 rise along the graph's paths convergence is O(log(diameter)) rounds, and
-near-dup clusters (stars through the keeper) take 1-3. A path whose ids
-are shuffled along it gives the jumps little to shorten, and its round
-count grows with its length: 18 rounds at 64 vertices, no convergence
-within 50 at 256.
+near-dup clusters (stars through the keeper) take 1-3. Propagate alone
+moves a label one hop per round, so on a path whose ids are shuffled
+along it the round count would grow with the path's length (18 rounds at
+64 vertices). The hook lets a label, itself a vertex, take the least
+label any of its members sees, so a whole tree of labels joins its
+neighbor tree at once and the jumps spread that within two rounds; such
+graphs converge in O(log n) rounds (7 for a shuffled 256-vertex path).
+Hooking costs a vertex-sized aggregate and join, and starts at round 3,
+so graphs that converge in two rounds do not pay for it.
+
+Join strategy: a round's label-sized build sides (the three jumps' parent
+tables, the propagate's labels, its per-vertex minima, and the hook: k = 5,
+6 in a hooking round) are hinted ``broadcast`` when k × the label table's
+bytes (the vertex count, observed while the initial labels are cut, × 24
+B per row) fit the session's ``autoBroadcastJoinThreshold``, so the edge
+list never moves; otherwise ``shuffle_hash``, which skips the per-round
+sorts. The bound is k× because all k tables are broadcast in one round: a
+single table's bound lets a round hold several times the threshold.
 
 Every round materializes through the ``checkpoint`` callable to truncate
 lineage (a driver-loop over joins would otherwise build an exponentially
@@ -66,9 +83,10 @@ def connected_components(
     only the returned labels stay persisted.
 
     ``round_stats``: optional caller-owned list; each round appends
-    {"round", "n_changed"}, the number of labels the round's propagate
-    changed (the bench's distributed-CC entry passes a list so per-round
-    convergence is a recorded artifact).
+    {"round", "n_changed", "join", "hooked"}: the number of labels the
+    round changed, its label joins' strategy ("broadcast" or
+    "shuffle_hash") and whether it hooked (the bench's distributed-CC
+    entry passes a list so per-round convergence is a recorded artifact).
 
     Vertices with no edges are absent — callers union them back with
     cluster_id = own id (cheaper than shipping singletons through the loop).
@@ -138,6 +156,7 @@ def _stats_bounded_local_ckpt(df: DataFrame) -> DataFrame:
 
 
 def _cc_loop(edges, src, dst, max_iterations, ckpt, round_stats, release):
+    spark = edges.sparkSession
     both = (
         edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
         .unionByName(edges.select(F.col(dst).alias("a"), F.col(src).alias("b")))
@@ -150,16 +169,34 @@ def _cc_loop(edges, src, dst, max_iterations, ckpt, round_stats, release):
             F.col("a").alias("doc_id"),
             F.least(F.col("a"), F.col("nbr_min")).alias("cluster_id"),
         )
-        labels = ckpt(labels)
+        # the vertex count rides the cut's own action; every round's label
+        # table has exactly these rows, so its bytes are known, not estimated
+        # (a store checkpoint's stats would be compressed parquet bytes)
+        obs = Observation()
+        labels = ckpt(labels.observe(obs, F.count(F.lit(1))))
+        label_bytes = _observed_row(obs, spark)[0] * (
+            8 + labels._jdf.schema().defaultSize()
+        )
+        threshold = (
+            spark._jsparkSession.sessionState().conf().autoBroadcastJoinThreshold()
+        )
 
         # NOTE (r6): pre-partitioning the checkpointed frames does NOT carry
         # co-partitioning into later rounds — under AQE the checkpoint's
         # LogicalRDD records unknown output partitioning, so the per-round
         # joins re-exchange regardless (A/B'd: identical interleaved minima
         # with and without explicit repartitions). The round's wins are the
-        # SHUFFLE_HASH joins (no per-round sorts), three jumps per round,
-        # and a change count observed during the checkpoint's own action.
+        # broadcast label joins while the label tables fit (the edge list
+        # never shuffles), SHUFFLE_HASH joins above that (no per-round
+        # sorts), three jumps per round, the hook from round 3, and a change
+        # count observed during the checkpoint's own action.
         for it in range(max_iterations):
+            hooked = it >= 2
+            how = (
+                "broadcast"
+                if (6 if hooked else 5) * label_bytes <= threshold
+                else "shuffle_hash"
+            )
             # 1. pointer jump three times — each jump is a self-join on the
             #    (small) label table that SQUARES the per-round shortcutting.
             #    The non-null filter gives the frame feeding both sides of a
@@ -170,7 +207,7 @@ def _cc_loop(edges, src, dst, max_iterations, ckpt, round_stats, release):
             for _ in range(3):
                 parent = jumped.select(
                     F.col("doc_id").alias("p_id"), F.col("cluster_id").alias("p_label")
-                ).hint("shuffle_hash")
+                ).hint(how)
                 jumped = jumped.join(
                     parent, jumped.cluster_id == parent.p_id, "left"
                 ).select(
@@ -180,27 +217,36 @@ def _cc_loop(edges, src, dst, max_iterations, ckpt, round_stats, release):
                     ),
                 )
 
-            # 2. propagate: candidate label for each vertex = min over its
-            #    neighbors' jumped labels; SHUFFLE_HASH skips the per-round
-            #    sort of the edge side. The vertex's own jumped label rides
-            #    the left join as _old, so the change count is one observed
-            #    sum, filled by the checkpoint's action — no job of its own.
-            lab_h = jumped.hint("shuffle_hash")
+            # 2. propagate: each vertex's least neighbor label (_nmin). The
+            #    vertex's own jumped label rides the left join as _old, so
+            #    the change count is one observed sum, filled by the
+            #    checkpoint's action — no job of its own.
+            lab_h = jumped.hint(how)
             nbr_min = (
                 both.join(lab_h, both.b == lab_h.doc_id, "inner")
                 .select(F.col("a").alias("doc_id"), F.col("cluster_id").alias("cand"))
                 .groupBy("doc_id")
                 .agg(F.min("cand").alias("_nmin"))
             )
+            vert = jumped.join(nbr_min.hint(how), "doc_id", "left")
+            lows = [F.col("cluster_id"), F.col("_nmin")]
+            if hooked:
+                # 3. hook: each label, itself a vertex, takes the least
+                #    neighbor label any of its members sees (least skips the
+                #    NULL of a vertex that labels no member)
+                hook = vert.groupBy(F.col("cluster_id").alias("_root")).agg(
+                    F.min("_nmin").alias("_hmin")
+                )
+                vert = vert.join(
+                    hook.hint(how), F.col("doc_id") == F.col("_root"), "left"
+                )
+                lows.append(F.col("_hmin"))
             obs = Observation()
             prop = (
-                jumped.join(nbr_min.hint("shuffle_hash"), "doc_id", "left")
-                .select(
+                vert.select(
                     "doc_id",
                     F.col("cluster_id").alias("_old"),
-                    F.least(
-                        F.col("cluster_id"), F.coalesce("_nmin", "cluster_id")
-                    ).alias("cluster_id"),
+                    F.least(*lows).alias("cluster_id"),
                 )
                 .observe(
                     obs, F.sum((F.col("_old") != F.col("cluster_id")).cast("long"))
@@ -208,11 +254,14 @@ def _cc_loop(edges, src, dst, max_iterations, ckpt, round_stats, release):
             )
             superseded, labels = labels, ckpt(prop.select("doc_id", "cluster_id"))
             # sum over zero rows (an empty edge list) is NULL
-            changed = _observed_row(obs, both.sparkSession)[0] or 0
+            changed = _observed_row(obs, spark)[0] or 0
             if release:
                 _free(superseded)
             if round_stats is not None:
-                round_stats.append({"round": it + 1, "n_changed": changed})
+                round_stats.append(
+                    {"round": it + 1, "n_changed": changed, "join": how,
+                     "hooked": hooked}
+                )
             if changed == 0:
                 return labels, it + 1
         if release:

@@ -37,6 +37,7 @@ def test_bad_command_line_exits_2_naming_valid_choices(args, complaint):
     assert "specs: once, jvm_pipeline, oph," in r.stderr
     assert "oph: num_perm=256 families=kr32,oph" in r.stderr
     assert "lshensemble: mode=small|big" in r.stderr
+    assert "cc: graph=chains|spath|stree|cliques seed=1" in r.stderr
     assert r.stdout == ""
 
 

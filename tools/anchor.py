@@ -21,9 +21,10 @@ once for every spec:
   headline phases, ``host_supply_cores``, and ``phases`` (per phase: wall,
   process-tree CPU, executor CPU/run, shuffle, spill, tasks, jobs).
 
-``n`` is the corpus size (vectors for pq/srp). Secondary sizes keep the
-ratios of the recorded runs: bloom and fuzzy batches are n // 4 against
-an n-doc history, the decontam eval set n // 10 against n train docs.
+``n`` is the corpus size (vectors for pq/srp, vertices for cc). Secondary
+sizes keep the ratios of the recorded runs: bloom and fuzzy batches are
+n // 4 against an n-doc history, the decontam eval set n // 10 against n
+train docs.
 """
 
 import glob
@@ -1321,6 +1322,80 @@ def selection(run):
         "dsir": {"planted_recall": 1.0, "pool_false_pos": 0},
         "packing": {"n_shards": n_shards, "tiling_gaps": 0},
         "split": {"val_doc_frac": round(val_frac, 4)},
+    }
+
+
+def _cc_graph(kind, n, seed):
+    """(src, dst) id arrays of a ``cc`` graph over the ids 0..n-1, which
+    ``seed`` shuffles."""
+    import numpy as np
+
+    rs = np.random.RandomState(seed)
+    ids = rs.permutation(n)
+    if kind == "chains":
+        chains = np.sort(ids[: n - n % 64].reshape(-1, 64), axis=1)
+        return chains[:, :-1].ravel(), chains[:, 1:].ravel()
+    if kind == "spath":
+        return ids[:-1], ids[1:]
+    if kind == "stree":
+        # vertex i hangs off a uniform earlier vertex
+        up = (rs.random_sample(n - 1) * np.arange(1, n)).astype(np.int64)
+        return ids[1:], ids[up]
+    cliques = ids[: n - n % 8].reshape(-1, 8)
+    a, b = np.triu_indices(8, 1)
+    return cliques[:, a].ravel(), cliques[:, b].ravel()
+
+
+@spec("cc", graph=("chains", "spath", "stree", "cliques"), seed=1)
+def cc(run):
+    """The distributed CC loop (operators/connected_components.py) on an
+    n-vertex graph with shuffled ids: ``chains`` (the benchmark's graph:
+    chains of 64 whose ids rise along each chain), ``spath`` (one path,
+    ids shuffled along it), ``stree`` (a random recursive tree) or
+    ``cliques`` (of 8). Records the rounds and each round's wall (between
+    its checkpoints), label-join strategy, hook and change count; the
+    loop's jobs are its ``cc`` phase's. Asserts the labels equal the
+    driver union-find's."""
+    import pyarrow as pa
+
+    from deduplication_framework_spark.operators.connected_components import (
+        _stats_bounded_local_ckpt,
+        connected_components,
+    )
+    from deduplication_framework_spark.oracle.numpy_oracle import UnionFind
+
+    src, dst = _cc_graph(run.p["graph"], run.n, run.p["seed"])
+    edges = run.parquet(
+        "graph", run.spark.createDataFrame(pa.table({"src": src, "dst": dst}))
+    )
+    stamps, rlog = [], []
+
+    def ckpt(df):
+        """The loop's default checkpoint, stamping each call."""
+        df = _stats_bounded_local_ckpt(df)
+        stamps.append(time.time())
+        return df
+
+    with run.phase("cc"):
+        labels, rounds = connected_components(
+            edges, checkpoint=ckpt, round_stats=rlog
+        )
+    got = {r.doc_id: r.cluster_id for r in labels.collect()}
+    uf = UnionFind()
+    for a, b in zip(src.tolist(), dst.tolist()):
+        uf.union(a, b)
+    assert got == uf.labels(sorted(got)) and len(got) == len(uf.parent), \
+        "CC labels differ from the union-find's"
+    return {
+        "vertices": len(got),
+        "edges": len(src),
+        "components": len(set(got.values())),
+        "rounds": rounds,
+        # stamps: the edge list's cut, the initial labels', then one a round
+        "round_wall_s": [round(b - a, 2) for a, b in zip(stamps[1:], stamps[2:])],
+        "join": [s["join"] for s in rlog],
+        "hooked": [s["hooked"] for s in rlog],
+        "n_changed": [s["n_changed"] for s in rlog],
     }
 
 
