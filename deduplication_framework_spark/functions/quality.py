@@ -174,12 +174,13 @@ def apply_quality_filter(docs, *, text_col: str = "text", repetition: bool = Fal
     with first-fail attribution. Returns ``(kept, metrics)`` where
     ``metrics`` carries the input/kept sizes and one
     ``quality.drop_<rule>`` counter per violated rule (the drop census is
-    one small aggregation). ``repetition=True`` additionally applies the
+    observed while the labelled corpus is cut, so it runs no job of its
+    own). ``repetition=True`` additionally applies the
     Gopher Table-A1 repetition thresholds (``repetition.REP_RULES``,
     checked AFTER the scalar rules) via the staged mass builder.
 
-    Scale posture: pure per-row expressions plus one groupBy census over
-    a low-cardinality rule column — the filter itself rides the scan."""
+    Scale posture: pure per-row expressions plus one ``count_if`` per rule
+    name, observed during the cut's one action."""
     ff = "_q_ff"
     d = docs.withColumn(ff, first_fail_expr(text_col))
     if repetition:
@@ -202,22 +203,21 @@ def apply_quality_filter(docs, *, text_col: str = "text", repetition: bool = Fal
                 f" ELSE 'pass' END"
             ),
         ).drop("_q_nc", *[mass for _, mass, _ in REP_RULES])
-    # census + the returned frame are two consumers of the (expensive,
-    # with repetition=True) signal expressions: persist once, let the
-    # census collect fill the cache, freed by release_census_caches()
-    # at pipeline end (CLAUDE.md persist-every->1-action rule)
-    from deduplication_framework_spark.operators.lsh import (
-        _persist_tracked,
-    )
+    # the census and the returned frame are two consumers of the
+    # (expensive, with repetition=True) signal expressions: cut once,
+    # counting every possible first-fail name during the cut's action
+    from deduplication_framework_spark.operators.lsh import _cut
 
-    d = _persist_tracked(d)
-    census = {r[ff]: r["count"] for r in d.groupBy(ff).count().collect()}
+    names = ["pass"] + [r[0] for r in RULES]
+    if repetition:
+        names += [r[0] for r in REP_RULES]
+    d, census = _cut(d, **{n: F.count_if(F.col(ff) == n) for n in names})
     kept = d.filter(F.col(ff) == "pass").drop(ff)
     metrics = {
         "quality.n_in": float(sum(census.values())),
-        "quality.n_kept": float(census.get("pass", 0)),
+        "quality.n_kept": float(census["pass"]),
     }
     for rule, n in census.items():
-        if rule != "pass":
+        if rule != "pass" and n:
             metrics[f"quality.drop_{rule}"] = float(n)
     return kept, metrics

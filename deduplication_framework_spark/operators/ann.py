@@ -222,15 +222,19 @@ def ivf_topk(
         kmeans_block,
         l2_normalize,
     )
+    from deduplication_framework_spark.operators.lsh import _cut
 
     spark = df.sparkSession
     n = df.count()
     if n_lists is None:
         n_lists = max(2, int(np.sqrt(n)))
     normalized = l2_normalize(df, vec_col)
-    blocked = kmeans_block(
-        normalized, n_clusters=n_lists, seed=seed, id_col=id_col, vec_col=vec_col
-    ).persist()
+    blocked, _ = _cut(
+        kmeans_block(
+            normalized, n_clusters=n_lists, seed=seed, id_col=id_col,
+            vec_col=vec_col,
+        )
+    )
 
     # centroids from the fitted assignment (mean of members, re-normalized —
     # reference A5 semantics, image/method/pipeline_api.py:554-556).

@@ -50,7 +50,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 
-from .lsh import _persist_tracked
+from .lsh import _cut
 
 __all__ = [
     "BloomFilter",
@@ -337,9 +337,10 @@ def incremental_new_rows(
 
     Returns ``(result_df, stats)`` with stats =
     {n_new_batch, n_definite_new, n_candidates, n_dup_keys, m_bits, k,
-    verify_path}. Runs eager census jobs (build + candidate count) and
-    persists the prefiltered batch via the shared tracked-cache registry
-    (released by ``lsh.release_census_caches()`` / pipeline end).
+    verify_path}. Runs the filter build, then cuts the prefiltered batch
+    (and, on the broadcast path, the true-dup keys) with ``lsh._cut``,
+    whose one action each also counts them; the cuts are freed by
+    ``lsh.release_census_caches()`` / pipeline end.
     """
     if hash_fn == "md5":
         hexpr = lambda c: F.md5(F.col(c))  # noqa: E731
@@ -365,61 +366,52 @@ def incremental_new_rows(
         )
     # hash once into _k, then bloom_tag probes the _k ATTRIBUTE — the
     # md5 and both xxhash64 calls each run once per row structurally
-    tagged = _persist_tracked(
+    tagged, n = _cut(
         bloom_tag(
             new_df.withColumn("_k", hexpr(key_col)),
             bloom,
             F.col("_k"),
             "_maybe",
-        )
+        ),
+        batch=F.count("*"),
+        cands=F.count_if("_maybe"),
     )
-    n_batch = tagged.count()  # eager: materialize the cache once
-    n_cands = tagged.filter("_maybe").count()
+    n_cands = n["cands"]
+    stats = {
+        "n_new_batch": n["batch"],
+        "n_definite_new": n["batch"] - n_cands,
+        "n_candidates": n_cands,
+        "n_dup_keys": 0,
+        "m_bits": bloom.m_bits,
+        "k": bloom.k,
+        "verify_path": "none",
+    }
 
     out_cols = list(new_df.columns)
     if out_hash_col is not None:
         out_cols.append(out_hash_col)
         tagged = tagged.withColumn(out_hash_col, F.col("_k"))
     definite = tagged.filter(~F.col("_maybe")).select(*out_cols)
+    if n_cands == 0:
+        return definite, stats
+
     cands = tagged.filter("_maybe")
     old_keys = old_df.select(hexpr(key_col).alias("_k")).filter(
         F.col("_k").isNotNull()
     )
-
-    if n_cands == 0:
-        return definite, {
-            "n_new_batch": n_batch,
-            "n_definite_new": n_batch,
-            "n_candidates": 0,
-            "n_dup_keys": 0,
-            "m_bits": bloom.m_bits,
-            "k": bloom.k,
-            "verify_path": "none",
-        }
-
     if n_cands <= candidate_broadcast_threshold:
         # Historical corpus is never shuffled: candidate keys broadcast
         # into a map-side semi-join over old, then the (small) true-dup
         # key set broadcasts back into the anti-join.
-        verify_path = "broadcast"
         cand_keys = cands.select("_k").distinct()
-        dup_keys = _persist_tracked(
-            old_keys.join(F.broadcast(cand_keys), "_k", "left_semi").distinct()
+        dup_keys, n = _cut(
+            old_keys.join(F.broadcast(cand_keys), "_k", "left_semi").distinct(),
+            n=F.count("*"),
         )
-        n_dup_keys = dup_keys.count()
+        stats.update(n_dup_keys=n["n"], verify_path="broadcast")
         survivors = cands.join(F.broadcast(dup_keys), "_k", "left_anti")
     else:
-        verify_path = "shuffle"
-        n_dup_keys = -1  # not separately counted on the shuffle path
+        # not separately counted on the shuffle path
+        stats.update(n_dup_keys=-1, verify_path="shuffle")
         survivors = cands.join(old_keys, "_k", "left_anti")
-
-    result = definite.unionByName(survivors.select(*out_cols))
-    return result, {
-        "n_new_batch": n_batch,
-        "n_definite_new": n_batch - n_cands,
-        "n_candidates": n_cands,
-        "n_dup_keys": n_dup_keys,
-        "m_bits": bloom.m_bits,
-        "k": bloom.k,
-        "verify_path": verify_path,
-    }
+    return definite.unionByName(survivors.select(*out_cols)), stats

@@ -58,10 +58,17 @@ from __future__ import annotations
 
 from typing import Optional, Tuple
 
+from pyspark import SparkContext
 from pyspark.serializers import CPickleSerializer
-from pyspark.sql import DataFrame, Observation, Row
+from pyspark.sql import Column, DataFrame, Observation, Row
 from pyspark.sql import functions as F
-from pyspark.sql.types import BinaryType, StringType
+from pyspark.sql.types import (
+    ArrayType,
+    BinaryType,
+    DataType,
+    MapType,
+    StringType,
+)
 
 
 def connected_components(
@@ -97,10 +104,33 @@ def connected_components(
     )
 
 
+def _default_size(dtype: DataType) -> int:
+    """Spark's per-value size estimate for ``dtype``."""
+    jtypes = SparkContext._jvm.org.apache.spark.sql.types
+    return jtypes.DataType.fromJson(dtype.json()).defaultSize()
+
+
+def _data_bytes(col: Column, dtype: DataType) -> Optional[Column]:
+    """Per-row bytes of a variable-width column, or None for a fixed-width
+    one: a string's or binary's octet length, an array's elements (string
+    elements by octet length, others at their default size), a map's
+    keys plus values. A NULL counts 0."""
+    if isinstance(dtype, (StringType, BinaryType)):
+        return F.octet_length(col)
+    if isinstance(dtype, MapType):
+        parts = [(F.map_keys(col), dtype.keyType), (F.map_values(col), dtype.valueType)]
+        return sum(F.coalesce(_data_bytes(c, ArrayType(t)), F.lit(0)) for c, t in parts)
+    if not isinstance(dtype, ArrayType):
+        return None
+    if isinstance(dtype.elementType, StringType):
+        return F.octet_length(F.array_join(col, ""))
+    return F.when(col.isNotNull(), F.size(col)) * _default_size(dtype.elementType)
+
+
 def _stats_bounded_local_ckpt(df: DataFrame) -> DataFrame:
     """The lineage cut: ``df``'s rows as a ``localCheckpoint``, in ONE
     action, whose LogicalRDD carries size statistics built from the row
-    count and string bytes observed during that action.
+    count and the variable-width bytes observed during that action.
 
     The statistics must not be the child plan's estimate, which Spark's
     checkpoint copies into the LogicalRDD: a join's size estimate is the
@@ -111,32 +141,28 @@ def _stats_bounded_local_ckpt(df: DataFrame) -> DataFrame:
     LogicalRDD.rewriteStatsAndConstraints; an 18-round loop did not finish
     in 240 s). So the checkpointed plan is rebound to the Statistics of a
     ``spark.range(k)`` plan (8 B per row: sizeInBytes = 8k, rowCount =
-    k), k = ⌈bytes / 8⌉, where bytes = the observed bytes of the top-level
-    string and binary columns + rows × (8 B + the default size of each
-    other column, Spark's own per-row estimate). A string's default size
-    is 20 B, so without the observed bytes a cut of documents would look
-    small enough to broadcast at any corpus size.
+    k), k = ⌈bytes / 8⌉, where bytes = the observed ``_data_bytes`` of the
+    top-level string, binary, array and map columns + rows × (8 B + the
+    default size of each other column, Spark's own per-row estimate). A
+    string's default size is 20 B and an array's one element's, so
+    without the observed bytes a cut of documents or shingle sets would
+    look small enough to broadcast at any corpus size.
     (Py4J turns a Scala BigInt into a Python int, so Statistics cannot be
     built from Python directly.) Persisting first would give real stats
     too, from the cached bytes, but under AQE the cache build and the
     checkpoint's count are two jobs."""
     spark = df.sparkSession
-    var = [
-        isinstance(f.dataType, (StringType, BinaryType)) for f in df.schema.fields
-    ]
+    var = [_data_bytes(df[i], f.dataType) for i, f in enumerate(df.schema.fields)]
     obs = Observation()
     ckpt = df.observe(
         obs,
         F.count(F.lit(1)),
-        *[
-            F.sum(F.octet_length(df[i]))
-            for i, is_var in enumerate(var) if is_var
-        ],
+        *[F.sum(v) for v in var if v is not None],
     ).localCheckpoint(eager=True)
     rows, *var_bytes = _observed_row(obs, spark)
     fixed = 8 + sum(
-        f.dataType().defaultSize()
-        for f, is_var in zip(df._jdf.schema().fields(), var) if not is_var
+        _default_size(f.dataType)
+        for f, v in zip(df.schema.fields, var) if v is None
     )
     nbytes = rows * fixed + sum(b or 0 for b in var_bytes)
     stats = (

@@ -40,7 +40,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from deduplication_framework_spark.operators.lsh import _persist_tracked
+from deduplication_framework_spark.operators.lsh import _cut
 
 __all__ = [
     "word_ngram_expr",
@@ -60,6 +60,23 @@ def _gram_key_cols(g: Column) -> list[Column]:
         F.xxhash64(g).alias("_k1"),
         F.xxhash64(F.lit(_GRAM_KEY_SEED2), g).alias("_k2"),
     ]
+
+
+def _keyed(df: DataFrame, gram_key: str, *front: str) -> DataFrame:
+    """Project exploded gram rows (``_g``) onto the join key columns."""
+    if gram_key == "hash":
+        return df.select(*front, *_gram_key_cols(F.col("_g")))
+    return df.select(*front, "_g")
+
+
+def _cut_side(df: DataFrame, threshold: int) -> tuple:
+    """→ ``(join side, rows, path)``: ``df`` held once as an ``lsh._cut``
+    whose action counts its rows; the side is hinted broadcast while the
+    rows fit ``threshold``."""
+    cut, n = _cut(df, rows=F.count("*"))
+    if n["rows"] <= threshold:
+        return F.broadcast(cut), n["rows"], "broadcast"
+    return cut, n["rows"], "shuffle"
 
 
 def _check_gram_key(gram_key: str) -> list[str]:
@@ -104,10 +121,10 @@ def ngram_overlap_flags(
     both sides). ``stats`` = ``{n_eval_grams, n_contaminated,
     eval_join_path, flags_join_path}``.
 
-    Runs two eager census jobs (eval gram count, contaminated-doc
-    count) to pick the join strategies; the frames they persist are
-    registered with the shared tracked-cache registry (released by
-    ``lsh.release_census_caches()`` / pipeline end).
+    Cuts the eval gram set and the per-doc hit counts with ``lsh._cut``,
+    whose one action each also counts them, to pick the join
+    strategies; the cuts are freed by ``lsh.release_census_caches()`` /
+    pipeline end.
 
     ``gram_key="hash"`` (default) joins on the 128-bit gram hash —
     identical answers up to the module-docstring collision budget,
@@ -130,40 +147,24 @@ def ngram_overlap_flags(
             "_w", F.split(F.trim(txt), r"\s+")
         ).withColumn("_grams", F.array_distinct(word_ngram_expr("_w", n)))
 
-    def keyed(df: DataFrame, *front: str) -> DataFrame:
-        """Project exploded gram rows onto the join key columns."""
-        if gram_key == "hash":
-            return df.select(*front, *_gram_key_cols(F.col("_g")))
-        return df.select(*front, "_g")
-
-    eval_grams = _persist_tracked(
-        keyed(
-            grams_of(eval_df).select(F.explode("_grams").alias("_g"))
-        ).distinct()
+    eval_side, n_eval_grams, eval_join_path = _cut_side(
+        _keyed(
+            grams_of(eval_df).select(F.explode("_grams").alias("_g")), gram_key
+        ).distinct(),
+        eval_broadcast_threshold,
     )
-    n_eval_grams = eval_grams.count()
-    eval_join_path = (
-        "broadcast" if n_eval_grams <= eval_broadcast_threshold else "shuffle"
-    )
-    eval_side = (
-        F.broadcast(eval_grams) if eval_join_path == "broadcast" else eval_grams
-    )
-
     train_grams = grams_of(train_df)
-    hits = _persist_tracked(
-        keyed(
+    hits_side, n_contaminated, flags_join_path = _cut_side(
+        _keyed(
             train_grams.select(id_col, F.explode("_grams").alias("_g")),
+            gram_key,
             id_col,
         )
         .join(eval_side, key_cols)
         .groupBy(id_col)
-        .agg(F.count("*").alias("n_hit"))
+        .agg(F.count("*").alias("n_hit")),
+        hits_broadcast_threshold,
     )
-    n_contaminated = hits.count()
-    flags_join_path = (
-        "broadcast" if n_contaminated <= hits_broadcast_threshold else "shuffle"
-    )
-    hits_side = F.broadcast(hits) if flags_join_path == "broadcast" else hits
 
     out = (
         train_grams.select(id_col, F.size("_grams").alias("n_grams"))
@@ -217,7 +218,7 @@ def remove_contaminated_spans(
     ``{n_eval_grams, n_contaminated, eval_join_path, cov_join_path}``.
 
     Scale posture matches :func:`ngram_overlap_flags`: eval grams
-    broadcast after an eager census (as 128-bit hash keys under the
+    broadcast after the cut that counts them (as 128-bit hash keys under the
     default ``gram_key="hash"`` — 16 B/gram; ``"raw"`` is the string
     spec path), the exploded train grams never shuffle on that path,
     the covered-index sets (one row per contaminated doc) broadcast
@@ -235,35 +236,26 @@ def remove_contaminated_spans(
         lw = F.transform(F.col("_w"), F.lower) if lowercase else F.col("_w")
         return out.withColumn("_lw", lw)
 
-    def keyed(df: DataFrame, *front: str) -> DataFrame:
-        if gram_key == "hash":
-            return df.select(*front, *_gram_key_cols(F.col("_g")))
-        return df.select(*front, "_g")
-
-    eval_grams = _persist_tracked(
-        keyed(
+    eval_side, n_eval_grams, eval_join_path = _cut_side(
+        _keyed(
             with_words(eval_df).select(
                 F.explode(word_ngram_expr("_lw", n)).alias("_g")
-            )
-        ).distinct()
-    )
-    n_eval_grams = eval_grams.count()
-    eval_join_path = (
-        "broadcast" if n_eval_grams <= eval_broadcast_threshold else "shuffle"
-    )
-    eval_side = (
-        F.broadcast(eval_grams) if eval_join_path == "broadcast" else eval_grams
+            ),
+            gram_key,
+        ).distinct(),
+        eval_broadcast_threshold,
     )
 
     train = with_words(train_df)
     # hit grams with their start index -> covered word indices, one set
     # row per contaminated doc
-    cov = _persist_tracked(
-        keyed(
+    cov_side, n_contaminated, cov_join_path = _cut_side(
+        _keyed(
             train.select(
                 id_col,
                 F.posexplode(word_ngram_expr("_lw", n)).alias("_i", "_g"),
             ),
+            gram_key,
             id_col,
             "_i",
         )
@@ -275,13 +267,9 @@ def remove_contaminated_spans(
             ),
         )
         .groupBy(id_col)
-        .agg(F.collect_set("_wi").alias("_cov"))
+        .agg(F.collect_set("_wi").alias("_cov")),
+        cov_broadcast_threshold,
     )
-    n_contaminated = cov.count()
-    cov_join_path = (
-        "broadcast" if n_contaminated <= cov_broadcast_threshold else "shuffle"
-    )
-    cov_side = F.broadcast(cov) if cov_join_path == "broadcast" else cov
 
     covered = F.coalesce(F.col("_cov"), F.array().cast("array<int>"))
     survivors = F.filter(

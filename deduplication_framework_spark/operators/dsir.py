@@ -36,8 +36,9 @@ Scale posture (100 TB):
 * the per-bucket term table is ``B`` rows and is broadcast into the
   token stream; the only corpus-scale shuffle is the per-doc sum
   (map-side combinable on ``doc_id``);
-* the tokenized projection is persisted + eagerly counted (bucket
-  census and doc scoring are concurrent consumers — CLAUDE.md pitfall).
+* the tokenized projection is held once as a lineage cut (``lsh._cut``;
+  bucket census and doc scoring are concurrent consumers — CLAUDE.md
+  pitfall), the corpus token totals observed during its one action.
 
 Reference scope: the reference engine has no data-selection stage; this
 is part of the "operations a large-scale training-data pipeline needs"
@@ -89,9 +90,11 @@ def dsir_log_weights(
     COMPLEMENT (the pool being scored — see module docstring). Every
     row is scored, whichever slice it sits in.
     Empty/whitespace-only docs emit no row (lm_score_docs convention)."""
-    from deduplication_framework_spark.operators.lsh import _persist_tracked
+    from deduplication_framework_spark.operators.lsh import _cut
 
-    toks = _persist_tracked(
+    # bucket census + doc scoring are concurrent consumers: cut once, the
+    # raw and target token totals observed during the cut's action
+    toks, tot = _cut(
         docs.filter(F.expr(f"length(trim({text_col})) > 0"))
         .select(
             F.col(id_col).alias("doc_id"),
@@ -101,23 +104,20 @@ def dsir_log_weights(
             ).alias("w"),
         )
         .withColumn("b", F.expr(_spark_bucket("w", n_buckets)))
-        .drop("w")
+        .drop("w"),
+        tr=F.sum((~F.col("is_t")).cast("long")),
+        tt=F.sum(F.col("is_t").cast("long")),
     )
-    toks.count()  # eager: bucket census + doc scoring are concurrent
-
-    counts = toks.groupBy("b").agg(
-        F.sum((~F.col("is_t")).cast("long")).alias("cr"),
-        F.sum(F.col("is_t").cast("long")).alias("ct"),
-    )
-    tot = counts.agg(
-        F.sum("cr").alias("tr"), F.sum("ct").alias("tt")
-    ).collect()[0]
-    if tot.tr is None:  # zero non-empty docs: empty frame, stable schema
+    if tot["tr"] is None:  # zero non-empty docs: empty frame, stable schema
         return local_frame(
             toks.sparkSession,
             "doc_id long, n_tokens long, logw_micro long, selected boolean",
         )
-    tr, tt = int(tot.tr), int(tot.tt)
+    tr, tt = int(tot["tr"]), int(tot["tt"])
+    counts = toks.groupBy("b").agg(
+        F.sum((~F.col("is_t")).cast("long")).alias("cr"),
+        F.sum(F.col("is_t").cast("long")).alias("ct"),
+    )
 
     terms = counts.select(
         "b",

@@ -289,15 +289,13 @@ def d4_prune_within_blocks(
             f" {drop_num}/{drop_den}"
         )
     # the input feeds TWO consumers of one job (centroid aggregation +
-    # the scoring join's probe side): persist + eager count, or expensive
-    # lineage runs twice (the CLAUDE.md concurrent-stage recompute rule;
-    # same class as the r4p3 embedding_clusters GEMM-ran-2x fix).
-    # Narrowed to the three consumed columns first; tracked so pipeline
-    # callers can release via operators.lsh.release_census_caches.
-    from deduplication_framework_spark.operators.lsh import _persist_tracked
+    # the scoring join's probe side): cut it, or expensive lineage runs
+    # twice (the CLAUDE.md concurrent-stage recompute rule; same class as
+    # the r4p3 embedding_clusters GEMM-ran-2x fix). Narrowed to the three
+    # consumed columns first; operators.lsh.release_census_caches frees it.
+    from deduplication_framework_spark.operators.lsh import _cut
 
-    blocked = _persist_tracked(blocked.select(id_col, block_col, vec_col))
-    blocked.count()
+    blocked, _ = _cut(blocked.select(id_col, block_col, vec_col))
     cent = (
         blocked.select(block_col, F.posexplode(vec_col).alias("pos", "x"))
         .groupBy(block_col, "pos")

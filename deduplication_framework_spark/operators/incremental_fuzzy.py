@@ -53,7 +53,7 @@ from ..functions import kernels as K
 from ..functions.text import minhash_features
 from ..session import local_frame
 from .bloom import BloomFilter, bloom_build, bloom_tag
-from .lsh import _persist_tracked, minhash_bands
+from .lsh import _cut, minhash_bands
 from .verify import _jaccard_at_least
 
 __all__ = [
@@ -95,9 +95,9 @@ def incremental_near_new_rows(
     collision footprint, never the corpus; ``bloom`` (from a previous
     batch's ``stats["bloom"]``) skips rebuilding the band-key filter.
     Returns ``(result_df, stats)``; stats includes the built ``bloom``
-    for reuse plus routing counters. Runs eager census jobs and persists
-    via the shared tracked-cache registry (released by
-    ``lsh.release_census_caches()``).
+    for reuse plus routing counters. Holds each intermediate once with
+    ``lsh._cut``, whose one action also observes its counters (the cuts
+    are freed by ``lsh.release_census_caches()``).
     """
     cfg = cfg or PipelineConfig()
     b, r = K.optimal_band_param(cfg.dedup.threshold, cfg.dedup.num_perm)
@@ -119,15 +119,19 @@ def incremental_near_new_rows(
     if computed_feats or old_bands is None:
         # features we computed here (Arrow UDF over the corpus) are
         # consumed by the stats count AND the verify join — and, when the
-        # bands must be built too, by the band explosion: persist and
-        # materialize before the fan-out. Provided features with provided
-        # bands skip this: two column-pruned scans of a STORED frame beat
-        # caching a corpus-scale frame
-        old_feats = _persist_tracked(old_feats)
-    n_old = old_feats.count()
+        # bands must be built too, by the band explosion: cut them before
+        # the fan-out. Provided features with provided bands skip this:
+        # two column-pruned scans of a STORED frame beat holding a
+        # corpus-scale frame
+        old_feats, n = _cut(old_feats, n=F.count("*"))
+        n_old = n["n"]
+    else:
+        n_old = old_feats.count()
     if old_bands is None:
-        old_bands = _persist_tracked(
-            minhash_bands(old_feats.select("_id", "sig"), b, r, id_col="_id")
+        # a narrow explode of the cut features: recomputed by the filter
+        # build and the hit-key semi-join rather than held at b rows/doc
+        old_bands = minhash_bands(
+            old_feats.select("_id", "sig"), b, r, id_col="_id"
         )
     else:
         # stored index path: the band table is precomputed (parquet/
@@ -143,19 +147,20 @@ def incremental_near_new_rows(
             fpp=fpp,
         )
 
-    new_feats = _persist_tracked(featurize(new_df))
-    n_batch = new_feats.count()
-    tagged = _persist_tracked(
+    new_feats, n = _cut(featurize(new_df), n=F.count("*"))
+    n_batch = n["n"]
+    tagged, n = _cut(
         bloom_tag(
             minhash_bands(new_feats.select("_id", "sig"), b, r, id_col="_id"),
             bloom,
             F.col("band_key"),
             "_maybe",
-        )
+        ),
+        rows=F.count("*"),
+        hits=F.count_if("_maybe"),
     )
-    n_band_rows = tagged.count()
+    n_band_rows, n_hit_rows = n["rows"], n["hits"]
     hits = tagged.filter("_maybe").select("_id", "band_key")
-    n_hit_rows = hits.count()
 
     stats = {
         "n_new_batch": n_batch,
@@ -193,37 +198,37 @@ def incremental_near_new_rows(
         hit_keys = F.broadcast(hit_keys)
     else:
         stats["verify_path"] = "shuffle"
-    old_hit = _persist_tracked(
-        old_bands.join(hit_keys, "band_key", "left_semi")
-    )
-    sizes = old_hit.groupBy("band_key").agg(F.count("*").alias("n"))
-    census = sizes.agg(
-        F.max("n").alias("mx"),
-        F.sum(F.when(F.col("n") > old_bucket_cap, 1).otherwise(0)).alias(
-            "nc"
+    # each hit key's history rows with their count and lowest-id-first
+    # rank, cut once: the census rides the cut's action
+    w = Window.partitionBy("band_key").orderBy("_id")
+    whole = w.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
+    old_hit, census = _cut(
+        old_bands.join(hit_keys, "band_key", "left_semi").select(
+            "_id",
+            "band_key",
+            F.count("*").over(whole).alias("_n"),
+            F.row_number().over(w).alias("_rn"),
         ),
-    ).first()
+        mx=F.max("_n"),
+        nc=F.count_if((F.col("_rn") == 1) & (F.col("_n") > old_bucket_cap)),
+    )
     stats["max_old_bucket"] = int(census["mx"] or 0)
-    stats["n_capped_band_keys"] = int(census["nc"] or 0)
+    stats["n_capped_band_keys"] = int(census["nc"])
     if stats["n_capped_band_keys"] > 0:
         # hot-bucket cap with observable accounting (streaming state_cap
         # discipline): keep the cap lowest old ids per key, deterministic
-        w = Window.partitionBy("band_key").orderBy("_id")
-        old_hit = (
-            old_hit.withColumn("_rn", F.row_number().over(w))
-            .filter(F.col("_rn") <= old_bucket_cap)
-            .drop("_rn")
-        )
+        old_hit = old_hit.filter(F.col("_rn") <= old_bucket_cap)
 
-    pairs = _persist_tracked(
+    pairs, n = _cut(
         hits.join(
             old_hit.select(F.col("_id").alias("_old_id"), "band_key"),
             "band_key",
         )
         .select("_id", "_old_id")
-        .distinct()
+        .distinct(),
+        n=F.count("*"),
     )
-    stats["n_candidate_pairs"] = pairs.count()
+    stats["n_candidate_pairs"] = n["n"]
 
     # each side joins its OWN features: batch and history ids may overlap
     # (or differ in type) without naming the same document
@@ -235,12 +240,13 @@ def incremental_near_new_rows(
         ),
         "_old_id",
     )
-    dup_ids = _persist_tracked(
+    dup_ids, n = _cut(
         _jaccard_at_least(pv, "_sh_n", "_sh_o", cfg.dedup.threshold)
         .select(F.col("_id").alias(id_col))
-        .distinct()
+        .distinct(),
+        n=F.count("*"),
     )
-    stats["n_dup_docs"] = dup_ids.count()
+    stats["n_dup_docs"] = n["n"]
     result = new_df.join(dup_ids, id_col, "left_anti")
     return result, stats
 

@@ -30,11 +30,12 @@ Scale posture (100 TB):
   LSH banding); scoring is equi-joins on token / bigram keys — AQE
   handles hot-key skew, and the model frames can be broadcast when an
   external (small) LM is supplied;
-* the input projection is persisted + eagerly counted (the count jobs
-  are concurrent consumers — CLAUDE.md pitfall);
+* the input projection is held once as a lineage cut (``lsh._cut``:
+  the count jobs are concurrent consumers — CLAUDE.md pitfall), and so
+  is the unigram table, whose totals are observed while it is cut;
 * bucketing defaults to ``approx=True``: two approximate-percentile
-  cutoffs from one aggregation, broadcast into a map-side CASE — no
-  global sort, same head/middle/tail semantics up to quantile-sketch
+  cutoffs observed while the scored frame is cut, then a map-side CASE
+  — no global sort, same head/middle/tail semantics up to quantile-sketch
   error at the cut lines (CCNet itself buckets by precomputed cutoffs).
   ``approx=False`` is the exact-ntile spec path — a GLOBAL
   single-partition sort — reserved for the driver-gate oracle query.
@@ -82,7 +83,7 @@ def lm_score_docs(
     micro-unit perturbation of the affected docs, not a failure).
     ``"raw"`` is the spec mode the DuckDB oracle mirrors; cross-mode
     parity is pinned in tests/test_lm.py."""
-    from deduplication_framework_spark.operators.lsh import _persist_tracked
+    from deduplication_framework_spark.operators.lsh import _cut
 
     if key_mode not in ("hash64", "raw"):
         raise ValueError(f"key_mode must be hash64|raw, got {key_mode!r}")
@@ -91,7 +92,8 @@ def lm_score_docs(
         if key_mode == "hash64"
         else "t0 AS t"
     )
-    base = _persist_tracked(
+    # uni/bi counts + scoring scans are concurrent consumers: cut once
+    base, _ = _cut(
         docs.filter(F.expr(f"length(trim({text_col})) > 0"))
         .select(
             F.col(id_col).alias("doc_id"),
@@ -101,20 +103,19 @@ def lm_score_docs(
         )
         .selectExpr("doc_id", keyed)
     )
-    base.count()  # eager: uni/bi counts + scoring scans are concurrent
 
-    uni = base.select(F.explode("t").alias("w")).groupBy("w").agg(
-        F.count("*").alias("c")
+    uni, tot = _cut(
+        base.select(F.explode("t").alias("w")).groupBy("w").agg(
+            F.count("*").alias("c")
+        ),
+        tt=F.sum("c"),
+        vv=F.count("*"),
     )
-    uni = _persist_tracked(uni)
-    tot = uni.agg(
-        F.sum("c").alias("tt"), F.count("*").alias("vv")
-    ).collect()[0]
-    if tot.tt is None:  # zero non-empty docs: empty frame, stable schema
+    if tot["tt"] is None:  # zero non-empty docs: empty frame, stable schema
         return local_frame(
             base.sparkSession, "doc_id long, logp_micro long, n_tokens long"
         )
-    tt, vv = int(tot.tt), int(tot.vv)
+    tt, vv = int(tot["tt"]), int(tot["vv"])
 
     kt = "BIGINT" if key_mode == "hash64" else "STRING"
     pairs = base.select(
@@ -177,12 +178,13 @@ def bucket_lm_scores(
     (``head``/``middle``/``tail`` for 3; bucket index string otherwise),
     best-scoring docs first. ``approx=True`` (the DEFAULT and the 100-TB
     path — CCNet's own bucketing is cutoff-based, not rank-based):
-    cutoffs from one ``percentile_approx`` aggregation, broadcast into a
-    map-side CASE — no global sort. ``approx=False`` is the exact-ntile
-    spec used ONLY where a DuckDB oracle needs deterministic rank
-    semantics (the driver gate query): it is a partition-less global
-    window — every row flows through ONE task — and must never appear
-    in a production plan (pinned by tests/test_plans.py)."""
+    cutoffs from one ``percentile_approx`` observed while the scored
+    frame is cut, then a map-side CASE — no global sort.
+    ``approx=False`` is the exact-ntile spec used ONLY where a DuckDB
+    oracle needs deterministic rank semantics (the driver gate query): it
+    is a partition-less global window — every row flows through ONE
+    task — and must never appear in a production plan (pinned by
+    tests/test_plans.py)."""
     avg = F.col("logp_micro") * 1.0 / F.col("n_tokens")
     scored = scored.withColumn("avg_logp", avg)
     names = (
@@ -191,20 +193,15 @@ def bucket_lm_scores(
         else {i: str(i) for i in range(1, n_buckets + 1)}
     )
     if approx:
-        from deduplication_framework_spark.operators.lsh import (
-            _persist_tracked,
-        )
+        from deduplication_framework_spark.operators.lsh import _cut
 
-        # the cutoff collect is a full pass over the scoring DAG; persist
-        # the (small, one-row-per-doc) scored frame so the caller's
-        # downstream action reads the cache instead of re-scoring the
-        # corpus (freed by release_census_caches)
-        scored = _persist_tracked(scored)
-        scored.count()
+        # cut the (small, one-row-per-doc) scored frame, observing the
+        # cutoffs: the caller's action then reads it instead of re-scoring
         probs = [i / n_buckets for i in range(1, n_buckets)]
-        cuts = scored.agg(
-            F.percentile_approx("avg_logp", probs, 10_000).alias("q")
-        ).collect()[0].q
+        scored, q = _cut(
+            scored, q=F.percentile_approx("avg_logp", probs, 10_000)
+        )
+        cuts = q["q"]
         if cuts is None:  # empty input: keep the output schema stable
             return scored.withColumn(
                 "bucket", F.lit(names[n_buckets]).cast("string")

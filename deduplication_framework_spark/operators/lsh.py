@@ -47,20 +47,18 @@ from deduplication_framework_spark.operators.connected_components import (
 from deduplication_framework_spark.operators.verify import verify_jaccard
 from deduplication_framework_spark.session import local_frame
 
-# Band/census frames persisted by the operators below scale with the corpus
-# (all multi-member band rows), unlike the small per-call frames the
-# session-lifetime LRU is trusted with elsewhere. Each persist is tracked
-# here so a consumer that has materialized its outputs (run_pipeline after
-# CC, bench between reps) can release them instead of letting repeated runs
-# in one session stack corpus-scale cache entries until LRU pressure evicts
-# something live mid-job. Unpersisting early is never incorrect — at worst
-# a later action recomputes from source. Broadcasts are tracked the same
-# way (``_track``): ``Broadcast.unpersist()`` drops the executor copies and
-# a later use re-sends the value, unlike ``destroy()``. The census cuts
-# (``_census``) are checkpoints, whose blocks ``DataFrame.unpersist`` does
-# not drop, so each registers ``connected_components._free`` instead. A
-# freed cut has no lineage to recompute from: release only after every
-# consumer of the census has materialized.
+# Every operator holds an intermediate once through ``_cut``: a lineage
+# cut (``_stats_bounded_local_ckpt``) whose counts are observed during its
+# one action. Cut frames scale with the corpus (band rows, shingle sets,
+# candidate pairs), unlike the small per-call frames the session-lifetime
+# LRU is trusted with elsewhere, so each cut registers its release here
+# and a consumer that has materialized its outputs (run_pipeline after CC,
+# a CLI layer after its own cut, bench between reps) frees them instead of
+# letting repeated runs in one session stack corpus-scale blocks. A freed
+# cut has no lineage to recompute from: release only after every consumer
+# of the frames built since the last release has materialized. Broadcasts
+# are tracked too (``_track``): ``Broadcast.unpersist()`` drops the
+# executor copies and a later use re-sends the value, unlike ``destroy()``.
 _LIVE_CENSUS_CACHES: list = []
 
 
@@ -75,12 +73,26 @@ def _persist_tracked(df: DataFrame) -> DataFrame:
     return _track(df.persist())
 
 
+def _cut(df: DataFrame, **aggs) -> Tuple[DataFrame, dict]:
+    """Hold ``df`` once: ``(cut, {name: value})``, where ``cut`` is
+    ``df``'s rows as a ``_stats_bounded_local_ckpt`` (one Spark action,
+    size statistics from the observed bytes) and each ``aggs`` aggregate
+    over ``df`` is observed during that same action, so the counts cost
+    no job of their own. A sum or max over zero rows comes back None.
+    ``release_census_caches()`` frees the cut's blocks."""
+    obs = Observation()
+    if aggs:
+        df = df.observe(obs, *[agg.alias(name) for name, agg in aggs.items()])
+    cut = _stats_bounded_local_ckpt(df)
+    _LIVE_CENSUS_CACHES.append(lambda: _free(cut))
+    return cut, _observed_row(obs, df.sparkSession).asDict() if aggs else {}
+
+
 def release_census_caches() -> int:
-    """Free every band/census frame, census cut and broadcast tracked since
-    the last release; returns how many were freed. Concurrent-safe in the
-    weak sense for persisted frames and broadcasts: a release while
-    another thread's plan still needs one only forces a recompute (or a
-    re-send), never a wrong answer."""
+    """Free every cut and broadcast tracked since the last release;
+    returns how many were freed. Call it only once every frame built
+    from them has materialized: a broadcast is re-sent on a later use,
+    but a freed cut cannot be read again."""
     n = 0
     while _LIVE_CENSUS_CACHES:
         release = _LIVE_CENSUS_CACHES.pop()
@@ -163,11 +175,10 @@ def _n_over(cap: int):
 
 
 def _census(rows: DataFrame, keys, cap: int, drop=(), **over):
-    """The bucket census as one lineage cut: ``rows`` + ``bucket_size``
+    """The bucket census as one ``_cut``: ``rows`` + ``bucket_size``
     over the bucket ``keys``, multi-member buckets only (a singleton can
-    never pair), materialized by ``_stats_bounded_local_ckpt`` in ONE
-    action. ``over`` adds further aggregates over the same window (one
-    shuffle for all); ``drop`` names columns the cut need not keep.
+    never pair). ``over`` adds further aggregates over the same window
+    (one shuffle for all); ``drop`` names columns the cut need not keep.
 
     Returns ``(cut, stats)``. ``stats`` holds ``n_buckets``, ``n_over``
     (band rows in buckets over ``cap``) and ``max_bucket_size``, observed
@@ -177,7 +188,8 @@ def _census(rows: DataFrame, keys, cap: int, drop=(), **over):
     ``n_buckets`` counts each bucket's first row in ``doc_id`` order, so
     it stays exact where one doc holds several rows of a bucket
     (suffix-array L-grams). Every pair consumer reads the cut, never the
-    window, and ``release_census_caches()`` frees its blocks."""
+    window. The counts are observed below the projection that drops the
+    window's ``_first`` flag and ``drop``, so the cut stores neither."""
     w = Window.partitionBy(*keys).orderBy("doc_id")
     whole = w.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
     obs = Observation()
@@ -196,8 +208,7 @@ def _census(rows: DataFrame, keys, cap: int, drop=(), **over):
             F.max("bucket_size").alias("max_bucket_size"),
         )
     )
-    cut = _stats_bounded_local_ckpt(sized.drop("_first", *drop))
-    _LIVE_CENSUS_CACHES.append(lambda: _free(cut))
+    cut, _ = _cut(sized.drop("_first", *drop))
     observed = _observed_row(obs, rows.sparkSession).asDict()
     # a sum or max over zero rows is NULL
     return cut, {k: v or 0 for k, v in observed.items()}

@@ -57,7 +57,7 @@ from deduplication_framework_spark.functions import kernels as K
 from deduplication_framework_spark.functions.jvm_minhash import (
     jvm_minhash_signatures,
 )
-from deduplication_framework_spark.operators.lsh import _persist_tracked
+from deduplication_framework_spark.operators.lsh import _cut
 from deduplication_framework_spark.operators.verify import (
     _EPS,
     verify_containment,
@@ -121,23 +121,19 @@ def ensemble_band_table(classes, partitions, threshold, num_perm,
     return table
 
 
-def _counted(df):
-    """→ ``(df persisted, its row count)``: the eager count fills the
-    tracked cache before the frame's consumers fan out."""
-    df = _persist_tracked(df)
-    return df, df.count()
-
-
-def _set_base(df, id_col, set_col):
-    """→ ``(base, n)``: the :func:`_counted` ``(_id, _set)`` frame of
-    ``df``'s non-empty distinct element sets."""
-    return _counted(
+def _set_base(df, id_col, set_col, **aggs):
+    """→ ``(base, observed)``: the ``_cut`` ``(_id, _set)`` frame of
+    ``df``'s non-empty distinct element sets; ``observed`` holds its row
+    count ``n`` and ``aggs`` over it, observed during the same action."""
+    return _cut(
         df.select(
             F.col(id_col).alias("_id"),
             F.array_distinct(F.col(set_col).cast("array<string>")).alias(
                 "_set"
             ),
-        ).filter(F.size("_set") > 0)
+        ).filter(F.size("_set") > 0),
+        n=F.count("*"),
+        **aggs,
     )
 
 
@@ -287,11 +283,11 @@ def lshensemble_containment(
     n_index_band_rows, partitions, and the (class, partition) → (b, r)
     table for observability.
 
-    ``collect_stats=False`` skips the band/candidate census jobs (their
-    counts come back None) and their persists — the censuses exist for
-    observability, and each is an extra Spark job that dominates at small
-    inputs (the bands/cands frames each have exactly ONE downstream
-    consumer, so skipping the persist is safe, not a recompute).
+    ``collect_stats=False`` skips the band/candidate cuts (their counts
+    come back None) — the counts exist for observability, and each cut is
+    an extra Spark job that dominates at small inputs (the bands/cands
+    frames each have exactly ONE downstream consumer, so skipping the cut
+    is safe, not a recompute).
 
     ``partitions``/``classes`` override the data-derived equi-depth size
     ranges with explicit ``[(lo, hi), ...]`` lists — required when the
@@ -319,9 +315,11 @@ def lshensemble_containment(
             "band_table": {}, "empty_reason": reason,
         }
 
-    probe_base, n_probe_docs = _set_base(docs, id_col, set_col)
+    probe_base, observed = _set_base(docs, id_col, set_col)
+    n_probe_docs = observed["n"]
     if bipartite:
-        index_base, n_index_docs = _set_base(index_docs, id_col, set_col)
+        index_base, observed = _set_base(index_docs, id_col, set_col)
+        n_index_docs = observed["n"]
     else:
         index_base, n_index_docs = probe_base, n_probe_docs
     if n_probe_docs == 0 or n_index_docs == 0:
@@ -346,9 +344,9 @@ def lshensemble_containment(
         return _empty_result("no_feasible_cells")
 
     # ---- signatures (JVM-only: one explode + min aggregation) ----
-    probe_sigs, _ = _counted(_ensemble_sigs(probe_base, num_perm))
+    probe_sigs, _ = _cut(_ensemble_sigs(probe_base, num_perm))
     index_sigs = (
-        _counted(_ensemble_sigs(index_base, num_perm))[0]
+        _cut(_ensemble_sigs(index_base, num_perm))[0]
         if bipartite else probe_sigs
     )
 
@@ -357,11 +355,13 @@ def lshensemble_containment(
     )
     index_bands = _index_band_frame(index_sigs, partitions, table)
     if collect_stats:
-        # persisted BEFORE the stats counts: the counts double as the
-        # eager cache fill, so the candidate join reads the cache instead
-        # of re-running the explode (the candidate_pairs census pattern)
-        probe_bands, n_probe_rows = _counted(probe_bands)
-        index_bands, n_index_rows = _counted(index_bands)
+        # cut, the counts observed on the cut's action, so the candidate
+        # join reads the cut instead of re-running the explode (the
+        # candidate_pairs census pattern)
+        probe_bands, n = _cut(probe_bands, n=F.count("*"))
+        n_probe_rows = n["n"]
+        index_bands, n = _cut(index_bands, n=F.count("*"))
+        n_index_rows = n["n"]
     else:
         n_probe_rows = n_index_rows = None
 
@@ -371,7 +371,8 @@ def lshensemble_containment(
     )
     cands = joined.select("src", "dst").distinct()
     if collect_stats:
-        cands, n_candidates = _counted(cands)
+        cands, n = _cut(cands, n=F.count("*"))
+        n_candidates = n["n"]
     else:
         n_candidates = None
 
@@ -532,7 +533,8 @@ def build_ensemble_index(
     table = ensemble_band_table(
         classes, partitions, t, num_perm, false_negative_weight
     )
-    base, n_docs = _set_base(index_docs, id_col, set_col)
+    base, observed = _set_base(index_docs, id_col, set_col)
+    n_docs = observed["n"]
     sigs = _ensemble_sigs(base, num_perm)
     bands = (
         _index_band_frame(sigs, partitions, table)
@@ -628,7 +630,13 @@ def query_ensemble_index(
         classes, partitions, t, meta["num_perm"],
         meta["false_negative_weight"],
     )
-    probe_base, n_probe = _set_base(probe_docs, id_col, set_col)
+    in_class = F.lit(False)
+    for lc, hc in classes:
+        in_class = in_class | _in_range(F.size("_set"), lc, hc)
+    probe_base, observed = _set_base(
+        probe_docs, id_col, set_col, in_class=F.count_if(in_class)
+    )
+    n_probe = observed["n"]
     if n_probe == 0 or not table or index["bands"] is None:
         edges = _empty_edges(
             probe_docs.sparkSession,
@@ -639,15 +647,12 @@ def query_ensemble_index(
             "n_candidates": 0, "n_probe_band_rows": 0,
             "n_probe_docs": n_probe, "n_probe_out_of_class": 0,
         }
-    probe_sigs, _ = _counted(_ensemble_sigs(probe_base, meta["num_perm"]))
+    probe_sigs, _ = _cut(_ensemble_sigs(probe_base, meta["num_perm"]))
     probe_bands = _probe_band_frame(probe_sigs, classes, partitions, table, t)
     if collect_stats:
-        probe_bands, n_probe_rows = _counted(probe_bands)
-        cond = None
-        for lc, hc in classes:
-            rng = _in_range(F.size("_set"), lc, hc)
-            cond = rng if cond is None else (cond | rng)
-        n_out = n_probe - probe_base.filter(cond).count()
+        probe_bands, n = _cut(probe_bands, n=F.count("*"))
+        n_probe_rows = n["n"]
+        n_out = n_probe - observed["in_class"]
     else:
         n_probe_rows = n_out = None
 
@@ -656,7 +661,8 @@ def query_ensemble_index(
     ).filter(F.col("_sb") >= t * F.col("_sa") - _EPS)
     cands = joined.select("src", "dst").distinct()
     if collect_stats:
-        cands, n_candidates = _counted(cands)
+        cands, n = _cut(cands, n=F.count("*"))
+        n_candidates = n["n"]
     else:
         n_candidates = None
     feats = _lex(probe_base).unionByName(

@@ -70,7 +70,10 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from deduplication_framework_spark.operators.connected_components import _data_bytes
+from deduplication_framework_spark.operators.lsh import _cut, _track
 from deduplication_framework_spark.operators.verify import verify_jaccard
+from deduplication_framework_spark.session import local_frame
 
 __all__ = ["ssjoin_jaccard", "ssjoin_containment"]
 
@@ -91,28 +94,48 @@ from deduplication_framework_spark.operators.verify import _EPS  # noqa: E402
 # no string comparisons. Output is the identical exact predicate set
 # (same float64 division, same >= threshold compare as verify.py); the
 # lemma-based prefix path remains the sparse-universe production shape.
+# The driver collects the sets only under all three caps below, each read
+# from counts observed while the set base is cut.
 DENSE_MAX_ELS = 2048  # bitmap width cap (bits); <=32 uint64 lanes
 DENSE_MAX_DOCS = 20_000  # all-pairs compute cap: n^2 * lanes popcounts
+DENSE_MAX_BYTES = 64 << 20  # element bytes the driver may collect
 _DENSE_SAMPLE_DOCS = 256  # cheap pre-check sample (sparse corpora bail here)
 
 
+def _set_base(docs: DataFrame, id_col: str, set_col: str):
+    """→ ``(base, stats)``: the ``_cut`` ``(_id, _set)`` of ``docs``'
+    non-empty distinct sets, observing ``n_docs``, the largest set
+    (``max_els``) and the total element bytes (``el_bytes``)."""
+    sets = docs.select(
+        F.col(id_col).alias("_id"), F.array_distinct(set_col).alias("_set")
+    ).filter(F.size("_set") > 0)
+    base, stats = _cut(
+        sets,
+        n_docs=F.count("*"),
+        max_els=F.max(F.size("_set")),
+        el_bytes=F.sum(_data_bytes(sets["_set"], sets.schema["_set"].dataType)),
+    )
+    return base, {k: v or 0 for k, v in stats.items()}
+
+
 def _dense_allpairs_edges(
-    base: DataFrame, threshold: float, mode: str
+    base: DataFrame, stats: dict, threshold: float, mode: str
 ) -> Optional[DataFrame]:
     """Exact all-pairs edges over a TINY element universe via bitmap
     popcount blocks, or None when the universe/corpus exceeds the dense
-    budgets (the prefix-filter path then applies). ``base`` must be the
-    persisted (_id, _set) projection with empty sets dropped; ``_id``
-    must be integral. ``mode``: 'jaccard' (src < dst, sim) or
-    'containment' (ordered src != dst, containment).
+    budgets (the prefix-filter path then applies). ``base`` and ``stats``
+    are :func:`_set_base`'s; ``_id`` must be integral. ``mode``:
+    'jaccard' (src < dst, sim) or 'containment' (ordered src != dst,
+    containment).
 
     Detection cost on the sparse path is one _DENSE_SAMPLE_DOCS-doc
     sample census (~tens of ms): any 256 docs of a sparse corpus exceed
     DENSE_MAX_ELS distinct elements, so real featurizations never reach
-    the full-universe check. Driver memory is bounded by the budgets,
-    both checked in the doc-count job before any collect: <=
-    DENSE_MAX_DOCS rows of <= DENSE_MAX_ELS-element sets collected, and
-    the broadcast matrix is <= 20k * 256B = 5MB.
+    the full-universe check. What the driver collects is bounded by the
+    base's observed counts, all checked before any collect: at most
+    DENSE_MAX_DOCS sets of at most DENSE_MAX_ELS elements, together at
+    most DENSE_MAX_BYTES element bytes (held as pandas objects, a small
+    multiple of that); the broadcast matrix is <= 20k * 256B = 5MB.
 
     Exactness: the bitmap code is a DENSE rank over the exact distinct
     elements (no hashing — no collision caveat); intersection sizes are
@@ -126,12 +149,13 @@ def _dense_allpairs_edges(
         base.schema["_id"].dataType, (T.LongType, T.IntegerType, T.ShortType)
     ):
         return None
-    # cached — base is persisted+counted by callers; the largest set rides
-    # the same job so an over-wide doc bails before anything is collected
-    n_docs, max_els = base.agg(
-        F.count("*"), F.max(F.size("_set"))
-    ).first()
-    if n_docs == 0 or n_docs > DENSE_MAX_DOCS or max_els > DENSE_MAX_ELS:
+    n_docs = stats["n_docs"]
+    if (
+        n_docs == 0
+        or n_docs > DENSE_MAX_DOCS
+        or stats["max_els"] > DENSE_MAX_ELS
+        or stats["el_bytes"] > DENSE_MAX_BYTES
+    ):
         return None
     sample_distinct = (
         base.limit(_DENSE_SAMPLE_DOCS)
@@ -160,8 +184,6 @@ def _dense_allpairs_edges(
         (row_idx, codes >> 6),
         np.uint64(1) << (codes & 63).astype(np.uint64),
     )
-    from deduplication_framework_spark.operators.lsh import _track
-
     # tracked: release_census_caches() unpersists it (executor copies
     # only; a later recompute of the edges re-sends it from the driver)
     bc = _track(spark.sparkContext.broadcast((ids, lens, mat, int(len(uniq)))))
@@ -220,10 +242,54 @@ def _dense_allpairs_edges(
                     }
                 )
 
-    probe = base.select(F.col("_id").cast("long").alias("_id")).repartition(
+    # the probe ids come from the driver's copy, so the edges read the
+    # broadcast and never the base cut
+    probe = local_frame(spark, "_id long", [(int(i),) for i in ids]).repartition(
         spark.sparkContext.defaultParallelism
     )
     return probe.mapInPandas(block, schema)
+
+
+def _dense_path(base, stats, t, mode, dense):
+    """Both joins' dense dispatch: ``(edges, stats)`` from
+    :func:`_dense_allpairs_edges` when ``dense`` allows it and the budgets
+    hold, else None; ``dense=True`` over the budgets raises. In that
+    tiny-universe regime prefix candidates approach all pairs (measured
+    6.7M of 25M ordered pairs at sf0.1), so the bitmap all-pairs IS the
+    candidate set."""
+    if dense not in ("auto", True):
+        return None
+    edges = _dense_allpairs_edges(base, stats, t, mode)
+    if edges is not None:
+        n = stats["n_docs"]
+        pairs = n * (n - 1) // (2 if mode == "jaccard" else 1)
+        return edges, {"n_candidates": pairs, "path": "dense"}
+    if dense is True:
+        raise ValueError(
+            "dense=True but the corpus exceeds the dense budgets (els<="
+            f"{DENSE_MAX_ELS}, docs<={DENSE_MAX_DOCS}, bytes<={DENSE_MAX_BYTES})"
+        )
+    return None
+
+
+def _ranked(base: DataFrame) -> DataFrame:
+    """``(_id, _ranked, _sz)``: each set as ``(document frequency,
+    element)`` structs in the canonical rarest-first order, one per-doc
+    aggregation. The dfreq side is one row per element — SHUFFLE_HASH
+    builds the per-partition hash table instead of sorting both 10^6-row
+    sides (guide §3.1)."""
+    exploded = base.select("_id", F.explode("_set").alias("_el"))
+    dfreq = exploded.groupBy("_el").agg(F.count("*").alias("_df"))
+    return (
+        exploded.join(dfreq.hint("shuffle_hash"), "_el")
+        .groupBy("_id")
+        .agg(
+            F.array_sort(
+                F.collect_list(F.struct(F.col("_df"), F.col("_el")))
+            ).alias("_ranked")
+        )
+        .withColumn("_sz", F.size("_ranked"))
+    )
 
 
 def ssjoin_jaccard(
@@ -241,61 +307,25 @@ def ssjoin_jaccard(
     ``docs`` — one row per doc with an array column ``set_col`` (treated
     as a set: deduplicated here; empty/NULL sets emit no edges).
     Returns ``(edges, stats)``: edges ``(src, dst, sim)`` lazy, and
-    stats ``{"n_candidates": int}``. The deduplicated input projection
-    and the candidate pairs are persisted (tracked caches — freed by
-    ``lsh.release_census_caches()``); ``base`` is eagerly counted right
-    after the persist (the dfreq map stage and the prefix-join exchange
-    are independent shuffle-map stages of the census job and would race
-    to fill the cache, recomputing the input lineage — the CLAUDE.md
-    concurrent-stage pitfall), then the candidate census fills the
-    ``cands`` cache before the verify fan-out, so the prefix join runs
-    once and the blow-up metric is observable.
+    stats ``{"n_candidates": int}``. The deduplicated input projection,
+    the prefixes and the candidate pairs are each held once as an
+    ``lsh._cut`` (freed by ``lsh.release_census_caches()``), whose one
+    action also observes their counts: the dfreq map stage and the
+    prefix-join exchange read the base cut instead of racing to
+    recompute the input lineage (the CLAUDE.md concurrent-stage
+    pitfall), and the verify fan-out reads the ``cands`` cut, so the
+    prefix join runs once and the blow-up metric is observable.
     """
-    from deduplication_framework_spark.operators.lsh import _persist_tracked
-
     if not 0.0 < threshold <= 1.0:
         raise ValueError(f"threshold must be in (0, 1], got {threshold}")
     t = float(threshold)
 
-    base = _persist_tracked(
-        docs.select(
-            F.col(id_col).alias("_id"),
-            F.array_distinct(F.col(set_col)).alias("_set"),
-        ).filter(F.size("_set") > 0)
-    )
-    n_docs = base.count()  # eager: fill the cache before concurrent consumers
+    base, base_stats = _set_base(docs, id_col, set_col)
 
-    if dense in ("auto", True):
-        dense_edges = _dense_allpairs_edges(base, t, "jaccard")
-        if dense_edges is not None:
-            # tiny-universe regime: prefix candidates approach all-pairs,
-            # so the exact bitmap all-pairs IS the candidate set
-            return dense_edges, {
-                "n_candidates": n_docs * (n_docs - 1) // 2,
-                "path": "dense",
-            }
-        if dense is True:
-            raise ValueError(
-                "dense=True but the corpus exceeds the dense budgets "
-                f"(els<={DENSE_MAX_ELS}, docs<={DENSE_MAX_DOCS})"
-            )
-
-    exploded = base.select("_id", F.explode("_set").alias("_el"))
-    dfreq = exploded.groupBy("_el").agg(F.count("*").alias("_df"))
-
-    # rarest-first canonical ranking, one per-doc aggregation; the dfreq
-    # side is one row per element — SHUFFLE_HASH builds the per-partition
-    # hash table instead of sorting both 10^6-row sides (guide §3.1)
-    ranked = (
-        exploded.join(dfreq.hint("shuffle_hash"), "_el")
-        .groupBy("_id")
-        .agg(
-            F.array_sort(
-                F.collect_list(F.struct(F.col("_df"), F.col("_el")))
-            ).alias("_ranked")
-        )
-        .withColumn("_sz", F.size("_ranked"))
-    )
+    dense_out = _dense_path(base, base_stats, t, "jaccard", dense)
+    if dense_out is not None:
+        return dense_out
+    ranked = _ranked(base)
 
     # prefix length p = sz - ceil(t*sz) + 1 (conservative ceil)
     p = F.col("_sz") - F.ceil(t * F.col("_sz") - _EPS).cast("int") + 1
@@ -304,17 +334,16 @@ def ssjoin_jaccard(
     # most prefix slots — dropping them before the self-join is exact and
     # shrinks the join input severalfold (r6; they still occupy prefix
     # positions for the positional filter, hence filter AFTER posexplode).
-    # The prefix is persisted so the self-join reads one cached compute of
-    # the ranked subtree instead of evaluating it twice (no ReusedExchange
-    # fires across the differently-aliased sides — r6 plan audit).
-    prefix = _persist_tracked(
+    # The prefix is cut so the self-join reads one compute of the ranked
+    # subtree instead of evaluating it twice (no ReusedExchange fires
+    # across the differently-aliased sides — r6 plan audit).
+    prefix, _ = _cut(
         ranked.select(
             "_id",
             "_sz",
             F.posexplode(F.slice("_ranked", 1, p)).alias("_pos", "_w"),
         ).filter(F.col("_w._df") >= 2)
     )
-    prefix.count()  # eager: one compute, two cached self-join reads
 
     a = prefix.select(
         F.col("_id").alias("src"),
@@ -348,8 +377,8 @@ def ssjoin_jaccard(
             F.col("_sa") - F.col("_m._pa"), F.col("_sb") - F.col("_m._pb")
         )
         cands = cands.filter(ub >= alpha)
-    cands = _persist_tracked(cands.select("src", "dst"))
-    n_candidates = cands.count()  # eager: fills the cands cache
+    cands, n = _cut(cands.select("src", "dst"), n=F.count("*"))
+    n_candidates = n["n"]
 
     feats = base.select("_id", F.array_sort("_set").alias("_lex"))
     edges = verify_jaccard(
@@ -390,9 +419,8 @@ def ssjoin_containment(
     sorted-merge count.
 
     Returns ``(edges, stats)``: edges ``(src, dst, containment)`` lazy,
-    stats ``{"n_candidates": int}``. Same persist/eager-census contract
+    stats ``{"n_candidates": int}``. Same cut/observed-count contract
     as :func:`ssjoin_jaccard`."""
-    from deduplication_framework_spark.operators.lsh import _persist_tracked
     from deduplication_framework_spark.operators.verify import (
         verify_containment,
     )
@@ -401,44 +429,12 @@ def ssjoin_containment(
         raise ValueError(f"threshold must be in (0, 1], got {threshold}")
     t = float(threshold)
 
-    base = _persist_tracked(
-        docs.select(
-            F.col(id_col).alias("_id"),
-            F.array_distinct(F.col(set_col)).alias("_set"),
-        ).filter(F.size("_set") > 0)
-    )
-    n_docs = base.count()  # eager: fill the cache before concurrent consumers
+    base, base_stats = _set_base(docs, id_col, set_col)
 
-    if dense in ("auto", True):
-        dense_edges = _dense_allpairs_edges(base, t, "containment")
-        if dense_edges is not None:
-            # tiny-universe regime (e.g. the sf documents word-bigram
-            # vocabulary, ~10^3 elements): candidates approach all ordered
-            # pairs — measured 6.7M of 25M at sf0.1 — so candidate
-            # generation + per-pair string verify lose to exact bitmap
-            # popcount blocks
-            return dense_edges, {
-                "n_candidates": n_docs * (n_docs - 1),
-                "path": "dense",
-            }
-        if dense is True:
-            raise ValueError(
-                "dense=True but the corpus exceeds the dense budgets "
-                f"(els<={DENSE_MAX_ELS}, docs<={DENSE_MAX_DOCS})"
-            )
-
-    exploded = base.select("_id", F.explode("_set").alias("_el"))
-    dfreq = exploded.groupBy("_el").agg(F.count("*").alias("_df"))
-    ranked = (
-        exploded.join(dfreq.hint("shuffle_hash"), "_el")
-        .groupBy("_id")
-        .agg(
-            F.array_sort(
-                F.collect_list(F.struct(F.col("_df"), F.col("_el")))
-            ).alias("_ranked")
-        )
-        .withColumn("_sz", F.size("_ranked"))
-    )
+    dense_out = _dense_path(base, base_stats, t, "containment", dense)
+    if dense_out is not None:
+        return dense_out
+    ranked = _ranked(base)
 
     p = F.col("_sz") - F.ceil(t * F.col("_sz") - _EPS).cast("int") + 1
     # df=1 probe elements occur in no other doc — their index matches are
@@ -464,8 +460,8 @@ def ssjoin_containment(
         (F.col("src") != F.col("dst"))
         & (F.col("_sb") >= t * F.col("_sa") - _EPS)
     )
-    cands = _persist_tracked(joined.select("src", "dst").distinct())
-    n_candidates = cands.count()  # eager: fills the cands cache
+    cands, n = _cut(joined.select("src", "dst").distinct(), n=F.count("*"))
+    n_candidates = n["n"]
 
     feats = base.select("_id", F.array_sort("_set").alias("_lex"))
     edges = verify_containment(

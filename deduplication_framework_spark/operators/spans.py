@@ -191,16 +191,16 @@ def near_dedup_spans(
     5. reassembly via the shared ``reassemble_spans`` shuffle plan.
 
     Returns (per-doc frame like ``dedup_spans``, info dict with
-    ``cc_rounds`` and the LSH ``bucket_stats`` frame). Persists the rep
-    frame via the shared tracked-cache registry — call
-    ``lsh.release_census_caches()`` (or run inside the pipeline) to free.
+    ``cc_rounds`` and the LSH ``bucket_stats`` frame). Holds the rep frame
+    as an ``lsh._cut`` — call ``lsh.release_census_caches()`` (or run
+    inside the pipeline) to free it once the output has materialized.
     """
     from dataclasses import replace
 
     from ..config import PipelineConfig
     from ..functions.text import make_shingles_udf, minhash_features
     from .cluster import clusters_from_edges
-    from .lsh import _persist_tracked, minhash_edges
+    from .lsh import _cut, minhash_edges
 
     cfg = cfg or PipelineConfig()
     order_col = order_col or id_col
@@ -210,11 +210,13 @@ def near_dedup_spans(
         # explode_spans emits only (id, pos, span); re-attach the explicit
         # order column so keep-first ranks by it
         spans = spans.join(docs.select(id_col, order_col), id_col)
-    reps = _persist_tracked(
+    # one materialization before the fan-out
+    reps, n = _cut(
         dedup_spans_df(spans, id_col=id_col, order_col=order_col)
-        .withColumn("_rid", F.xxhash64("span"))
+        .withColumn("_rid", F.xxhash64("span")),
+        n=F.count("*"),
     )
-    n_reps = reps.count()  # eager: one materialization before the fan-out
+    n_reps = n["n"]
 
     # sha1 signatures whatever cfg.dedup.hash_family says
     sigs = minhash_features(

@@ -91,6 +91,11 @@ from pyspark.sql import types as T
 from pyspark.sql.pandas.functions import pandas_udf
 
 from deduplication_framework_spark.functions import kernels as K
+from deduplication_framework_spark.operators.connected_components import (
+    _free,
+    _stats_bounded_local_ckpt,
+)
+from deduplication_framework_spark.operators.lsh import _cut, candidate_pairs
 
 # rank-namespace stride: round r's dense ranks become rank*_NS + r, so
 # frozen (pruned-singleton) ranks can never collide with later rounds'.
@@ -101,13 +106,16 @@ def _dense_rank(keys: DataFrame, key_cols) -> DataFrame:
     """Globally dense-rank distinct keys: range-partitioned sort + a
     two-pass partition-offset assignment (the distributed zipWithIndex
     pattern), Arrow-native end to end — no single-partition window and no
-    per-row Python objects. Returns key_cols + rank."""
-    sorted_keys = (
+    per-row Python objects. Returns key_cols + rank as a lineage cut that
+    ``release_census_caches()`` does not free: the pipeline's docs read it
+    after the pipeline's own release (``prepare_docs``)."""
+    # the counts and the rank pass must see one sort: its range bounds
+    # come from a sample, so a recompute could partition differently
+    sorted_keys = _stats_bounded_local_ckpt(
         keys.select(*key_cols)
         .distinct()
         .orderBy(*key_cols)
         .withColumn("_pid", F.spark_partition_id())
-        .persist()
     )
     counts = {
         r._pid: r.n
@@ -136,13 +144,13 @@ def _dense_rank(keys: DataFrame, key_cols) -> DataFrame:
             local += len(pdf)
             yield out
 
-    # materialize the ranked keys, then release the sorted-keys cache —
-    # suffix rows are |corpus chars|, so leaking one persisted DF per
-    # doubling round would pin substantial storage memory for the session
-    ranked = sorted_keys.mapInPandas(
-        assign, schema=f"{out_fields}, rank long"
-    ).localCheckpoint(eager=True)
-    sorted_keys.unpersist()
+    # cut the ranked keys, then free the sorted keys — suffix rows are
+    # |corpus chars|, so holding one sorted cut per doubling round would
+    # pin substantial storage memory for the session
+    ranked = _stats_bounded_local_ckpt(
+        sorted_keys.mapInPandas(assign, schema=f"{out_fields}, rank long")
+    )
+    _free(sorted_keys)
     return ranked
 
 
@@ -152,7 +160,6 @@ def suffix_ranks(
     k0: int = 8,
     id_col: str = "doc_id",
     text_col: str = "text",
-    prune_singletons: bool = True,
 ) -> Tuple[DataFrame, int, int]:
     """→ (suffixes(doc_id, pos, len, rank), depth_k, rounds).
 
@@ -160,7 +167,8 @@ def suffix_ranks(
     combines (rank[pos], rank[pos+L-depth_k]) for exact-L equality. ``len``
     = doc length (carried for the >=L filter). Ranks are equality labels,
     NOT lexicographic order (pruned-singleton namespacing — see module
-    docstring).
+    docstring). The returned suffixes are an ``lsh._cut`` (freed by
+    ``lsh.release_census_caches()``); the per-round cuts are freed here.
     """
     L = min_match_chars
     k0 = min(k0, L)
@@ -176,8 +184,9 @@ def suffix_ranks(
         F.expr(f"substring(_t, pos, {k0})").alias("key0"),
     )
 
-    ranks0 = _dense_rank(suffixes, ["key0"])
-    active = suffixes.join(ranks0, "key0").select(
+    ranks = _dense_rank(suffixes, ["key0"])
+    rounds_cuts = [ranks]
+    active = suffixes.join(ranks, "key0").select(
         "doc_id", "len", "pos", (F.col("rank") * _NS).alias("rank")
     )
     resolved = None  # frozen singleton-class rows (final ranks)
@@ -186,15 +195,13 @@ def suffix_ranks(
     rounds = 0
     while 2 * k < L:
         rounds += 1
-        active = active.localCheckpoint(eager=True)
-        if prune_singletons:
-            w = Window.partitionBy("rank")
-            sized = active.withColumn("_csz", F.count("*").over(w))
-            newly = sized.filter(F.col("_csz") == 1).drop("_csz")
-            active = sized.filter(F.col("_csz") > 1).drop("_csz")
-            resolved = (
-                newly if resolved is None else resolved.unionByName(newly)
-            )
+        active = _stats_bounded_local_ckpt(active)
+        rounds_cuts.append(active)
+        w = Window.partitionBy("rank")
+        sized = active.withColumn("_csz", F.count("*").over(w))
+        newly = sized.filter(F.col("_csz") == 1).drop("_csz")
+        active = sized.filter(F.col("_csz") > 1).drop("_csz")
+        resolved = newly if resolved is None else resolved.unionByName(newly)
         # shifted-rank lookups must see EVERY position (a pruned pos+k must
         # answer with its frozen rank, not fall to the -1 short-suffix
         # sentinel — that sentinel collision would falsely equate classes)
@@ -218,6 +225,7 @@ def suffix_ranks(
             F.coalesce(F.col("rank2"), F.lit(-1)).alias("r2"),
         )
         ranks = _dense_rank(paired, ["r1", "r2"])
+        rounds_cuts.append(ranks)
         active = paired.join(ranks, ["r1", "r2"]).select(
             "doc_id",
             "len",
@@ -225,8 +233,10 @@ def suffix_ranks(
             (F.col("rank") * _NS + rounds).alias("rank"),
         )
         k *= 2
-    s = active if resolved is None else active.unionByName(resolved)
-    return s.localCheckpoint(eager=True), k, rounds
+    s, _ = _cut(active if resolved is None else active.unionByName(resolved))
+    for cut in rounds_cuts:
+        _free(cut)
+    return s, k, rounds
 
 
 def substring_buckets(
@@ -345,17 +355,14 @@ def substring_edges_suffix_array(
     id_col: str = "doc_id",
     text_col: str = "text",
     mode: str = "hash",
-    cache_bands: bool = False,
     collapse_exact: bool = True,
 ) -> Tuple[DataFrame, DataFrame]:
     """→ (edges(src, dst, sim=1.0), bucket_stats): doc pairs sharing an
     exact >= min_match_chars-char substring. ``mode="hash"`` (default) is
     the one-pass 128-bit L-gram path; ``mode="rank"`` is the hash-free
     prefix-doubling path (both validated against the same LCS oracle in
-    tests/test_suffix_array.py). ``cache_bands`` persists the band table —
-    the band pass is the expensive one and both returned DataFrames consume
-    it, so callers that act on both (e.g. the pipeline's stats + edges
-    jobs) should pass True.
+    tests/test_suffix_array.py). The band table is read once, by
+    ``candidate_pairs``' census cut, which both returned frames read.
 
     ``collapse_exact`` (default True — VERDICT r3 next-round #4, the 100x
     posture lever): byte-identical docs are collapsed to their min-id
@@ -371,28 +378,22 @@ def substring_edges_suffix_array(
     semantics too. Callers whose input is already exact-deduped (the
     pipeline with the exact detector enabled) should pass False to skip
     the one extra corpus shuffle."""
-    from deduplication_framework_spark.operators.lsh import candidate_pairs
-
     ident = None
     if collapse_exact:
         # md5 (128-bit) group key: a 64-bit text hash has a real birthday
         # collision expectation at 10^10+ distinct docs (a collision would
         # silently drop one doc's band rows and weld it to an unrelated
         # cluster) — 128 bits matches the module's gram-key risk budget
+        # two consumers (rep docs → band UDF; identity edges) land in ONE
+        # downstream job as concurrent shuffle-map stages, each of which
+        # would recompute the hash window: cut it once
         w = Window.partitionBy("_th").orderBy(id_col)
-        ranked = (
+        ranked, _ = _cut(
             docs.select(id_col, text_col)
             .withColumn("_th", F.md5(F.col(text_col)))
             .withColumn("_rep", F.first(id_col).over(w))
             .withColumn("_rn", F.row_number().over(w))
-            .persist()
         )
-        # two consumers (rep docs → band UDF; identity edges) land in ONE
-        # downstream job as concurrent shuffle-map stages that race to
-        # fill the cache, each recomputing the hash window (the CLAUDE.md
-        # persist-race rule) — one eager count() turns the race into one
-        # compute + cache reads
-        ranked.count()
         docs = ranked.filter(F.col("_rn") == 1).select(id_col, text_col)
         ident = (
             ranked.filter(
@@ -419,8 +420,6 @@ def substring_edges_suffix_array(
         )
     else:
         raise ValueError(f"unknown substring mode {mode!r}")
-    if cache_bands:
-        bands = bands.persist()
     pairs, stats = candidate_pairs(
         bands, bucket_cap=bucket_cap, group_col=group_col
     )

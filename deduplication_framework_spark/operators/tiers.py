@@ -27,12 +27,12 @@ frame when a final-survivor mapping is needed.
 
 Scale posture
 -------------
-* Each tier's assignment frame (one row per current survivor) is
-  persisted and EAGERLY counted before its two consumers (removed
-  branch, survivor filter) fan out — the concurrent-stage cache race
-  would otherwise recompute the tier (CLAUDE.md lesson); the persists
-  are registered with the shared tracked-cache registry
-  (``lsh.release_census_caches()`` frees them).
+* Each tier's assignment frame (one row per current survivor) is held
+  once as a lineage cut (``lsh._cut``) before its two consumers
+  (removed branch, survivor filter) fan out, its row and removed counts
+  observed during the cut's one action — otherwise the concurrent-stage
+  race would recompute the tier (CLAUDE.md lesson);
+  ``lsh.release_census_caches()`` frees the cuts.
 * The cascade ORDER is the cost model: every doc an early cheap tier
   removes never reaches the expensive ones, so at web scale the
   exact-hash tier in front of the near-dup tier is what keeps the
@@ -47,7 +47,7 @@ from typing import Callable, Sequence, Tuple
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from deduplication_framework_spark.operators.lsh import _persist_tracked
+from deduplication_framework_spark.operators.lsh import _cut
 
 __all__ = ["tiered_dedup", "keeper_assign"]
 
@@ -107,20 +107,22 @@ def tiered_dedup(
     removed_parts = []
     stats: dict = {}
     for name, fn in tiers:
-        assign = _persist_tracked(fn(surv).select(id_col, "keeper_id"))
-        n_assign = assign.count()
-        if n_assign != n_surv:
+        assign, n = _cut(
+            fn(surv).select(id_col, "keeper_id"),
+            rows=F.count("*"),
+            removed=F.count_if(F.col(id_col) != F.col("keeper_id")),
+        )
+        if n["rows"] != n_surv:
             raise ValueError(
-                f"tier {name!r} returned {n_assign} rows for "
+                f"tier {name!r} returned {n['rows']} rows for "
                 f"{n_surv} survivors"
             )
         removed = assign.filter(F.col(id_col) != F.col("keeper_id"))
         removed_parts.append(
             removed.select(id_col, F.lit(name).alias("tier"), "keeper_id")
         )
-        n_removed = removed.count()
-        stats[name] = n_removed
-        n_surv = n_assign - n_removed
+        stats[name] = n["removed"]
+        n_surv -= n["removed"]
         surv = surv.join(
             assign.filter(F.col(id_col) == F.col("keeper_id")).select(id_col),
             id_col,

@@ -338,9 +338,6 @@ def run_pipeline(
 
         # bucket_cap=1: rank buckets are true cliques (identical L-char
         # prefix), star+chain is exactly equivalent after CC
-        # no cache_bands: with bucket_cap=1 the band table has exactly one
-        # consumer (the census cut inside candidate_pairs, whose one action
-        # also observes the bucket stats)
         return substring_edges_suffix_array(
             uniq_docs,
             cfg.suffix.min_match_chars,

@@ -28,6 +28,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from deduplication_framework_spark.config import PipelineConfig
+from deduplication_framework_spark.operators import connected_components as cc
+from deduplication_framework_spark.operators.lsh import _cut
 from deduplication_framework_spark.plans.pipeline import run_pipeline
 from deduplication_framework_spark.session import local_frame
 
@@ -147,13 +149,15 @@ def threshold_sweep(
         if n_docs is None:
             n_docs = res.docs.count()
             if evaluate:
-                eval_docs = res.docs.filter(
-                    F.col("doc_id") % 5 == 0
-                ).persist()
-                eval_docs.count()
+                # read at every threshold, across the release each later
+                # run_pipeline makes: a cut freed here, not registered
+                eval_docs = cc._stats_bounded_local_ckpt(
+                    res.docs.filter(F.col("doc_id") % 5 == 0)
+                )
                 orig_dist = _label_dist(res.docs, label_col)
-        keep = res.keepers.persist()  # count + write + eval reuse one pass
-        n_keep = keep.count()
+        # count + write + eval reuse one pass
+        keep, n = _cut(res.keepers, n=F.count("*"))
+        n_keep = n["n"]
         if keepers_out:
             keep.write.mode("overwrite").parquet(
                 f"{keepers_out}/theta={theta}"
@@ -174,10 +178,10 @@ def threshold_sweep(
                 for k in set(keep_dist) | set(orig_dist)
             )
             row = row + (round(acc, 6), _vocab_size(keep), round(tv, 6))
-        keep.unpersist()
+        cc._free(keep)
         rows.append(row)
     if eval_docs is not None:
-        eval_docs.unpersist()
+        cc._free(eval_docs)
     schema = (
         "threshold double, n_docs long, n_keepers long, n_duplicates long, "
         "dedup_rate double"

@@ -31,6 +31,7 @@ from pyspark.sql import functions as F
 
 from deduplication_framework_spark.config import PipelineConfig
 from deduplication_framework_spark.functions.text import make_fused_features_udf
+from deduplication_framework_spark.operators import connected_components as cc
 from deduplication_framework_spark.session import local_frame
 
 
@@ -148,8 +149,11 @@ class IncrementalExactDedup:
             .drop("_rn")
         )
         seen = self._seen(exclude_batch=batch_id)
-        fresh = firsts.join(seen, "text_hash", "left_anti").persist()
-        fresh.count()
+        # one cut feeds both writes; freed here, not via the operators'
+        # release registry, which a long-lived stream never drains
+        fresh = cc._stats_bounded_local_ckpt(
+            firsts.join(seen, "text_hash", "left_anti")
+        )
         # record the keeper schema so keepers() can answer (empty) before
         # any batch dir exists; tmp+rename keeps the write atomic under
         # foreachBatch replay
@@ -168,7 +172,7 @@ class IncrementalExactDedup:
         fresh.select("text_hash").write.mode("overwrite").parquet(
             os.path.join(self.seen_path, f"batch={batch_id}")
         )
-        fresh.unpersist()
+        cc._free(fresh)
 
     def keepers(self) -> DataFrame:
         dirs = self._committed_batch_dirs(self.keepers_path)

@@ -257,3 +257,28 @@ def test_driver_frames_built_only_by_local_frame():
         os.path.join("deduplication_framework_spark", "session.py")
         + "::local_frame"
     }, sorted(callers)
+
+
+def test_local_checkpoint_only_in_the_cut():
+    """No package module calls ``localCheckpoint`` except
+    ``connected_components._stats_bounded_local_ckpt``: a raw checkpoint
+    copies its child plan's size estimate (a join's is the product of
+    its sides') and counts nothing, while the cut carries statistics
+    from the bytes it observed and ``lsh._cut`` registers its release."""
+    pkg = os.path.join(ROOT, "deduplication_framework_spark")
+    callers = set()
+    for dirpath, _, files in os.walk(pkg):
+        for f in sorted(files):
+            if f.endswith(".py"):
+                path = os.path.join(dirpath, f)
+                rel = os.path.relpath(path, ROOT)
+                callers |= {
+                    f"{rel}::{fn}"
+                    for fn, name in _calls(path)
+                    if name == "localCheckpoint"
+                }
+    assert callers == {
+        os.path.join("deduplication_framework_spark", "operators",
+                     "connected_components.py")
+        + "::_stats_bounded_local_ckpt"
+    }, sorted(callers)

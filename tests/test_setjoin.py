@@ -124,6 +124,38 @@ def test_dense_broadcast_released_with_census_caches(spark, monkeypatch):
     release_census_caches()
 
 
+def test_long_elements_take_the_prefix_path(spark, monkeypatch):
+    """A few docs of very long elements: a tiny universe, but more
+    element bytes than DENSE_MAX_BYTES, so "auto" takes the prefix path
+    without collecting (the bytes are observed while the set base is
+    cut), and its edges equal the dense path's on the same corpus."""
+    from deduplication_framework_spark.operators import setjoin as sj
+
+    rng = random.Random(11)
+    els = [f"{i:02d}" + "z" * 2000 for i in range(10)]
+    sets = {i: set(rng.sample(els, rng.randint(3, 7))) for i in range(24)}
+    df = spark.createDataFrame(
+        [(i, sorted(s)) for i, s in sets.items()], ["doc_id", "grams"]
+    )
+    e_dense, s_dense = ssjoin_jaccard(df, threshold=0.5, dense=True)
+    dense = {(r.src, r.dst): r.sim for r in e_dense.collect()}
+    release_census_caches()
+
+    n_bytes = sum(len(e) for s in sets.values() for e in s)
+    monkeypatch.setattr(sj, "DENSE_MAX_BYTES", n_bytes - 1)
+
+    def no_collect(self):
+        raise AssertionError("dense path collected over the byte budget")
+
+    monkeypatch.setattr(type(df), "toPandas", no_collect)
+    e_prefix, s_prefix = ssjoin_jaccard(df, threshold=0.5)
+    prefix = {(r.src, r.dst): r.sim for r in e_prefix.collect()}
+    release_census_caches()
+    assert s_dense["path"] == "dense" and "path" not in s_prefix
+    assert prefix == dense
+    assert set(prefix) == _py_oracle(sets, 0.5)
+
+
 def _random_corpus(seed, n_docs=60, universe=40):
     rng = random.Random(seed)
     els = [f"g{i}" for i in range(universe)]
